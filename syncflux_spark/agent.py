@@ -116,16 +116,14 @@ def action_copy(
     meas_filter: str = ".*",
     chunk="5m",
     num_workers: int = 4,
-    table_format: str = "dir",
 ) -> SyncReport:
     """`-action copy` (agent.go:210-240) over directory warehouses:
-    discover measurements by regex, chunk-sync the window.
-    ``table_format="tx"`` routes every chunk through the
-    transactional sink (operators/copy.py)."""
+    discover measurements by regex, chunk-sync the window into one
+    TxTable per measurement (operators/copy.py)."""
     ms = discover_measurements(spark, src_root, meas_filter)
     return sync_dbrp(
         spark, ms, dst_root, start, end, chunk=chunk, num_workers=num_workers,
-        src_label=src_root, table_format=table_format,
+        src_label=src_root,
     )
 
 

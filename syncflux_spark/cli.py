@@ -77,12 +77,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "disabled when unset, like the reference)")
     p.add_argument("-once", action="store_true",
                    help="hamonitor: one supervision cycle, then exit")
-    p.add_argument("-table-format", dest="table_format", default="dir",
-                   choices=["dir", "tx"],
-                   help="copy sink format: 'dir' = window-keyed "
-                        "directory overwrite (advisory-locked), 'tx' = "
-                        "transactional TxTable commits (OCC, snapshot "
-                        "isolation, checkpointed log)")
     p.add_argument("-retention-duration", dest="retention_duration",
                    default="0s",
                    help="maintain: drop data older than this from tx "
@@ -201,7 +195,6 @@ def _run_copy(spark, args) -> int:
     rep = action_copy(
         spark, args.src_root, args.dst_root, start, end,
         meas_filter=args.meas, chunk=args.chunk, num_workers=args.num_workers,
-        table_format=args.table_format,
     )
     print(json.dumps(rep.as_dict()))
     return 0 if not rep.bad_chunks else 1
@@ -210,11 +203,12 @@ def _run_copy(spark, args) -> int:
 def _run_maintain(spark, args) -> int:
     """Extended action (no reference equivalent — the reference
     delegates storage upkeep to InfluxDB): one maintenance sweep over
-    a copy destination. Per measurement table: retention (tx only,
-    when -retention-duration > 0: log-only expiry via
-    TxTable.expire_below), window compaction (compact_tx_tagged for
-    tx tables, compact_parquet for directory sinks), data vacuum and
-    commit-log vacuum. Prints a JSON report per table."""
+    a copy destination. Per TxTable (every copy destination):
+    retention (when -retention-duration > 0: log-only expiry via
+    TxTable.expire_below), per-window compaction (compact_tx_tagged),
+    data vacuum and commit-log vacuum. Plain parquet directories (the
+    /write sink's) compact whole via compact_parquet. Prints a JSON
+    report per table."""
     import os
     import re
 
@@ -255,24 +249,9 @@ def _run_maintain(spark, args) -> int:
                 compact_parquet,
             )
 
-            # a window-keyed copy destination compacts PER WINDOW —
-            # compacting the whole dir would flatten the win= layout
-            # that chunk-replay overwrite idempotency keys on
-            wins = sorted(
-                d for d in os.listdir(path)
-                if d.startswith("win=")
-                and os.path.isdir(os.path.join(path, d))
-            )
-            if wins:
-                files = sum(
-                    compact_parquet(spark, os.path.join(path, w))
-                    for w in wins
-                )
-            else:
-                files = compact_parquet(spark, path)
             report[name] = {
                 "format": "dir",
-                "files": files,
+                "files": compact_parquet(spark, path),
                 "stale_staging_removed": len(clean_stale_staging(path)),
             }
     print(json.dumps(report))

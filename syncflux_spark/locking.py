@@ -1,15 +1,16 @@
 """Advisory per-table write locks for the overwrite-based writers.
 
-The plain-parquet writers in this engine get idempotency from
-directory overwrite / staging-swap (operators/copy.py window
-overwrite, operators/compact.py and catalog retention staging
-rewrites, streaming/cdc.py base swap). That is correct for a SINGLE
+The remaining plain-parquet writers in this engine get idempotency
+from directory overwrite / staging-swap: operators/compact.py's
+compact_parquet, catalog retention's staging rewrite
+(catalog.py::enforce_retention) and the directory base of
+streaming/cdc.py's CdcMergeStream. That is correct for a SINGLE
 writer per table — but two concurrent writers on one target (say a
-streaming replicator and a nightly compactor) can interleave a
-rewrite and leave a mixed directory. A transactional table format
-(Delta/Iceberg MERGE) is the durable answer at fleet scale; until a
-deployment adopts one, this module makes the single-writer contract
-ENFORCED rather than assumed:
+merger and a nightly compactor) can interleave a rewrite and leave a
+mixed directory. The copy and replication sinks commit to
+txtable.TxTable instead (OCC, no lock). For the writers above, this
+module makes the single-writer contract ENFORCED rather than
+assumed:
 
 * :func:`table_lock` — advisory mutual exclusion scoped to a target
   directory, acquired by atomically creating ``<dir>/../.<name>.lock``

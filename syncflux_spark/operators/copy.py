@@ -26,11 +26,13 @@ Spark-first design notes
   (sync.go:144-146) so fresh data recovers first.
 * Idempotency (SURVEY §7.3 hard-part #1): the reference silently
   relies on InfluxDB upserting duplicate points on chunk re-runs.
-  A naive append sink double-writes. We write each chunk to a
-  deterministic subdirectory keyed by the chunk window
-  (``part=<start_ns>-<end_ns>``) with overwrite semantics, so a re-run
-  of a chunk replaces exactly that chunk's output — the parquet
-  equivalent of a Delta ``replaceWhere``/dynamic partition overwrite.
+  A naive append sink double-writes. Each measurement is one
+  txtable.TxTable and each chunk commits as a window-tagged group
+  (``replace_tagged("win", "<start_ms>_<end_ms>", ...)``), so a re-run
+  of a chunk atomically replaces exactly that chunk's output — the
+  transactional ``replaceWhere``. Concurrent windows commute under
+  OCC, readers are snapshot-isolated, and the per-window ``ts_ns``
+  min/max recorded in the commit log powers data-skipping scans.
 * Counts ride ``df.observe`` metrics ON the write pass — a separate
   ``count()`` action would scan every chunk twice, which at 100 TB
   doubles the read I/O of a full copy.
@@ -46,7 +48,8 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 
 from syncflux_spark.functions.time import chunk_windows, parse_duration
-from syncflux_spark.sources.parquet import scan_time_range
+from syncflux_spark.sources.parquet import _to_ns_epoch, scan_time_range
+from syncflux_spark.txtable import TxTable
 
 
 @dataclass
@@ -116,19 +119,19 @@ class SyncReport:
 
 def retry(fn, max_retries: int = 5, delay: float = 0.0, backstop: int = 10):
     """C6 (pkg/agent/try/try.go:15-30): retry until success, bounded by
-    min(max_retries, backstop). Executor-side failures are already
-    retried by Spark (spark.task.maxFailures); this wraps whole-job
-    (driver-visible) failures, e.g. a sink outage."""
-    attempts = min(max_retries, backstop)
-    last_err: Exception | None = None
+    min(max_retries, backstop) — at least one attempt is always made.
+    Executor-side failures are already retried by Spark
+    (spark.task.maxFailures); this wraps whole-job (driver-visible)
+    failures, e.g. a sink outage."""
+    attempts = max(1, min(max_retries, backstop))
     for attempt in range(attempts):
         try:
             return fn()
-        except Exception as e:  # noqa: BLE001 — app-level retry boundary
-            last_err = e
-            if attempt < attempts - 1 and delay > 0:
+        except Exception:  # noqa: BLE001 — app-level retry boundary
+            if attempt == attempts - 1:
+                raise
+            if delay > 0:
                 _time.sleep(delay)
-    raise last_err  # type: ignore[misc]
 
 
 def copy_range(
@@ -138,25 +141,17 @@ def copy_range(
     end,
     time_col: str = "ts",
     max_records_per_file: int = 1_000_000,
-    table_format: str = "dir",
 ) -> int:
     """The minimum end-to-end slice (SURVEY §7.4): one measurement,
     one half-open window, read → filter → write. Returns rows written.
 
-    Two sink formats, same chunk-replay idempotency contract:
-
-    * ``dir`` — the window lands in a window-keyed subdirectory and
-      *overwrites* it (SURVEY §7.3 #1). Correct for ONE writer per
-      window; the advisory lock makes a second concurrent writer wait
-      or fail loudly instead of interleaving (locking.py).
-    * ``tx`` — the window commits to a txtable.TxTable via
-      ``replace_tagged("win", ...)``: snapshot-isolated readers, OCC
-      instead of locks (concurrent windows commute; a replayed window
-      atomically swaps its previous groups), per-window ``ts_ns``
-      min/max stats in the commit log for data-skipping scans, and an
-      O(1)-per-commit checkpointed log — the format a 5-minute-chunk
-      replicator needs (~100k commits/year never re-lists history).
-    """
+    The window commits to the txtable.TxTable at ``dst_path`` via
+    ``replace_tagged("win", ...)``: a replayed window atomically swaps
+    its previous groups (SURVEY §7.3 #1), concurrent windows commute
+    under OCC, and the window's ``ts_ns`` min/max land in the
+    checkpointed commit log — O(1) per commit, the format a
+    5-minute-chunk replicator needs (~100k commits/year never re-lists
+    history)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -165,40 +160,21 @@ def copy_range(
     # sync.go:151-196) — no second scan of the chunk
     obs = Observation()
     window = window.observe(obs, F.count(F.lit(1)).alias("n"))
-    if table_format == "tx":
-        from syncflux_spark.txtable import TxTable
-
-        t = TxTable.ensure(df.sparkSession, dst_path)
-        stats_cols = [c for c in ("ts_ns",) if c in window.columns]
-        t.replace_tagged(
-            "win",
-            _win_key(start, end),
-            window,
-            stats_cols=stats_cols,
-            write_options={"maxRecordsPerFile": max_records_per_file},
-        )
-        return int(obs.get["n"])
-    if table_format != "dir":
-        raise ValueError(f"table_format must be 'dir' or 'tx', got {table_format!r}")
-    from syncflux_spark.locking import table_lock
-
-    part = f"win={_win_key(start, end)}"
-    with table_lock(f"{dst_path}/{part}"):
-        (
-            window.write.mode("overwrite")
-            .option("maxRecordsPerFile", max_records_per_file)
-            .parquet(f"{dst_path}/{part}")
-        )
+    TxTable.ensure(df.sparkSession, dst_path).replace_tagged(
+        "win",
+        _win_key(start, end),
+        window,
+        stats_cols=[c for c in ("ts_ns",) if c in window.columns],
+        write_options={"maxRecordsPerFile": max_records_per_file},
+    )
     return int(obs.get["n"])
 
 
 def _win_key(start, end) -> str:
-    def k(x):
-        if isinstance(x, datetime):
-            return str(int(x.timestamp() * 1000))
-        return str(x).replace(" ", "T").replace(":", "-")
-
-    return f"{k(start)}_{k(end)}"
+    """``<start_ms>_<end_ms>``, epoch ms through the SAME conversion
+    the scan uses (naive datetimes and strings are UTC), so one
+    window keys identically whichever form it was passed in."""
+    return f"{_to_ns_epoch(start) // 10**6}_{_to_ns_epoch(end) // 10**6}"
 
 
 def sync(
@@ -215,18 +191,16 @@ def sync(
     rw_retry_delay: float = 0.0,
     fail_injector=None,
     src_label: str = "src",
-    table_format: str = "dir",
 ) -> SyncReport:
     """C1 ``Sync`` (pkg/agent/sync.go:95-213).
 
     measurements: name → source DataFrame (already typed; in catalog
     terms, every measurement of one (db, rp)).
     dst_root: destination directory; measurement ``m`` chunk output
-    lands at ``{dst_root}/{m}/win=<start>_<end>/`` (``dir`` format)
-    or as a window-tagged commit to the TxTable at
-    ``{dst_root}/{m}`` (``tx`` format — see copy_range; concurrent
-    measurements write disjoint tables, concurrent windows of one
-    measurement commute under OCC).
+    lands as a window-tagged commit to the TxTable at
+    ``{dst_root}/{m}`` (see copy_range; concurrent measurements write
+    disjoint tables, concurrent windows of one measurement commute
+    under OCC).
 
     Chunks iterate newest→oldest; within a chunk, measurements fan out
     on a thread pool (concurrent Spark jobs — Spark's FAIR scheduling
@@ -247,14 +221,7 @@ def sync(
             name, df = item
             if fail_injector is not None:
                 fail_injector(name, s, e)
-            n = copy_range(
-                df,
-                f"{dst_root}/{name}",
-                s,
-                e,
-                time_col=time_col,
-                table_format=table_format,
-            )
+            n = copy_range(df, f"{dst_root}/{name}", s, e, time_col=time_col)
             return name, n
 
         with ThreadPoolExecutor(max_workers=num_workers) as pool:
@@ -291,9 +258,10 @@ def sync_dbrp(
 ) -> SyncReport:
     """C2 ``SyncDBRP`` (pkg/agent/sync.go:215-232): run C1; re-run each
     bad chunk at ``chunk/recovery_divisor`` granularity (one level).
-    Because chunk outputs are window-keyed overwrites, the finer-grain
-    re-run of a bad window is idempotent over whatever the failed
-    attempt managed to write."""
+    Only the measurements that failed in the chunk are re-run: the
+    ones that succeeded already hold their chunk-window commit, and
+    fine windows are keyed differently, so re-copying them would land
+    every point twice."""
     chunk_td = parse_duration(chunk)
     report = sync(spark, measurements, dst_root, start, end, chunk=chunk_td, **kwargs)
     bad = report.bad_chunks
@@ -303,30 +271,21 @@ def sync_dbrp(
     # recovery pass: drop the fail_injector unless caller re-supplies it
     kwargs.pop("fail_injector", None)
     for c in bad:
-        sub = sync(spark, measurements, dst_root, c.start, c.end, chunk=fine, **kwargs)
-        # replace the bad chunk's accounting with the recovery outcome
-        # (do NOT also append sub.chunks — that would double-count points)
+        missing = {k: v for k, v in measurements.items() if k not in c.measurements}
+        sub = sync(spark, missing, dst_root, c.start, c.end, chunk=fine, **kwargs)
+        # the recovery outcome replaces the chunk's error accounting and
+        # adds its points (do NOT also append sub.chunks — that would
+        # double-count points)
         c.read_errors = sub.read_errors
         c.write_errors = sub.write_errors
-        c.points = sub.points
-        c.measurements = {
-            k: sum(s.measurements.get(k, 0) for s in sub.chunks)
-            for k in set().union(*(s.measurements.keys() for s in sub.chunks))
-        }
+        for s in sub.chunks:
+            for k, n in s.measurements.items():
+                c.measurements[k] = c.measurements.get(k, 0) + n
+        c.points = sum(c.measurements.values())
     return report
 
 
 def read_copied(spark: SparkSession, dst_root: str, measurement: str) -> DataFrame:
-    """Read back everything copied for one measurement (all windows),
-    auto-detecting the sink format: a ``_txlog`` directory means a
-    TxTable (snapshot-isolated read of the latest commit); otherwise
-    window directories are plain subdirs and a recursive read merges
-    them — schema is identical across windows either way."""
-    import os
-
-    path = f"{dst_root}/{measurement}"
-    if os.path.isdir(os.path.join(path, "_txlog")):
-        from syncflux_spark.txtable import TxTable
-
-        return TxTable(spark, path).snapshot()
-    return spark.read.option("recursiveFileLookup", "true").parquet(path)
+    """Read back everything copied for one measurement (all windows):
+    a snapshot-isolated read of its TxTable's latest commit."""
+    return TxTable(spark, f"{dst_root}/{measurement}").snapshot()

@@ -348,7 +348,9 @@ def ts_copy_roundtrip(spark, sf):
     """End-to-end copy operator (C1/K1, SURVEY §7.4 minimum slice):
     actually copies the window to a scratch sink, reads it back, and
     aggregates — proving the copied bytes, not the source, match the
-    oracle."""
+    oracle. The window lands as a window-tagged TxTable commit
+    (snapshot isolation + OCC, per-window ts_ns stats in the
+    checkpointed commit log, txtable.py)."""
     from syncflux_spark.operators.copy import copy_range, read_copied
 
     ev = load_table(spark, sf, "events")
@@ -372,21 +374,18 @@ def ts_copy_roundtrip(spark, sf):
     """,
 )
 def ts_copy_roundtrip_tx(spark, sf):
-    """ts_copy_roundtrip through the TRANSACTIONAL sink
-    (copy_range(table_format="tx")): the window lands as a
-    window-tagged TxTable commit — snapshot isolation + OCC instead
-    of the advisory-locked directory overwrite, with per-window
-    ts_ns stats in the checkpointed commit log (txtable.py). The
-    chunk is REPLAYED once before reading back, so the oracle match
-    also proves replace_tagged idempotency end-to-end: a duplicated
-    window would double n_rows."""
+    """ts_copy_roundtrip with the window REPLAYED once before reading
+    back: the second copy_range commit replaces the window-tagged
+    groups of the first, so the oracle match proves replace_tagged
+    idempotency end-to-end — a duplicated window would double
+    n_rows."""
     from syncflux_spark.operators.copy import copy_range, read_copied
 
     ev = load_table(spark, sf, "events")
     dst = tempfile.mkdtemp(prefix="sf_copytx_")
-    copy_range(ev, f"{dst}/events", EV_WIN[0], EV_WIN[1], table_format="tx")
+    copy_range(ev, f"{dst}/events", EV_WIN[0], EV_WIN[1])
     # deliberate replay — replaced, not duplicated
-    copy_range(ev, f"{dst}/events", EV_WIN[0], EV_WIN[1], table_format="tx")
+    copy_range(ev, f"{dst}/events", EV_WIN[0], EV_WIN[1])
     back = read_copied(spark, dst, "events")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -6845,7 +6844,10 @@ def stream_replicate_counts(spark, sf):
     stream of the events files → checkpointed foreachBatch idempotent
     sink → aggregate the REPLICA. Matching the oracle (which reads the
     source) proves the replicated bytes are complete and exact — the
-    hamonitor data path (SURVEY §3.2) under the correctness gate."""
+    hamonitor data path (SURVEY §3.2) under the correctness gate. Each
+    micro-batch commits to a TxTable tagged with its batch id, so
+    checkpoint replay after a crash replaces the batch's groups and
+    readers get snapshot isolation (streaming/replicate.py)."""
     from syncflux_spark.streaming.replicate import ReplicationStream
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -7083,7 +7085,7 @@ def ts_retention_tx(spark, sf):
         ("2024-01-10 18:00:00", "2024-01-12 00:00:00"),
         ("2024-01-12 00:00:00", EV_WIN[1]),
     ]:
-        copy_range(ev, f"{dst}/events", lo, hi, table_format="tx")
+        copy_range(ev, f"{dst}/events", lo, hi)
     cutoff_ns = 1_704_931_200 * 10**9  # 2024-01-11T00:00:00Z
     TxTable(spark, f"{dst}/events").expire_below("ts_ns", cutoff_ns)
     back = read_copied(spark, dst, "events")
@@ -7102,24 +7104,22 @@ def ts_retention_tx(spark, sf):
     """,
 )
 def stream_replicate_counts_tx(spark, sf):
-    """stream_replicate_counts through the TRANSACTIONAL sink: each
-    micro-batch commits to a TxTable tagged with its batch id
-    (streaming/replicate.py table_format="tx") — checkpoint replay
-    after a crash REPLACES the batch's groups instead of relying on
-    directory overwrite, readers get snapshot isolation, and the
-    table's delta-encoded commit log stays O(interval) to resolve at
-    any age (txtable.py). Matching the source-side oracle proves the
-    committed replica is complete and exact."""
+    """stream_replicate_counts across a RESTART: a second
+    ReplicationStream resumes from the first one's checkpoint and
+    catches up again before the replica is read. The restarted stream
+    must find nothing new, and the batch-id-tagged TxTable commits
+    keep the replica exact either way — matching the source-side
+    oracle proves a restart neither drops nor duplicates rows."""
     from syncflux_spark.streaming.replicate import ReplicationStream
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     root = tempfile.mkdtemp(prefix="sf_streamtx_")
-    rs = ReplicationStream(
-        spark, sf, f"{root}/dst", f"{root}/ckpt",
-        path_glob_filter="events.parquet",
-        table_format="tx",
-    )
-    rs.run_available()
+    for _ in range(2):
+        rs = ReplicationStream(
+            spark, sf, f"{root}/dst", f"{root}/ckpt",
+            path_glob_filter="events.parquet",
+        )
+        rs.run_available()
     rep = rs.read_replica()
     return rep.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -15204,7 +15204,7 @@ _PRIORITY_PREFIXES = (
     "containment_pairs_exact", "cq_", "lp_",
     # round-5 transactional-sink flagships: newest surface, zero
     # driver rows yet — front of the sample until confirmed
-    "pipeline_", "ts_retention_tx", "ts_copy_roundtrip_tx",
+    "pipeline_", "ts_retention_tx",
     # r9: 53 unconfirmed+focus names compete for ~50 sample slots —
     # promote the verdict-named r8 query so it cannot be one of the
     # ~3 that spill to next round

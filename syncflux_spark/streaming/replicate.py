@@ -17,23 +17,23 @@ the boundary-second fudge factor.
 
 Scale notes: a file-source stream partitions new files across the
 cluster per micro-batch; ``maxFilesPerTrigger`` bounds batch size the
-way ``data-chuck-duration`` bounds the reference's chunks. foreachBatch
-writes land in per-batch directories keyed by batch id, so a replayed
-batch overwrites its own output instead of duplicating it (the same
-idempotency design as operators/copy.py, and the parquet equivalent of
-Delta's txn log).
+way ``data-chuck-duration`` bounds the reference's chunks. Each
+foreachBatch write commits to the destination txtable.TxTable as a
+group tagged with its batch id, so a replayed batch replaces its own
+output instead of duplicating it (the same sink as operators/copy.py:
+one idempotent, transactional sink behind a replayable source).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from syncflux_spark.txtable import TxTable
 
 
 class ReplicationStream:
     """One measurement's continuous replication: source directory of
-    parquet files → destination directory, exactly-once.
+    parquet files → destination TxTable, exactly-once.
 
     The reference's equivalent loop: InfluxMonitor health ticker +
     HACluster supervisor + ReplicateData over detected gaps
@@ -48,14 +48,14 @@ class ReplicationStream:
         checkpoint_path: str,
         max_files_per_trigger: int | None = None,
         path_glob_filter: str | None = None,
-        table_format: str = "dir",
+        table_format: str = "tx",
         state_partitions: int | None = None,
         state_backend: str | None = None,
     ):
-        if table_format not in ("dir", "tx"):
-            raise ValueError(
-                f"table_format must be 'dir' or 'tx', got {table_format!r}"
-            )
+        # the sink is always a TxTable; the keyword is accepted only so
+        # callers that still spell out table_format="tx" keep working
+        if table_format != "tx":
+            raise ValueError(f"table_format must be 'tx', got {table_format!r}")
         self.spark = spark
         self.src_path = src_path
         self.dst_path = dst_path
@@ -64,12 +64,6 @@ class ReplicationStream:
         #: file streams require a DIRECTORY source; a glob filter
         #: scopes the stream to one measurement's files within it
         self.path_glob_filter = path_glob_filter
-        #: ``dir``: per-batch directories (below). ``tx``: batches are
-        #: batch-id-tagged TxTable commits — snapshot-isolated readers
-        #: and an O(1)-per-commit checkpointed log, the shape a
-        #: long-lived 5-min-cadence replicator needs (~100k
-        #: commits/year; see txtable.py module docstring).
-        self.table_format = table_format
         #: state-store shard count for stateful subclasses (the dedup
         #: stream's dropDuplicatesWithinWatermark keeps per-key state;
         #: plain replication has none, where this only sizes per-batch
@@ -82,24 +76,16 @@ class ReplicationStream:
         self.batches_written = 0
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Idempotent sink: batch ``n`` always lands in ``batch=n/``
-        (dir format) or replaces the ``batch=n``-tagged groups of the
-        destination TxTable (tx format), so checkpoint replay after a
+        """Idempotent sink: batch ``n`` replaces the ``batch=n``-tagged
+        groups of the destination TxTable, so checkpoint replay after a
         crash between 'sink write' and 'offset commit' cannot
-        double-write."""
-        if self.table_format == "tx":
-            from syncflux_spark.txtable import TxTable
-
-            TxTable.ensure(self.spark, self.dst_path).replace_tagged(
-                "batch", str(batch_id), batch_df,
-                stats_cols=[c for c in ("ts_ns",) if c in batch_df.columns],
-            )
-        else:
-            (
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(self.dst_path, f"batch={batch_id}")
-                )
-            )
+        double-write. Commits are O(1) delta documents in a
+        checkpointed log — the shape a long-lived 5-min-cadence
+        replicator needs (~100k commits/year; see txtable.py)."""
+        TxTable.ensure(self.spark, self.dst_path).replace_tagged(
+            "batch", str(batch_id), batch_df,
+            stats_cols=[c for c in ("ts_ns",) if c in batch_df.columns],
+        )
         self.batches_written += 1
 
     def _reader(self):
@@ -157,12 +143,6 @@ class ReplicationStream:
         )
 
     def read_replica(self) -> DataFrame:
-        """Everything replicated so far (snapshot-isolated in tx
-        format — a half-committed concurrent batch is invisible)."""
-        if self.table_format == "tx":
-            from syncflux_spark.txtable import TxTable
-
-            return TxTable(self.spark, self.dst_path).snapshot()
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self.dst_path
-        )
+        """Everything replicated so far (snapshot-isolated — a
+        half-committed concurrent batch is invisible)."""
+        return TxTable(self.spark, self.dst_path).snapshot()

@@ -270,29 +270,38 @@ class TxTable:
             ).jsonValue()
         return cur.jsonValue() if snapshot_doc else None
 
-    def _write_group(self, df: DataFrame, write_options: dict | None = None) -> str:
+    def _write_group(
+        self,
+        df: DataFrame,
+        stats_cols: list[str] | None = None,
+        write_options: dict | None = None,
+    ) -> tuple[str, dict | None]:
+        """Write one immutable data group; returns ``(rel, stats)``.
+        ``stats`` is the group's min/max per ``stats_cols``
+        (numeric/string — the engine's canonical time is a ``ts_ns``
+        long, so time ranges are covered), or None without stats
+        columns. The min/max ride ``df.observe`` on the write pass
+        itself — no second Spark job re-reads the group — and are
+        saved forever in the commit log."""
         rel = os.path.join(_DATA_DIR, f"{uuid.uuid4().hex}.parquet")
+        obs = None
+        if stats_cols:
+            from pyspark.sql import Observation
+            from pyspark.sql import functions as F
+
+            obs = Observation()
+            aggs = []
+            for c in stats_cols:
+                aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
+            df = df.observe(obs, *aggs)
         w = df.write.mode("overwrite")
         for k, v in (write_options or {}).items():
             w = w.option(k, v)
         w.parquet(os.path.join(self.root, rel))
-        return rel
-
-    def _group_stats(self, df: DataFrame, stats_cols) -> dict | None:
-        """Per-group min/max for ``stats_cols`` (numeric/string — the
-        engine's canonical time is a ``ts_ns`` long, so time ranges
-        are covered). One tiny agg over the group being written —
-        bounded by group size, paid once at write time, saved forever
-        in the commit log."""
-        if not stats_cols:
-            return None
-        from pyspark.sql import functions as F
-
-        aggs = []
-        for c in stats_cols:
-            aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
-        row = df.agg(*aggs).collect()[0]
-        return {c: [row[f"lo_{c}"], row[f"hi_{c}"]] for c in stats_cols}
+        if obs is None:
+            return rel, None
+        row = obs.get
+        return rel, {c: [row[f"lo_{c}"], row[f"hi_{c}"]] for c in stats_cols}
 
     def _try_commit_doc(self, version: int, doc: dict) -> bool:
         """Atomically claim ``version`` with a COMPLETE document:
@@ -351,8 +360,7 @@ class TxTable:
         t = cls(spark, root, checkpoint_interval=checkpoint_interval)
         if t.version() >= 0:
             raise ValueError(f"table already exists at {root}")
-        rel = t._write_group(df)
-        st = t._group_stats(df, stats_cols)
+        rel, st = t._write_group(df, stats_cols)
         doc: dict = {
             "files": [rel],
             "schema": t._nullable(df.schema).jsonValue(),
@@ -510,8 +518,7 @@ class TxTable:
         Returns the committed version. The commit itself is an O(1)
         delta document (a snapshot only at checkpoint versions)."""
         self._check_schema_compatible(df, allow_new_columns)
-        rel = self._write_group(df)
-        st = self._group_stats(df, stats_cols)
+        rel, st = self._write_group(df, stats_cols)
         return self._commit_next(
             [rel], [], {rel: st} if st else None, None, df.schema
         )
@@ -537,8 +544,7 @@ class TxTable:
         commute; concurrent writers of the SAME value serialize to
         last-writer-wins. Returns the committed version."""
         self._check_schema_compatible(df, allow_new_columns)
-        rel = self._write_group(df, write_options)
-        st = self._group_stats(df, stats_cols)
+        rel, st = self._write_group(df, stats_cols, write_options)
         tags = {tag_key: str(tag_value), **(extra_tags or {})}
         while True:
             v = self.version()
@@ -575,8 +581,7 @@ class TxTable:
         groups is rebased over. This is what a compactor needs: its
         output is a pure rewrite of its input, so the input vanishing
         means the output is stale by definition."""
-        rel = self._write_group(df, write_options)
-        st = self._group_stats(df, stats_cols)
+        rel, st = self._write_group(df, stats_cols, write_options)
         tags_add = {rel: tags} if tags else None
         try:
             while True:
@@ -654,8 +659,7 @@ class TxTable:
         for _ in range(max_retries):
             v = self.version()
             out = compute(self.snapshot(v))
-            rel = self._write_group(out)
-            st = self._group_stats(out, stats_cols)
+            rel, st = self._write_group(out, stats_cols)
             doc: dict = {
                 "files": [rel],
                 "schema": self._nullable(out.schema).jsonValue(),
@@ -706,8 +710,7 @@ class TxTable:
         (key uniqueness, row-count deltas, null budgets) are
         checkable, not just per-batch ones. Returns the committed
         version; raises ``ValueError`` on veto."""
-        rel = self._write_group(df)
-        st = self._group_stats(df, stats_cols)
+        rel, st = self._write_group(df, stats_cols)
         try:
             while True:
                 v = self.version()

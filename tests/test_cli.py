@@ -40,9 +40,9 @@ def test_action_copy_roundtrip(spark, sf_dir, tmp_path, capsys):
 
 
 def test_action_copy_tx_and_maintain(spark, sf_dir, tmp_path, capsys):
-    """The tx sink end-to-end from the CLI surface: copy with
-    -table-format tx, then the maintain sweep (compaction + retention
-    + vacuum + log vacuum) over the destination."""
+    """The copy sink end-to-end from the CLI surface: copy into
+    TxTables, then the maintain sweep (compaction + retention +
+    vacuum + log vacuum) over the destination."""
     import os
     from datetime import datetime
 
@@ -53,7 +53,6 @@ def test_action_copy_tx_and_maintain(spark, sf_dir, tmp_path, capsys):
         spark, sf_dir, str(tmp_path),
         datetime(2024, 1, 1), datetime(2024, 2, 1),
         meas_filter="^events$", chunk="240h", num_workers=2,
-        table_format="tx",
     )
     assert rep.bad_chunks == []
     assert os.path.isdir(tmp_path / "events" / "_txlog")
@@ -76,40 +75,6 @@ def test_action_copy_tx_and_maintain(spark, sf_dir, tmp_path, capsys):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["events"]["retention"]["dropped_groups"] >= 1
-
-
-def test_maintain_dir_format_preserves_windows(spark, sf_dir, tmp_path, capsys):
-    """maintain on a directory-format destination compacts WITHIN each
-    win= directory — the window layout (replay idempotency key) must
-    survive the sweep."""
-    import os
-    from datetime import datetime
-
-    from syncflux_spark.agent import action_copy
-    from syncflux_spark.operators.copy import read_copied
-
-    rep = action_copy(
-        spark, sf_dir, str(tmp_path),
-        datetime(2024, 1, 1), datetime(2024, 1, 15),
-        meas_filter="^events$", chunk="168h", num_workers=2,
-    )
-    wins_before = sorted(
-        d for d in os.listdir(tmp_path / "events") if d.startswith("win=")
-    )
-    assert len(wins_before) == 2
-    n = read_copied(spark, str(tmp_path), "events").count()
-    rc = main([
-        "-action", "maintain", "-dst-root", str(tmp_path),
-        "-master", "local[2]",
-    ])
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["events"]["format"] == "dir"
-    wins_after = sorted(
-        d for d in os.listdir(tmp_path / "events") if d.startswith("win=")
-    )
-    assert wins_after == wins_before
-    assert read_copied(spark, str(tmp_path), "events").count() == n == rep.points
 
 
 def test_action_replicaschema_rename(spark, tmp_path):

@@ -4,7 +4,7 @@ from datetime import datetime, timezone
 
 import pytest
 
-from syncflux_spark.operators.copy import copy_range, read_copied, sync, sync_dbrp
+from syncflux_spark.operators.copy import copy_range, read_copied, retry, sync, sync_dbrp
 
 
 def dt(*args):
@@ -100,6 +100,72 @@ class TestSync:
         ).count()
         assert back.count() == expected
         assert back.select("event_id").distinct().count() == expected
+
+    def test_recovery_reruns_only_failed_measurements(self, spark, events, tmp_path):
+        """A bad chunk where ``a`` succeeded and ``b`` failed: recovery
+        re-copies only ``b`` at the finer grain — re-copying ``a`` too
+        would add fine windows beside its chunk window and double it."""
+        n = events.where((events.ts >= "2024-01-01") & (events.ts < "2024-01-31")).count()
+        ms = {"a": events, "b": events}
+        failed = []
+
+        def fail_b_once(name, s, e):
+            if name == "b" and not failed:
+                failed.append(name)
+                raise RuntimeError("injected outage")
+
+        rep = sync_dbrp(
+            spark, ms, str(tmp_path), dt(2024, 1, 1), dt(2024, 1, 31),
+            chunk="720h", rw_max_retries=1, fail_injector=fail_b_once,
+        )
+        assert failed == ["b"] and rep.write_errors == 0
+        assert read_copied(spark, str(tmp_path), "a").count() == n > 0
+        assert read_copied(spark, str(tmp_path), "b").count() == n
+        (c,) = rep.chunks
+        assert c.measurements == {"a": n, "b": n}
+        assert c.points == rep.points == 2 * n
+
+
+class TestRetry:
+    @pytest.mark.parametrize("kw", [{"max_retries": 0}, {"backstop": 0}, {"max_retries": -1}])
+    def test_non_positive_bounds_still_attempt_once(self, kw):
+        calls = []
+        assert retry(lambda: calls.append(1) or "ok", **kw) == "ok"
+        assert calls == [1]
+
+    def test_exhausted_retries_reraise_last_error(self):
+        calls = []
+
+        def boom():
+            calls.append(1)
+            raise KeyError(len(calls))
+
+        with pytest.raises(KeyError, match="3"):
+            retry(boom, max_retries=3)
+        assert len(calls) == 3
+
+
+def test_win_key_same_instant_same_key(monkeypatch):
+    """Naive, UTC-aware and ISO-string forms of one window key alike
+    (naive means UTC, as in the scan) — whatever the process's local
+    timezone — so a replay passed in another form replaces the window
+    instead of duplicating it."""
+    import time
+
+    from syncflux_spark.operators.copy import _win_key
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        forms = {
+            _win_key(datetime(2024, 1, 1), datetime(2024, 1, 1, 0, 5)),
+            _win_key(dt(2024, 1, 1), dt(2024, 1, 1, 0, 5)),
+            _win_key("2024-01-01 00:00:00", "2024-01-01T00:05:00"),
+        }
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert forms == {"1704067200000_1704067500000"}
 
 
 def test_scan_time_range_non_ns_table(spark, sf_dir):

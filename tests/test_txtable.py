@@ -108,7 +108,7 @@ class TestVacuum:
     def test_removes_only_old_unreferenced(self, spark, tmp_path):
         t = TxTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
         t.overwrite(lambda s: s)  # v1 supersedes v0's group
-        orphan_rel = t._write_group(_df(spark, [(9, "x")]))  # never committed
+        orphan_rel, _ = t._write_group(_df(spark, [(9, "x")]))  # never committed
         # everything is fresh: nothing removed
         assert t.vacuum(older_than_s=3600) == []
         # age all groups; only unreferenced ones go
