@@ -2,15 +2,14 @@
 
 The remaining plain-parquet writers in this engine get idempotency
 from directory overwrite / staging-swap: operators/compact.py's
-compact_parquet, catalog retention's staging rewrite
-(catalog.py::enforce_retention) and the directory base of
-streaming/cdc.py's CdcMergeStream. That is correct for a SINGLE
+compact_parquet and catalog retention's staging rewrite
+(catalog.py::enforce_retention). That is correct for a SINGLE
 writer per table — but two concurrent writers on one target (say a
-merger and a nightly compactor) can interleave a rewrite and leave a
-mixed directory. The copy and replication sinks commit to
-txtable.TxTable instead (OCC, no lock). For the writers above, this
-module makes the single-writer contract ENFORCED rather than
-assumed:
+retention pass and a nightly compactor) can interleave a rewrite and
+leave a mixed directory. The copy and replication sinks and
+streaming/cdc.py's CdcMergeStream commit to txtable.TxTable instead
+(OCC, no lock). For the two writers above, this module makes the
+single-writer contract ENFORCED rather than assumed:
 
 * :func:`table_lock` — advisory mutual exclusion scoped to a target
   directory, acquired by atomically creating ``<dir>/../.<name>.lock``

@@ -71,10 +71,9 @@ def compact_parquet(
     return data_file_count(path)
 
 
-#: staging/backup directory name fragments the swap writers create
-#: (compact_parquet, streaming/cdc.py base swap) — a crash between
-#: write and rename leaves them behind
-_STAGING_MARKERS = (".compact-", ".cdc-", ".old-")
+#: staging/backup directory name fragments compact_parquet's swap
+#: creates — a crash between write and rename leaves them behind
+_STAGING_MARKERS = (".compact-", ".old-")
 
 
 def clean_stale_staging(
@@ -82,12 +81,12 @@ def clean_stale_staging(
 ) -> list[str]:
     """Remove orphaned staging/backup directories left by a writer
     that crashed between its staging write and the atomic swap
-    (``<table>.compact-xxxx``, ``<table>.cdc-xxxx``,
-    ``<table>.old-xxxx``). Only directories idle for
-    ``older_than_s`` seconds go — a LIVE writer's staging dir is
-    younger than that by construction (its lock also still exists,
-    but age alone is the safe test: the lock file could be the very
-    thing the crash orphaned). Returns the removed paths.
+    (``<table>.compact-xxxx``, ``<table>.old-xxxx``). Only
+    directories idle for ``older_than_s`` seconds go — a LIVE
+    writer's staging dir is younger than that by construction (its
+    lock also still exists, but age alone is the safe test: the lock
+    file could be the very thing the crash orphaned). Returns the
+    removed paths.
 
     Run it from the same maintenance schedule as compaction; it
     walks directory entries only (no data read)."""
@@ -164,10 +163,7 @@ def compact_tx_tagged(
     from syncflux_spark.txtable import TxTable
 
     t = TxTable(spark, root)
-    v = t.version()
-    if v < 0:
-        return 0
-    files, _stats, tags = t._state_at(v)
+    files, _stats, tags, schema = t._state_at(t.version())
     by_tag: dict[str, list[str]] = {}
     for rel in files:
         tv = tags.get(rel, {}).get(tag_key)
@@ -180,9 +176,7 @@ def compact_tx_tagged(
             continue
         nbytes = sum(dataset_bytes(os.path.join(root, r)) for r in rels)
         n_out = max(1, -(-nbytes // target_file_bytes))
-        merged = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(root, r) for r in rels]
-        )
+        merged = t._read(rels, schema)
         committed = t.swap_groups(
             rels,
             merged.repartition(n_out),

@@ -13310,17 +13310,18 @@ def cdc_merge_audit(spark, sf):
 def stream_cdc_apply(spark, sf):
     """Streaming CDC under the oracle gate: the I/U/D fixture batch
     flows through a checkpointed readStream → foreachBatch merge
-    (streaming/cdc.py::CdcMergeStream — staging-swap base rewrite,
-    replay-idempotent by MERGE semantics), and the resulting base
-    table must hash-equal the one-shot SQL MERGE the oracle computes.
-    Restart/replay survival is separately proven in
+    (streaming/cdc.py::CdcMergeStream — one TxTable overwrite commit
+    per batch, replay-idempotent by MERGE semantics), and the
+    resulting base table must hash-equal the one-shot SQL MERGE the
+    oracle computes. Restart/replay survival is separately proven in
     tests/test_streaming.py::TestCdcMergeStream."""
     from syncflux_spark.streaming.cdc import CdcMergeStream
+    from syncflux_spark.txtable import TxTable
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     root = tempfile.mkdtemp(prefix="sf_cdc_")
     base, changes = _cdc_fixture(spark, sf)
-    base.write.mode("overwrite").parquet(f"{root}/base")
+    TxTable.create(spark, f"{root}/base", base)
     changes.write.mode("overwrite").parquet(f"{root}/changes")
     s = CdcMergeStream(
         spark,

@@ -1,12 +1,12 @@
 """Streaming CDC apply: a checkpointed stream of insert/update/delete
-change batches continuously merged into a base parquet table.
+change batches continuously merged into a base txtable.TxTable.
 
 The batch operator (operators/cdc.py::apply_changes) gives MERGE
 semantics for one batch; this module wraps it in Structured
 Streaming's exactly-once machinery:
 
-    readStream(changes dir) → foreachBatch(merge into base via
-    staging-swap) with checkpointLocation
+    readStream(changes dir) → foreachBatch(TxTable.overwrite of the
+    merged base) with checkpointLocation
 
 Crash safety is the composition of two idempotencies:
 
@@ -15,9 +15,11 @@ Crash safety is the composition of two idempotencies:
   (inserts replace, updates set the same values, deletes of absent
   keys are ignored), so at-least-once replay yields exactly-once
   state;
-* the base rewrite goes through a staging directory + atomic rename
-  (same swap discipline as operators/compact.py), so a reader or a
-  crash mid-rewrite never observes a half-merged table.
+* each merge is one TxTable commit (optimistic concurrency, no lock),
+  so a reader or a crash mid-rewrite never observes a half-merged
+  table, and a concurrent writer on the base (a compactor, a second
+  merger) makes the merge recompute against the winner instead of
+  losing either write.
 
 Scale notes: each micro-batch costs one base-vs-batch equality join
 (the batch side broadcasts; the base side is scanned once and written
@@ -31,19 +33,16 @@ replication loop (pkg/agent/hacluster.go).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from syncflux_spark.operators.cdc import apply_changes, compact_changes
+from syncflux_spark.txtable import TxTable
 
 
 class CdcMergeStream:
     """Continuously merge change-batch parquet files into a base
-    table directory with MERGE semantics and exactly-once effect."""
+    TxTable with MERGE semantics and exactly-once effect."""
 
     def __init__(
         self,
@@ -55,7 +54,6 @@ class CdcMergeStream:
         op_col: str = "op",
         max_files_per_trigger: int | None = None,
         seq_col: str | None = None,
-        base_format: str = "dir",
         state_partitions: int | None = None,
         state_backend: str | None = None,
     ):
@@ -69,14 +67,6 @@ class CdcMergeStream:
         #: explicit change-sequence column (LSN/commit ts) if the feed
         #: carries one; otherwise file order (mtime, path) sequences
         self.seq_col = seq_col
-        #: "dir" = plain-parquet directory with locked staging swap
-        #: (single concurrent writer, enforced); "tx" = a
-        #: txtable.TxTable commit log at base_path — OCC merges that
-        #: serialize against OTHER writers (a compactor, a second
-        #: merger) without the advisory lock
-        if base_format not in ("dir", "tx"):
-            raise ValueError(f"base_format must be 'dir' or 'tx', got {base_format!r}")
-        self.base_format = base_format
         #: sizes the per-batch compaction window + merge join (no
         #: streaming state here — CDC state is the base table itself);
         #: see utils.streaming_state. None = session conf.
@@ -132,31 +122,17 @@ class CdcMergeStream:
             seq_col="_cdc_seq",
             op_col=self.op_col,
         ).drop("_cdc_seq", "_cdc_mtime", "_cdc_file")
-        if self.base_format == "tx":
-            from syncflux_spark.txtable import TxTable
-
-            TxTable(self.spark, self.base_path).merge_changes(
-                compacted, key_col=self.key_col, op_col=self.op_col
+        # uniqueness is guaranteed by the compaction above, so the
+        # merge skips apply_changes' per-batch uniqueness-check job
+        TxTable(self.spark, self.base_path).overwrite(
+            lambda base: apply_changes(
+                base,
+                compacted,
+                key_col=self.key_col,
+                op_col=self.op_col,
+                check_unique=False,
             )
-            self.batches_applied += 1
-            return
-        base = self.spark.read.parquet(self.base_path)
-        merged = apply_changes(
-            base,
-            compacted,
-            key_col=self.key_col,
-            op_col=self.op_col,
-            check_unique=False,  # uniqueness guaranteed by compaction
         )
-        from syncflux_spark.locking import table_lock
-
-        with table_lock(self.base_path):
-            staging = f"{self.base_path}.cdc-{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").parquet(staging)
-            old = f"{self.base_path}.old-{uuid.uuid4().hex[:8]}"
-            os.rename(self.base_path, old)
-            os.rename(staging, self.base_path)
-            shutil.rmtree(old)
         self.batches_applied += 1
 
     # -- drive --------------------------------------------------------------
@@ -188,8 +164,4 @@ class CdcMergeStream:
         )
 
     def read_base(self) -> DataFrame:
-        if self.base_format == "tx":
-            from syncflux_spark.txtable import TxTable
-
-            return TxTable(self.spark, self.base_path).snapshot()
-        return self.spark.read.parquet(self.base_path)
+        return TxTable(self.spark, self.base_path).snapshot()

@@ -14,8 +14,9 @@ cut to the bone:
   kinds:
 
   - **snapshot** commits record the COMPLETE file-group list (plus
-    per-group stats/tags). Version 0, every ``overwrite``, and every
-    ``checkpoint_interval``-th version are snapshots.
+    per-group stats/tags). Every ``checkpoint_interval``-th version
+    is a snapshot, and so is any commit whose full list is no longer
+    than its delta would be (version 0, every ``overwrite``).
   - **delta** commits record only ``add``/``remove`` group lists
     (plus stats/tags for the adds) against the previous version.
 
@@ -25,25 +26,33 @@ cut to the bone:
   making ~100k commits/year never re-reads its history (the wall the
   pre-checkpoint full-listing format hit at thousands of commits;
   test: tests/test_tx_routing.py::TestLogCheckpointing, 5k commits).
-  The log also records the TABLE SCHEMA (snapshot commits always;
-  delta commits only when a batch evolves it), so the write-time
-  compatibility check and snapshot/scan planning read zero parquet
-  footers, and ``version()`` rides a best-effort ``.last`` hint +
-  forward probe instead of a directory listing.
+  One walk (``_state_at``) yields files, stats, tags and the TABLE
+  SCHEMA together: the log records the schema on every snapshot
+  commit once the table has one, and on a delta only when the commit
+  changes it, so the write-time compatibility check and
+  snapshot/scan planning read zero parquet footers. A log that lists
+  data groups but no schema is rejected. ``version()`` rides a
+  best-effort ``.last`` hint + forward probe instead of a directory
+  listing.
 * **Snapshot isolation**: a reader resolves the highest committed
   version once and reads exactly that file list — concurrent commits
   never produce a torn read.
-* **Optimistic concurrency**: a writer prepares data files and the
-  full commit document in a temp file, then atomically claims version
-  ``V+1`` via ``os.link`` onto the log name (fails-if-exists like
-  ``O_EXCL``, but the linked file already carries its complete
-  content, so a concurrent reader can never observe a half-written
-  commit; on object stores, a conditional PUT). Losing the race
-  raises :class:`CommitConflict`; ``append``/``replace_tagged``
-  auto-rebase (their edits commute with or are recomputed against any
-  winner), while ``overwrite``/``merge_changes`` re-run their
-  computation against the new snapshot and retry — real OCC, bounded
-  by ``max_retries`` where the retry re-reads data.
+* **Optimistic concurrency, one commit loop**: every writer
+  (``create``, ``append``, ``replace_tagged``, ``swap_groups``,
+  ``overwrite``/``merge_changes``, ``publish_with_audit``,
+  ``expire_below``) is an *edit* of the parent state passed to
+  ``_commit``. The loop resolves the parent once, lets the edit
+  stage its data group and compute its add/remove lists and schema
+  (checked against THAT parent), writes the full commit document to
+  a temp file and atomically claims version ``V+1`` via ``os.link``
+  onto the log name (fails-if-exists like ``O_EXCL``, but the linked
+  file already carries its complete content, so a concurrent reader
+  can never observe a half-written commit; on object stores, a
+  conditional PUT). A lost race re-runs the edit against the
+  winner's state — adds commute, tag removals are recomputed,
+  ``overwrite`` recomputes its data (bounded by ``max_retries``,
+  then :class:`CommitConflict`). A staged group whose commit does
+  not land is deleted.
 * **Tags**: a commit may label each added group with small key/value
   strings (``{"win": "<start>_<end>"}``). :meth:`replace_tagged`
   atomically swaps every group carrying one tag value for a new
@@ -74,6 +83,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -157,118 +167,90 @@ class TxTable:
         with open(self._log_path(version)) as f:
             return json.load(f)
 
-    def _state_at(self, version: int) -> tuple[list[str], dict, dict]:
-        """(files, stats, tags) at ``version``: walk back to the
-        nearest snapshot commit, replay deltas forward. Bounded by
-        the checkpoint interval, never by table age."""
+    def _state_at(
+        self, version: int
+    ) -> tuple[list[str], dict, dict, StructType | None]:
+        """(files, stats, tags, schema) at ``version`` — the one log
+        walk: back to the nearest snapshot commit, then replay deltas
+        forward. Bounded by the checkpoint interval, never by table
+        age. ``schema`` is the table schema the log records (every
+        snapshot commit carries it once one exists, so the walk always
+        reaches it); None only for a table that never held data.
+        Version -1 (no commits) is the empty state."""
         chain: list[dict] = []
         v = version
-        while True:
-            if v < 0:
-                raise ValueError(
-                    f"corrupt log at {self.root}: no snapshot commit "
-                    f"at or below version {version}"
-                )
+        while v >= 0:
             doc = self._read_doc(v)
             chain.append(doc)
-            if "files" in doc:  # snapshot commit (also the pre-delta format)
+            if "files" in doc:
                 break
             v -= 1
-        base = chain[-1]
-        files = list(base["files"])
-        stats = dict(base.get("stats", {}))
-        tags = dict(base.get("tags", {}))
-        for doc in reversed(chain[:-1]):
+        if v < 0 <= version:
+            raise ValueError(
+                f"corrupt log at {self.root}: no snapshot commit "
+                f"at or below version {version}"
+            )
+        files: list[str] = []
+        stats: dict = {}
+        tags: dict = {}
+        schema = None
+        for doc in reversed(chain):
             removed = set(doc.get("remove", ()))
-            if removed:
-                files = [r for r in files if r not in removed]
-                for r in removed:
-                    stats.pop(r, None)
-                    tags.pop(r, None)
-            files += list(doc.get("add", ()))
+            files = [r for r in doc.get("files", files) if r not in removed]
+            files += doc.get("add", [])
+            for r in removed:
+                stats.pop(r, None)
+                tags.pop(r, None)
             stats.update(doc.get("stats", {}))
             tags.update(doc.get("tags", {}))
-        return files, stats, tags
+            schema = doc.get("schema", schema)
+        if files and schema is None:
+            raise ValueError(
+                f"log at {self.root} (version {version}) lists data "
+                "groups but records no table schema"
+            )
+        return files, stats, tags, (
+            StructType.fromJson(schema) if schema else None
+        )
 
     def _files_at(self, version: int) -> list[str]:
         return self._state_at(version)[0]
 
-    def _stats_at(self, version: int) -> dict:
-        """Per-file stats map of a commit ({} for pre-stats logs —
-        every file then survives pruning, which is the safe
-        direction)."""
-        return self._state_at(version)[1]
-
-    def _tags_at(self, version: int) -> dict:
-        return self._state_at(version)[2]
-
-    def _schema_at(self, version: int):
-        """The table schema recorded in the commit log: walk back to
-        the nearest document carrying ``schema`` (every snapshot
-        commit does, so the walk is bounded like _state_at's). None
-        for pre-schema logs — readers then fall back to parquet
-        footer merging, and the next commit records it. This is what
-        keeps the write path O(1) metadata: without it, every
-        append's compatibility check and every snapshot() read pays
-        one footer read PER GROUP — O(groups) at 100k windows."""
-        from pyspark.sql import types as T
-
-        v = version
-        while v >= 0:
-            try:
-                doc = self._read_doc(v)
-            except FileNotFoundError:
-                return None  # below the vacuum_log cut
-            if "schema" in doc:
-                return T.StructType.fromJson(doc["schema"])
-            v -= 1
-        return None
-
     @staticmethod
-    def _nullable(schema):
-        from pyspark.sql import types as T
-
-        return T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+    def _nullable(schema: StructType) -> StructType:
+        return StructType(
+            [StructField(f.name, f.dataType, True) for f in schema.fields]
         )
 
-    def _doc_schema(
-        self, parent: int, batch_schema, snapshot_doc: bool
-    ) -> dict | None:
-        """The ``schema`` value to record on a commit (jsonValue), or
-        None to omit. Delta commits record it only when the batch
-        EVOLVES the schema (new columns — existing fields first, all
-        nullable so older groups read the new columns as null);
-        snapshot commits always carry the current schema so the
-        _schema_at walk-back is bounded by the checkpoint interval.
-        Pre-schema legacy logs with data recover the schema once from
-        parquet footers."""
-        from pyspark.sql import types as T
-
-        cur = self._schema_at(parent) if parent >= 0 else None
-        if (
-            cur is None
-            and parent >= 0
-            and batch_schema is not None
-            and self._files_at(parent)
-        ):
-            try:
-                cur = self.snapshot(parent).schema
-            except ValueError:
-                cur = None
-        if batch_schema is None:
-            return (
-                cur.jsonValue() if (snapshot_doc and cur is not None) else None
-            )
+    @classmethod
+    def _evolve(cls, cur, batch, allow_new_columns: bool):
+        """The table schema after adding a group of schema ``batch``
+        to a table of schema ``cur`` (None: the table never held
+        data, so the batch defines it). New columns are appended after
+        the existing ones, all nullable, so older groups read them as
+        null; a new column needs ``allow_new_columns``. A TYPE change
+        of an existing column always raises — the read would fail on
+        the group's physical type, which is the worst place to find
+        out. Pure schema arithmetic: no footer is read."""
         if cur is None:
-            return self._nullable(batch_schema).jsonValue()
-        names = {f.name for f in cur.fields}
-        new = [f for f in batch_schema.fields if f.name not in names]
-        if new:
-            return self._nullable(
-                T.StructType(list(cur.fields) + list(new))
-            ).jsonValue()
-        return cur.jsonValue() if snapshot_doc else None
+            return cls._nullable(batch)
+        current = {f.name: f.dataType for f in cur.fields}
+        for f in batch.fields:
+            if f.name in current:
+                if f.dataType != current[f.name]:
+                    raise ValueError(
+                        f"column {f.name!r}: type {f.dataType.simpleString()} "
+                        f"conflicts with existing "
+                        f"{current[f.name].simpleString()} — schema evolution "
+                        "adds columns, never retypes them"
+                    )
+            elif not allow_new_columns:
+                raise ValueError(
+                    f"column {f.name!r} not in table schema; pass "
+                    "allow_new_columns=True to evolve the schema"
+                )
+        new = [f for f in batch.fields if f.name not in current]
+        return cls._nullable(StructType(list(cur.fields) + new))
 
     def _write_group(
         self,
@@ -303,6 +285,20 @@ class TxTable:
         row = obs.get
         return rel, {c: [row[f"lo_{c}"], row[f"hi_{c}"]] for c in stats_cols}
 
+    def _read(self, files: list[str], schema) -> DataFrame:
+        """Read data groups with the log-recorded schema: columns a
+        group predates surface as null, and planning touches zero
+        parquet footers (a footer merge would fetch one per group —
+        O(groups) at 100k windows)."""
+        if not files:
+            raise ValueError(
+                f"table at {self.root} has no data groups yet — write "
+                "one before reading"
+            )
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, rel) for rel in files]
+        )
+
     def _try_commit_doc(self, version: int, doc: dict) -> bool:
         """Atomically claim ``version`` with a COMPLETE document:
         the content is written to a temp file first and linked onto
@@ -325,27 +321,90 @@ class TxTable:
         self._update_hint(version)
         return True
 
-    def _commit_next(
-        self,
-        add: list[str],
-        remove: list[str],
-        stats_add: dict | None = None,
-        tags_add: dict | None = None,
-        batch_schema=None,
-    ) -> int:
-        """Claim the next version with an add/remove edit, rebasing
-        onto any winner (the edit lists are recomputed by CALLERS that
-        depend on current state — this helper only re-resolves the
-        snapshot policy). Every ``checkpoint_interval``-th version is
-        materialized as a full snapshot; other versions are O(1)
-        delta documents."""
-        while True:
-            v = self.version()
-            out = self._commit_next_once(
-                v, add, remove, stats_add, tags_add, batch_schema
+    def _commit(self, edit, max_retries: int | None = None) -> int | None:
+        """The commit loop every writer goes through. Each attempt
+        reads ``version()``, resolves that parent's state once, and
+        calls ``edit(state, stage)`` with ``state = (files, stats,
+        tags, schema)``. ``edit`` returns ``None`` to abort, or a dict
+        with any of ``add``/``remove`` (group lists), ``stats``/
+        ``tags`` (per added group; None values are dropped) and
+        ``schema`` (the table schema after the commit; default: the
+        parent's). ``stage(df, stats_cols, write_options)`` writes
+        ``df`` as a data group once per DataFrame across attempts and
+        returns ``(rel, stats)``. The loop then claims ``parent + 1``;
+        on a lost race it starts again from the new parent, so every
+        edit — and every schema check inside one — is computed against
+        the state its commit lands on. The document is a snapshot at
+        checkpoint versions and whenever the full file list is no
+        longer than the delta would be (version 0, overwrites), else
+        an O(1) delta; deltas record the schema only when it changes.
+
+        Every staged group the commit does not add is deleted, whether
+        the loop aborts, raises, or loses a race that re-stages.
+        Returns the committed version, None on abort; raises
+        :class:`CommitConflict` after ``max_retries`` lost races."""
+        staged: list[tuple[DataFrame, tuple[str, dict | None]]] = []
+
+        def stage(df, stats_cols=None, write_options=None):
+            for d, group in staged:
+                if d is df:
+                    return group
+            group = self._write_group(df, stats_cols, write_options)
+            staged.append((df, group))
+            return group
+
+        landed: list[str] = []
+        attempts = 0
+        try:
+            while max_retries is None or attempts < max_retries:
+                attempts += 1
+                parent = self.version()
+                files, stats, tags, schema = self._state_at(parent)
+                e = edit((files, stats, tags, schema), stage)
+                if e is None:
+                    return None
+                add = list(e.get("add", ()))
+                remove = list(e.get("remove", ()))
+                add_stats = {r: s for r, s in e.get("stats", {}).items() if s}
+                add_tags = {r: t for r, t in e.get("tags", {}).items() if t}
+                new_schema = e.get("schema", schema)
+                gone = set(remove)
+                files = [r for r in files if r not in gone] + add
+                next_v = parent + 1
+                if (
+                    next_v % self.checkpoint_interval == 0
+                    or len(files) <= len(add) + len(remove)
+                ):
+                    for r in gone:
+                        stats.pop(r, None)
+                        tags.pop(r, None)
+                    doc: dict = {
+                        "files": files,
+                        "stats": {**stats, **add_stats},
+                        "tags": {**tags, **add_tags},
+                    }
+                    record = new_schema is not None
+                else:
+                    doc = {
+                        "add": add, "remove": remove,
+                        "stats": add_stats, "tags": add_tags,
+                    }
+                    record = new_schema != schema
+                if record:
+                    doc["schema"] = new_schema.jsonValue()
+                if self._try_commit_doc(next_v, doc):
+                    landed = add
+                    return next_v
+            raise CommitConflict(
+                f"lost {max_retries} commit races at {self.root}; raise "
+                f"max_retries or serialize the writers"
             )
-            if out is not None:
-                return out
+        finally:
+            for _df, (rel, _st) in staged:
+                if rel not in landed:
+                    shutil.rmtree(
+                        os.path.join(self.root, rel), ignore_errors=True
+                    )
 
     # -- public API ---------------------------------------------------------
     @classmethod
@@ -357,18 +416,21 @@ class TxTable:
         stats_cols: list[str] | None = None,
         checkpoint_interval: int = 100,
     ) -> "TxTable":
+        """A new table holding ``df``. Raises ``ValueError`` if a table
+        with data or a schema exists at ``root``, and
+        :class:`CommitConflict` if a concurrent writer commits first."""
         t = cls(spark, root, checkpoint_interval=checkpoint_interval)
-        if t.version() >= 0:
-            raise ValueError(f"table already exists at {root}")
-        rel, st = t._write_group(df, stats_cols)
-        doc: dict = {
-            "files": [rel],
-            "schema": t._nullable(df.schema).jsonValue(),
-        }
-        if st:
-            doc["stats"] = {rel: st}
-        if not t._try_commit_doc(0, doc):
-            raise CommitConflict(f"concurrent create at {root}")
+
+        def edit(state, stage):
+            if state[0] or state[3] is not None:
+                raise ValueError(f"table already exists at {root}")
+            rel, st = stage(df, stats_cols)
+            return {
+                "add": [rel], "stats": {rel: st},
+                "schema": t._nullable(df.schema),
+            }
+
+        t._commit(edit, max_retries=1)
         return t
 
     @classmethod
@@ -389,26 +451,11 @@ class TxTable:
 
     def snapshot(self, version: int | None = None) -> DataFrame:
         """The table at a committed version (default: latest) — an
-        immutable, torn-read-free view. Reads with the schema RECORDED
-        in the commit log (columns a group predates surface as null),
-        so scan planning touches zero parquet footers — at 100k groups
-        a ``mergeSchema`` read would pay one footer fetch per group
-        before the first row. Pre-schema legacy logs fall back to
-        footer merging."""
+        immutable, torn-read-free view, read with the schema RECORDED
+        in the commit log (see :meth:`_read`)."""
         v = self.version() if version is None else version
-        if v < 0:
-            raise ValueError(f"no commits at {self.root}")
-        files = self._files_at(v)
-        if not files:
-            raise ValueError(
-                f"table at {self.root} (version {v}) has no data groups "
-                "yet — write one before reading"
-            )
-        paths = [os.path.join(self.root, rel) for rel in files]
-        sch = self._schema_at(v)
-        if sch is not None:
-            return self.spark.read.schema(sch).parquet(*paths)
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        files, _stats, _tags, schema = self._state_at(v)
+        return self._read(files, schema)
 
     def snapshot_as_of(self, ts: float) -> DataFrame:
         """Time travel by WALL CLOCK: the table as of unix time ``ts``
@@ -473,36 +520,6 @@ class TxTable:
             v -= 1
         return out
 
-    def _check_schema_compatible(
-        self, df: DataFrame, allow_new_columns: bool
-    ) -> None:
-        """Appends may widen the schema (new columns → earlier groups
-        read as null) but never CHANGE an existing column's type —
-        parquet's mergeSchema would fail at read time, which is the
-        worst place to discover it. Checked at write time instead,
-        against the LOG-recorded schema (O(1) — no footer reads)."""
-        v = self.version()
-        cur = self._schema_at(v)
-        if cur is None:
-            if not self._files_at(v):
-                return  # empty table: the incoming batch defines the schema
-            cur = self.snapshot(v).schema  # pre-schema legacy log
-        current = {f.name: f.dataType for f in cur.fields}
-        for f in df.schema.fields:
-            if f.name in current:
-                if f.dataType != current[f.name]:
-                    raise ValueError(
-                        f"column {f.name!r}: type {f.dataType.simpleString()} "
-                        f"conflicts with existing "
-                        f"{current[f.name].simpleString()} — schema evolution "
-                        "adds columns, never retypes them"
-                    )
-            elif not allow_new_columns:
-                raise ValueError(
-                    f"column {f.name!r} not in table schema; pass "
-                    "allow_new_columns=True to evolve the schema"
-                )
-
     def append(
         self,
         df: DataFrame,
@@ -512,16 +529,18 @@ class TxTable:
         """Add rows; file adds commute, so a lost race auto-rebases
         onto the winner's commit (the new group's stats ride along).
         With ``allow_new_columns`` the batch may carry columns the
-        table lacks — snapshot reads merge schemas and older groups
-        surface them as null; a TYPE change for an existing column
-        always raises at write time (see _check_schema_compatible).
-        Returns the committed version. The commit itself is an O(1)
-        delta document (a snapshot only at checkpoint versions)."""
-        self._check_schema_compatible(df, allow_new_columns)
-        rel, st = self._write_group(df, stats_cols)
-        return self._commit_next(
-            [rel], [], {rel: st} if st else None, None, df.schema
-        )
+        table lacks — older groups surface them as null; a TYPE
+        change for an existing column always raises (see
+        :meth:`_evolve`). Returns the committed version. The commit
+        itself is an O(1) delta document (a snapshot only at
+        checkpoint versions)."""
+
+        def edit(state, stage):
+            schema = self._evolve(state[3], df.schema, allow_new_columns)
+            rel, st = stage(df, stats_cols)
+            return {"add": [rel], "stats": {rel: st}, "schema": schema}
+
+        return self._commit(edit)
 
     def replace_tagged(
         self,
@@ -543,24 +562,22 @@ class TxTable:
         winner's state and retries — concurrent DISTINCT tag values
         commute; concurrent writers of the SAME value serialize to
         last-writer-wins. Returns the committed version."""
-        self._check_schema_compatible(df, allow_new_columns)
-        rel, st = self._write_group(df, stats_cols, write_options)
         tags = {tag_key: str(tag_value), **(extra_tags or {})}
-        while True:
-            v = self.version()
-            _files, _stats, cur_tags = (
-                self._state_at(v) if v >= 0 else ([], {}, {})
-            )
+
+        def edit(state, stage):
+            files, _stats, cur_tags, schema = state
+            schema = self._evolve(schema, df.schema, allow_new_columns)
+            rel, st = stage(df, stats_cols, write_options)
             remove = [
-                r for r in _files
-                if cur_tags.get(r, {}).get(tag_key) == str(tag_value)
+                r for r in files
+                if cur_tags.get(r, {}).get(tag_key) == tags[tag_key]
             ]
-            next_v = self._commit_next_once(
-                v, [rel], remove, {rel: st} if st else None, {rel: tags},
-                df.schema,
-            )
-            if next_v is not None:
-                return next_v
+            return {
+                "add": [rel], "remove": remove, "stats": {rel: st},
+                "tags": {rel: tags}, "schema": schema,
+            }
+
+        return self._commit(edit)
 
     def swap_groups(
         self,
@@ -581,70 +598,18 @@ class TxTable:
         groups is rebased over. This is what a compactor needs: its
         output is a pure rewrite of its input, so the input vanishing
         means the output is stale by definition."""
-        rel, st = self._write_group(df, stats_cols, write_options)
-        tags_add = {rel: tags} if tags else None
-        try:
-            while True:
-                v = self.version()
-                live = set(self._files_at(v)) if v >= 0 else set()
-                if not set(expected) <= live:
-                    shutil.rmtree(
-                        os.path.join(self.root, rel), ignore_errors=True
-                    )
-                    return None
-                next_v = self._commit_next_once(
-                    v, [rel], list(expected),
-                    {rel: st} if st else None, tags_add, df.schema,
-                )
-                if next_v is not None:
-                    return next_v
-        except BaseException:
-            shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-            raise
 
-    def _commit_next_once(
-        self,
-        parent: int,
-        add: list[str],
-        remove: list[str],
-        stats_add: dict | None,
-        tags_add: dict | None,
-        batch_schema=None,
-    ) -> int | None:
-        """One attempt to claim ``parent + 1`` (None if lost) — for
-        writers whose edit lists depend on the parent state and must
-        be recomputed on a lost race (replace_tagged), unlike
-        _commit_next's self-rebasing loop. The schema to record is
-        resolved against THIS parent, so a rebase can never shadow a
-        concurrent winner's schema evolution."""
-        next_v = parent + 1
-        snapshot_doc = next_v % self.checkpoint_interval == 0 or parent < 0
-        if snapshot_doc:
-            files, stats, tags = (
-                self._state_at(parent) if parent >= 0 else ([], {}, {})
-            )
-            removed = set(remove)
-            files = [r for r in files if r not in removed] + list(add)
-            for r in removed:
-                stats.pop(r, None)
-                tags.pop(r, None)
-            stats.update(stats_add or {})
-            tags.update(tags_add or {})
-            doc: dict = {"files": files}
-            if stats:
-                doc["stats"] = stats
-            if tags:
-                doc["tags"] = tags
-        else:
-            doc = {"add": list(add), "remove": list(remove)}
-            if stats_add:
-                doc["stats"] = stats_add
-            if tags_add:
-                doc["tags"] = tags_add
-        sch = self._doc_schema(parent, batch_schema, snapshot_doc)
-        if sch is not None:
-            doc["schema"] = sch
-        return next_v if self._try_commit_doc(next_v, doc) else None
+        def edit(state, stage):
+            if not set(expected) <= set(state[0]):
+                return None
+            schema = self._evolve(state[3], df.schema, True)
+            rel, st = stage(df, stats_cols, write_options)
+            return {
+                "add": [rel], "remove": list(expected), "stats": {rel: st},
+                "tags": {rel: tags}, "schema": schema,
+            }
+
+        return self._commit(edit)
 
     def overwrite(
         self, compute, max_retries: int = 3,
@@ -653,25 +618,22 @@ class TxTable:
         """Replace the table with ``compute(snapshot_df) -> DataFrame``
         under OCC: the result is staged, then commit V+1 is claimed;
         losing the race re-runs ``compute`` against the winner's
-        snapshot. Always a snapshot commit (its state is complete by
-        construction, so it doubles as a log checkpoint). Returns the
-        committed version."""
-        for _ in range(max_retries):
-            v = self.version()
-            out = compute(self.snapshot(v))
-            rel, st = self._write_group(out, stats_cols)
-            doc: dict = {
-                "files": [rel],
-                "schema": self._nullable(out.schema).jsonValue(),
+        snapshot (the lost attempt's group is deleted), at most
+        ``max_retries`` times, then raises :class:`CommitConflict`.
+        The result's schema becomes the table schema, and the commit
+        is a snapshot (its file list is one group), so it doubles as
+        a log checkpoint. Returns the committed version."""
+
+        def edit(state, stage):
+            files, _stats, _tags, schema = state
+            out = compute(self._read(files, schema))
+            rel, st = stage(out, stats_cols)
+            return {
+                "add": [rel], "remove": files, "stats": {rel: st},
+                "schema": self._nullable(out.schema),
             }
-            if st:
-                doc["stats"] = {rel: st}
-            if self._try_commit_doc(v + 1, doc):
-                return v + 1
-        raise CommitConflict(
-            f"lost {max_retries} commit races at {self.root}; raise "
-            f"max_retries or serialize the writers"
-        )
+
+        return self._commit(edit, max_retries=max_retries)
 
     def merge_changes(
         self,
@@ -708,30 +670,21 @@ class TxTable:
         readers can never observe data that failed its checks. The
         audit sees the post-publish state, so cross-batch invariants
         (key uniqueness, row-count deltas, null budgets) are
-        checkable, not just per-batch ones. Returns the committed
-        version; raises ``ValueError`` on veto."""
-        rel, st = self._write_group(df, stats_cols)
-        try:
-            while True:
-                v = self.version()
-                paths = [
-                    os.path.join(self.root, r)
-                    for r in self._files_at(v) + [rel]
-                ]
-                candidate = self.spark.read.parquet(*paths)
-                ok = audit(candidate)
-                if ok is False:
-                    raise ValueError("audit vetoed publish")
-                next_v = self._commit_next_once(
-                    v, [rel], [], {rel: st} if st else None, None, df.schema
-                )
-                if next_v is not None:
-                    return next_v
-                # lost the commit race: re-audit against the winner's
-                # snapshot (the cross-batch invariants may now differ)
-        except BaseException:
-            shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-            raise
+        checkable, not just per-batch ones; a lost commit race
+        re-audits against the winner's snapshot. A batch that
+        retypes a column raises ``ValueError`` before the audit, like
+        :meth:`append`. Returns the committed version; raises
+        ``ValueError`` on veto."""
+
+        def edit(state, stage):
+            files, _stats, _tags, schema = state
+            schema = self._evolve(schema, df.schema, True)
+            rel, st = stage(df, stats_cols)
+            if audit(self._read(files + [rel], schema)) is False:
+                raise ValueError("audit vetoed publish")
+            return {"add": [rel], "stats": {rel: st}, "schema": schema}
+
+        return self._commit(edit)
 
     def scan_range(
         self,
@@ -745,10 +698,10 @@ class TxTable:
         [``lo``, ``hi``] — the lakehouse file-skipping trick, here on
         the engine's own commit log (zero extra reads: the stats were
         paid once at write time). Groups without stats for ``col``
-        (pre-stats commits, writers that didn't declare it) are KEPT —
-        pruning only ever skips provably-irrelevant files. The
-        surviving files still get the row-level predicate, so the
-        result equals ``snapshot().where(lo <= col <= hi)`` exactly.
+        (writers that didn't declare it) are KEPT — pruning only ever
+        skips provably-irrelevant files. The surviving files still get
+        the row-level predicate, so the result equals
+        ``snapshot().where(lo <= col <= hi)`` exactly.
 
         Returns ``(DataFrame, n_groups_skipped)``. At 100 TB this is
         the difference between touching one day's file groups and
@@ -758,9 +711,7 @@ class TxTable:
         from pyspark.sql import functions as F
 
         v = self.version() if version is None else version
-        if v < 0:
-            raise ValueError(f"no commits at {self.root}")
-        files, stats, _tags = self._state_at(v)
+        files, stats, _tags, schema = self._state_at(v)
         keep, skipped = [], 0
         for rel in files:
             s = stats.get(rel, {}).get(col)
@@ -773,19 +724,10 @@ class TxTable:
                 skipped += 1
                 continue
             keep.append(rel)
-        pred = (F.col(col) >= lo) & (F.col(col) <= hi)
         if not keep:
-            return self.snapshot(v).where(F.lit(False)), skipped
-        paths = [os.path.join(self.root, rel) for rel in keep]
-        # log-recorded schema, like snapshot(): surviving groups may
-        # straddle a schema evolution, and footer merging is O(groups)
-        sch = self._schema_at(v)
-        reader = (
-            self.spark.read.schema(sch)
-            if sch is not None
-            else self.spark.read.option("mergeSchema", "true")
-        )
-        return reader.parquet(*paths).where(pred), skipped
+            return self._read(files, schema).where(F.lit(False)), skipped
+        pred = (F.col(col) >= lo) & (F.col(col) <= hi)
+        return self._read(keep, schema).where(pred), skipped
 
     def expire_below(self, col: str, cutoff) -> dict:
         """Retention enforcement as a LOG operation: drop rows with
@@ -811,10 +753,7 @@ class TxTable:
         "kept_groups": n}``."""
         from pyspark.sql import functions as F
 
-        v = self.version()
-        if v < 0:
-            return {"dropped_groups": 0, "rewritten_groups": 0, "kept_groups": 0}
-        files, stats, tags = self._state_at(v)
+        files, stats, tags, schema = self._state_at(self.version())
         drop, rewrite, keep = [], [], []
         for rel in files:
             s = stats.get(rel, {}).get(col)
@@ -826,24 +765,21 @@ class TxTable:
                     keep.append(rel)
                     continue
             rewrite.append(rel)
-        if drop:
+
+        def drop_edit(state, _stage):
             # pure log edit; rebases over any winner (removals of
             # expired groups commute with everything except their own
             # replacement, which swap/replace writers would re-add
             # with fresh stats anyway)
-            while True:
-                cur = self.version()
-                live = set(self._files_at(cur))
-                still = [r for r in drop if r in live]
-                if not still:
-                    break
-                if self._commit_next_once(cur, [], still, None, None) is not None:
-                    break
+            live = set(state[0])
+            still = [r for r in drop if r in live]
+            return {"remove": still} if still else None
+
+        if drop:
+            self._commit(drop_edit)
         rewritten = 0
         for rel in rewrite:
-            df = self.spark.read.parquet(os.path.join(self.root, rel)).where(
-                F.col(col) >= cutoff
-            )
+            df = self._read([rel], schema).where(F.col(col) >= cutoff)
             if (
                 self.swap_groups(
                     [rel], df, tags=tags.get(rel), stats_cols=[col]
@@ -862,8 +798,7 @@ class TxTable:
         older than ``older_than_s`` (an in-flight writer's uncommitted
         group is younger by construction). Time travel to vacuumed
         versions stops working — the usual retention trade."""
-        v = self.version()
-        live = set(self._files_at(v)) if v >= 0 else set()
+        live = set(self._files_at(self.version()))
         data = os.path.join(self.root, _DATA_DIR)
         removed: list[str] = []
         try:

@@ -66,17 +66,17 @@ class TestStaleStaging:
         root = tmp_path / "warehouse"
         (root / "tbl").mkdir(parents=True)
         (root / "tbl.compact-dead1").mkdir()
-        (root / "sub" / "base.cdc-dead2").mkdir(parents=True)
+        (root / "sub" / "base.compact-dead2").mkdir(parents=True)
         (root / "tbl.old-dead3").mkdir()
         (root / "tbl.compact-live").mkdir()  # fresh: a running writer
         old = time.time() - 7200
-        for d in ("tbl.compact-dead1", "sub/base.cdc-dead2", "tbl.old-dead3"):
+        for d in ("tbl.compact-dead1", "sub/base.compact-dead2", "tbl.old-dead3"):
             os.utime(root / d, (old, old))
 
         removed = clean_stale_staging(str(root), older_than_s=3600)
         assert len(removed) == 3
         assert not (root / "tbl.compact-dead1").exists()
-        assert not (root / "sub" / "base.cdc-dead2").exists()
+        assert not (root / "sub" / "base.compact-dead2").exists()
         assert not (root / "tbl.old-dead3").exists()
         assert (root / "tbl.compact-live").exists()  # too young to touch
         assert (root / "tbl").exists()  # real tables untouched

@@ -1083,10 +1083,13 @@ class TestCdcMergeStream:
 
     @staticmethod
     def _base(spark, path):
-        spark.createDataFrame(
-            [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)],
-            "k long, status string, price double",
-        ).coalesce(1).write.mode("overwrite").parquet(path)
+        from syncflux_spark.txtable import TxTable
+
+        rows = [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)]
+        TxTable.create(
+            spark, path,
+            spark.createDataFrame(rows, "k long, status string, price double"),
+        )
 
     @staticmethod
     def _changes(spark, path, rows):

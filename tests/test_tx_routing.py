@@ -15,12 +15,25 @@ import os
 from datetime import datetime, timezone
 
 import pytest
+from pyspark.sql import types as T
 
 from syncflux_spark.txtable import TxTable
+
+_SCHEMA = T.StructType([T.StructField("k", T.IntegerType())])
 
 
 def _df(spark, rows, schema="k int, v string"):
     return spark.createDataFrame(rows, schema)
+
+
+def _fake_commit(t, add, remove=(), stats=None):
+    """Commit synthetic group names through the real commit loop."""
+    return t._commit(
+        lambda _state, _stage: {
+            "add": add, "remove": list(remove), "stats": stats or {},
+            "schema": _SCHEMA,
+        }
+    )
 
 
 class TestLogCheckpointing:
@@ -28,15 +41,15 @@ class TestLogCheckpointing:
         """The headline bound: after 5,000 delta commits, resolving
         the latest snapshot reads at most checkpoint_interval + 1
         commit documents — not 5,000. Commits are fabricated through
-        the real commit path (_commit_next) with synthetic group
-        names so the test exercises log mechanics, not parquet IO."""
+        the real commit loop (_commit) with synthetic group names so
+        the test exercises log mechanics, not parquet IO."""
         root = str(tmp_path / "t")
         t = TxTable.ensure(spark, root, checkpoint_interval=100)
         expect: list[str] = []
         for i in range(5000):
             rel = f"data/g{i:05d}.parquet"
             remove = [expect.pop(0)] if i % 7 == 3 else []
-            t._commit_next([rel], remove, {rel: {"ts_ns": [i, i + 1]}})
+            _fake_commit(t, [rel], remove, {rel: {"ts_ns": [i, i + 1]}})
             expect = [r for r in expect if r not in remove] + [rel]
         assert t.version() == 5000
 
@@ -44,7 +57,7 @@ class TestLogCheckpointing:
         orig = TxTable._read_doc
         try:
             TxTable._read_doc = lambda self, v: (reads.append(v), orig(self, v))[1]
-            files, stats, _tags = t._state_at(t.version())
+            files, stats, _tags, _schema = t._state_at(t.version())
         finally:
             TxTable._read_doc = orig
         assert files == expect
@@ -57,6 +70,27 @@ class TestLogCheckpointing:
         assert "files" in t._read_doc(4900)
         assert "files" not in t._read_doc(4901)
 
+    def test_replace_tagged_resolves_its_parent_in_one_walk(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A replace_tagged whose parent is version 99 of an
+        interval-100 table reads each log document at most once: the
+        schema check, the tag removals and the snapshot document it
+        writes all come from one walk of the parent's state."""
+        t = TxTable(spark, str(tmp_path / "t"), checkpoint_interval=100)
+        t._try_commit_doc(0, {"files": [], "schema": _SCHEMA.jsonValue()})
+        for v in range(1, 100):
+            t._try_commit_doc(v, {"add": [f"data/g{v:03d}.parquet"]})
+        reads = []
+        orig = TxTable._read_doc
+        monkeypatch.setattr(
+            TxTable, "_read_doc",
+            lambda self, v: (reads.append(v), orig(self, v))[1],
+        )
+        df = spark.createDataFrame([(1,)], _SCHEMA)
+        assert t.replace_tagged("win", "w", df) == 100
+        assert len(reads) <= 100, f"read {len(reads)} commit documents"
+
     def test_commit_documents_are_o1_sized(self, spark, tmp_path):
         """Delta commits must not grow with table age — the wall the
         old full-listing-per-commit format hit (txtable.py module
@@ -64,7 +98,7 @@ class TestLogCheckpointing:
         root = str(tmp_path / "t")
         t = TxTable.ensure(spark, root, checkpoint_interval=1000)
         for i in range(500):
-            t._commit_next([f"data/g{i:05d}.parquet"], [])
+            _fake_commit(t, [f"data/g{i:05d}.parquet"])
         early = os.path.getsize(t._log_path(10))
         late = os.path.getsize(t._log_path(500))
         assert late <= early + 16  # same shape, not a growing listing
@@ -92,7 +126,7 @@ class TestLogCheckpointing:
         expect: list[str] = []
         for i in range(35):
             rel = f"data/g{i:04d}.parquet"
-            t._commit_next([rel], [])
+            _fake_commit(t, [rel])
             expect.append(rel)
         removed = t.vacuum_log()
         # newest snapshot at/below v35 is v30 → versions 0..29 drop
@@ -108,7 +142,7 @@ class TestLogCheckpointing:
         root = str(tmp_path / "t")
         t = TxTable.ensure(spark, root, checkpoint_interval=10)
         for i in range(25):
-            t._commit_next([f"data/g{i:03d}.parquet"], [])
+            _fake_commit(t, [f"data/g{i:03d}.parquet"])
         hint_path = os.path.join(root, "_txlog", ".last")
         assert os.path.exists(hint_path)
         assert t.version() == 25
@@ -149,7 +183,7 @@ class TestLogRecordedSchema:
             spark.createDataFrame([(2, "b", 9.5)], "k int, v string, w double"),
             allow_new_columns=True,
         )
-        assert [f.name for f in t2._schema_at(t2.version()).fields] == [
+        assert [f.name for f in t2._state_at(t2.version())[3].fields] == [
             "k", "v", "w"
         ]
         rows = {r["k"]: r["w"] for r in t2.snapshot().collect()}
@@ -159,8 +193,8 @@ class TestLogRecordedSchema:
         assert "FileScan" in plan
 
     def test_compat_check_uses_log_not_footers(self, spark, tmp_path):
-        """With the schema in the log, the write-time retype check
-        never opens data files (snapshot() is not called)."""
+        """With the schema in the log, an append's write-time retype
+        check never opens data files (snapshot() is not called)."""
         t = TxTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
         called = []
         orig = TxTable.snapshot
@@ -168,11 +202,9 @@ class TestLogRecordedSchema:
             TxTable.snapshot = lambda self, *a, **k: (
                 called.append(1), orig(self, *a, **k)
             )[1]
-            t._check_schema_compatible(_df(spark, [(2, "b")]), False)
+            t.append(_df(spark, [(2, "b")]))
             with pytest.raises(ValueError, match="retypes"):
-                t._check_schema_compatible(
-                    spark.createDataFrame([(1, 2)], "k int, v int"), False
-                )
+                t.append(spark.createDataFrame([(1, 2)], "k int, v int"))
         finally:
             TxTable.snapshot = orig
         assert called == []
@@ -375,7 +407,7 @@ class TestTxCopyRouting:
         assert df.count() == events.where(
             (events.ts_ns >= lo) & (events.ts_ns <= lo + 3_600 * 10**9)
         ).count()
-        files, stats, _tags = t._state_at(t.version())
+        files, stats, _tags, _schema = t._state_at(t.version())
         assert len(files) == 4
         for rel in files:
             row = spark.read.parquet(os.path.join(t.root, rel)).agg(
@@ -395,7 +427,7 @@ class TestTxCopyRouting:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup("stats-on-write")) == 1
-        assert t._stats_at(t.version()) == {
+        assert t._state_at(t.version())[1] == {
             rel: {"ts_ns": [0, 999]} for rel in t._files_at(t.version())
         }
 
@@ -514,7 +546,7 @@ class TestTxRetention:
             stats_cols=["ts_ns"],
         )
         t.expire_below("ts_ns", 10)
-        tags = t._tags_at(t.version())
+        tags = t._state_at(t.version())[2]
         assert any(v.get("win") == "w1" for v in tags.values())
         # window replay still replaces the rewritten group
         t.replace_tagged(
@@ -546,7 +578,7 @@ class TestTxReplicationStream:
         assert rs.read_replica().count() == src_n
         # batches are tagged commits in the table's log
         t = TxTable(spark, str(tmp_path / "dst"))
-        tags = t._tags_at(t.version())
+        tags = t._state_at(t.version())[2]
         assert any(v.get("batch") == "0" for v in tags.values())
 
     @pytest.mark.parametrize("fmt", ["dir", "delta", ""])

@@ -123,9 +123,9 @@ class TestVacuum:
 
 class TestCdcStreamOnTxTable:
     def test_stream_merge_through_commit_log(self, spark, tmp_path):
-        """CdcMergeStream(base_format='tx'): the same streaming MERGE,
-        committed through the transaction log — replay-idempotent AND
-        safe against concurrent writers on the base."""
+        """CdcMergeStream: the streaming MERGE commits through the
+        transaction log — replay-idempotent AND safe against
+        concurrent writers on the base."""
         from syncflux_spark.streaming.cdc import CdcMergeStream
 
         base = str(tmp_path / "base")
@@ -142,17 +142,13 @@ class TestCdcStreamOnTxTable:
             [(2, "U", "b2", 22.0), (3, "I", "c", 30.0)],
             "k long, op string, status string, price double",
         ).coalesce(1).write.mode("append").parquet(ch)
-        s = CdcMergeStream(
-            spark, ch, base, ckpt, key_col="k", base_format="tx"
-        )
+        s = CdcMergeStream(spark, ch, base, ckpt, key_col="k")
         assert s.run_available() == 1
         got = {r.k: (r.status, r.price) for r in s.read_base().collect()}
         assert got == {1: ("a", 10.0), 2: ("b2", 22.0), 3: ("c", 30.0)}
         assert TxTable(spark, base).version() == 1
         # second catch-up with no new files: no new commit
-        s2 = CdcMergeStream(
-            spark, ch, base, ckpt, key_col="k", base_format="tx"
-        )
+        s2 = CdcMergeStream(spark, ch, base, ckpt, key_col="k")
         assert s2.run_available() == 0
         assert TxTable(spark, base).version() == 1
 
@@ -315,6 +311,21 @@ class TestWriteAuditPublish:
             )
         assert t.snapshot().count() == 5
 
+    def test_retyping_publish_raises_and_leaves_no_group(self, spark, tmp_path):
+        root = str(tmp_path / "wap3")
+        t = TxTable.create(
+            spark, root, spark.createDataFrame([(1, 1.0)], "k long, v double")
+        )
+        with pytest.raises(ValueError, match="conflicts"):
+            t.publish_with_audit(
+                spark.createDataFrame([(2, "x")], "k long, v string"),
+                lambda c: True,
+            )
+        assert t.version() == 0
+        assert [(r.k, r.v) for r in t.snapshot().collect()] == [(1, 1.0)]
+        live = {x.split("/")[-1] for x in t._files_at(t.version())}
+        assert set(os.listdir(os.path.join(root, "data"))) == live
+
 
 class TestSchemaEvolution:
     def test_new_column_appends_and_merges(self, spark, tmp_path):
@@ -371,6 +382,45 @@ class TestSchemaEvolution:
                 ),
                 allow_new_columns=True,
             )
+
+    def test_check_runs_against_the_parent_the_commit_lands_on(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A concurrent append adds ``x long`` while this writer's
+        ``x string`` group is written: the retry re-checks against the
+        winner's schema and raises instead of committing it."""
+        root = str(tmp_path / "ev4")
+        t = TxTable.create(
+            spark, root, spark.createDataFrame([(1, 1.0)], "k long, v double")
+        )
+        write_group = TxTable._write_group
+        raced = []
+
+        def racing_write(self, *args, **kwargs):
+            out = write_group(self, *args, **kwargs)
+            if not raced:
+                raced.append(1)
+                TxTable(spark, root).append(
+                    spark.createDataFrame(
+                        [(2, 2.0, 7)], "k long, v double, x long"
+                    ),
+                    allow_new_columns=True,
+                )
+            return out
+
+        monkeypatch.setattr(TxTable, "_write_group", racing_write)
+        with pytest.raises(ValueError, match="conflicts"):
+            t.replace_tagged(
+                "win", "w1",
+                spark.createDataFrame(
+                    [(3, 3.0, "s")], "k long, v double, x string"
+                ),
+                allow_new_columns=True,
+            )
+        assert t.version() == 1
+        assert {r.k: r.x for r in t.snapshot().collect()} == {1: None, 2: 7}
+        live = {x.split("/")[-1] for x in t._files_at(t.version())}
+        assert set(os.listdir(os.path.join(root, "data"))) == live
 
 
 class TestWapConcurrency:

@@ -1,6 +1,6 @@
 """Model-based property test for TxTable: a random sequence of
-append / replace_tagged / expire_below / compact_tx_tagged /
-vacuum / vacuum_log operations must leave the table equal to a plain
+append / publish_with_audit / replace_tagged / expire_below /
+compact_tx_tagged / compact_txtable / vacuum / vacuum_log operations must leave the table equal to a plain
 Python dict model at every step — rows, window contents, version
 monotonicity, and log resolvability all at once.
 
@@ -21,8 +21,8 @@ from syncflux_spark.txtable import TxTable
 OPS = st.lists(
     st.tuples(
         st.sampled_from(
-            ["replace", "replace", "replace", "append", "expire",
-             "compact", "vacuum", "vacuum_log"]
+            ["replace", "replace", "replace", "append", "publish",
+             "expire", "compact", "overwrite", "vacuum", "vacuum_log"]
         ),
         st.integers(min_value=0, max_value=3),
         st.integers(min_value=1, max_value=3),
@@ -76,6 +76,9 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops):
         elif kind == "append":
             t.append(df, stats_cols=["ts_ns"])
             untagged.extend(rows)
+        elif kind == "publish":
+            t.publish_with_audit(df, lambda c: True, stats_cols=["ts_ns"])
+            untagged.extend(rows)
         elif kind == "expire":
             cutoff = win * 100  # expire everything below window `win`
             t.expire_below("ts_ns", cutoff)
@@ -88,6 +91,13 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops):
             from syncflux_spark.operators.compact import compact_tx_tagged
 
             compact_tx_tagged(spark, root, stats_cols=["ts_ns"], min_files=1)
+        elif kind == "overwrite" and model_rows():  # needs a data group
+            from syncflux_spark.operators.compact import compact_txtable
+
+            # overwrite drops tags: every window's rows become untagged
+            compact_txtable(spark, root)
+            for w in list(windows):
+                untagged.extend(windows.pop(w))
         elif kind == "vacuum":
             t.vacuum(older_than_s=0.0)
         elif kind == "vacuum_log":
@@ -96,7 +106,7 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops):
     # the log still resolves end-to-end, with no duplicate live groups
     v = t.version()
     assert v >= 0
-    files, _stats, _tags = t._state_at(v)
+    files, _stats, _tags, _schema = t._state_at(v)
     assert len(files) == len(set(files))
 
 
