@@ -9,7 +9,10 @@ retention pass and a nightly compactor) can interleave a rewrite and
 leave a mixed directory. The copy and replication sinks and
 streaming/cdc.py's CdcMergeStream commit to txtable.TxTable instead
 (OCC, no lock). For the two writers above, this module makes the
-single-writer contract ENFORCED rather than assumed:
+single-writer contract ENFORCED rather than assumed; the /write sink
+(sources/line_protocol.py::LineProtocolSink) renames its staged files
+into a measurement directory under the same lock, so a compaction's
+read and swap never drop a file published in between:
 
 * :func:`table_lock` — advisory mutual exclusion scoped to a target
   directory, acquired by atomically creating ``<dir>/../.<name>.lock``

@@ -30,23 +30,24 @@ import uuid
 from pyspark.sql import SparkSession
 
 
-def dataset_bytes(path: str) -> int:
-    """Total bytes of data files under ``path`` (driver-side walk)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
+def _data_files(path: str):
+    """Paths of the data files under ``path``: what Spark's reader
+    sees, so ``_``/``.`` files and directories (metadata, a /write
+    stage still in flight) are skipped."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for f in files:
             if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+                yield os.path.join(root, f)
+
+
+def dataset_bytes(path: str) -> int:
+    """Total bytes of data files under ``path`` (driver-side walk)."""
+    return sum(os.path.getsize(f) for f in _data_files(path))
 
 
 def data_file_count(path: str) -> int:
-    return sum(
-        1
-        for _root, _dirs, files in os.walk(path)
-        for f in files
-        if not f.startswith(("_", "."))
-    )
+    return sum(1 for _ in _data_files(path))
 
 
 def compact_parquet(
@@ -71,9 +72,10 @@ def compact_parquet(
     return data_file_count(path)
 
 
-#: staging/backup directory name fragments compact_parquet's swap
-#: creates — a crash between write and rename leaves them behind
-_STAGING_MARKERS = (".compact-", ".old-")
+#: staging/backup directory name fragments compact_parquet's swap and
+#: LineProtocolSink's stages create — a crash between write and
+#: rename leaves them behind
+_STAGING_MARKERS = (".compact-", ".old-", ".write-")
 
 
 def clean_stale_staging(
@@ -81,7 +83,8 @@ def clean_stale_staging(
 ) -> list[str]:
     """Remove orphaned staging/backup directories left by a writer
     that crashed between its staging write and the atomic swap
-    (``<table>.compact-xxxx``, ``<table>.old-xxxx``). Only
+    (``<table>.compact-xxxx``, ``<table>.old-xxxx``,
+    ``<table>/.write-xxxx``). Only
     directories idle for ``older_than_s`` seconds go — a LIVE
     writer's staging dir is younger than that by construction (its
     lock also still exists, but age alone is the safe test: the lock

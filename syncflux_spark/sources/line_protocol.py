@@ -34,12 +34,20 @@ connector's codec either way.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: field type names accepted by parse_line_protocol (the reference's
 #: field-schema types, SURVEY §1.2; uint maps to decimal like X5)
 FIELD_TYPES = ("float", "integer", "unsigned", "boolean", "string")
+
+#: file LineProtocolSink writes into each stage before its Spark job
+#: (a leading ``_`` keeps it out of every parquet reader)
+_STAGE_MARKER = "_write"
 
 
 def _esc_name(c: Column) -> Column:
@@ -223,8 +231,9 @@ def parse_line_protocol(
 
 class LineProtocolSink:
     """HTTP-ingestion sink: accept an InfluxDB ``/write`` body (many
-    line-protocol lines, possibly mixed measurements) and append the
-    typed rows to per-measurement parquet directories.
+    line-protocol lines, possibly mixed measurements) and land the
+    typed rows in per-measurement parquet directories
+    (``<root>/<measurement>/*.parquet``).
 
     This is the receiving end of the reference's WriteDB
     (pkg/agent/client.go:531-559 posts exactly these bodies) — with
@@ -234,6 +243,20 @@ class LineProtocolSink:
     measurement routing is O(request), not a data-plane loop; bulk
     ingestion of LP *files* goes through :func:`parse_line_protocol`
     on a distributed scan instead.
+
+    One Spark job per measurement of a body: the parse is written
+    once into a hidden stage directory inside the measurement
+    directory (``<root>/<measurement>/.write-<uuid>/``, which Spark's
+    reader skips), and the missing-timestamp / type-conflict counts
+    ride that write pass as a ``df.observe`` observation instead of a
+    second parse. A body publishes only once every measurement's
+    stage passes: the staged part files are renamed into the
+    measurement directory under ``locking.table_lock`` — the lock
+    ``compact_parquet`` holds for its read and swap — so a published
+    file is either compacted in or lands in the swapped-in directory.
+    A rejected body (or one whose stage a concurrent compaction moved
+    away) lands nothing; a crashed writer's stage is swept by
+    ``compact.clean_stale_staging``.
 
     Append-only by design: InfluxDB upserts duplicate points at write
     time; here duplicates collapse at read time via the last-write-
@@ -264,13 +287,13 @@ class LineProtocolSink:
     }
 
     def write(self, body: str, precision: str = "ns") -> int:
-        """Parse + append one request body; returns points written.
+        """Parse + land one request body; returns points written.
         Raises ValueError for unknown measurements, unparseable
         lines, or a bad ``precision`` (the caller maps this to HTTP
-        400). ``precision`` scales bare line timestamps to ns — the
-        reference's WriteDB posts with a configurable precision
-        (pkg/agent/client.go) and Telegraf commonly posts seconds."""
-        import os
+        400) — and then nothing of the body lands. ``precision``
+        scales bare line timestamps to ns — the reference's WriteDB
+        posts with a configurable precision (pkg/agent/client.go) and
+        Telegraf commonly posts seconds."""
         import re
 
         if precision not in self.PRECISION_NS:
@@ -288,36 +311,80 @@ class LineProtocolSink:
             if meas not in self.schemas:
                 raise ValueError(f"unknown measurement {meas!r}")
             by_meas.setdefault(meas, []).append(ln)
-        total = 0
-        for meas, ls in by_meas.items():
-            tags, fields = self.schemas[meas]
-            df = self.spark.createDataFrame([(x,) for x in ls], "line string")
-            parsed = parse_line_protocol(df, tags, fields, with_conflicts=True)
-            if factor != 1:
-                parsed = parsed.withColumn(
-                    "ts_ns", F.col("ts_ns") * F.lit(factor)
+        stages: dict[str, str] = {}
+        try:
+            for meas, ls in by_meas.items():
+                stages[meas] = os.path.join(
+                    self.root, meas, f".write-{uuid.uuid4().hex}"
                 )
-            diag = parsed.agg(
-                F.sum(F.col("ts_ns").isNull().cast("long")).alias("no_ts"),
-                F.sum(F.col("_type_conflict").cast("long")).alias("conflicts"),
-            ).collect()[0]
-            if diag.no_ts:
-                raise ValueError(f"{diag.no_ts} line(s) missing a timestamp")
-            if diag.conflicts:
-                # InfluxDB 1.x: partial write rejected with a field
-                # type conflict — mapped to HTTP 400 by the caller
-                raise ValueError(
-                    f"field type conflict: {diag.conflicts} line(s) for "
-                    f"measurement {meas!r} carry a value whose syntax "
-                    f"does not match the declared field type"
-                )
-            parsed.drop("measurement", "_type_conflict").write.mode(
-                "append"
-            ).parquet(os.path.join(self.root, meas))
-            total += len(ls)
-        return total
+                self._stage(stages[meas], meas, ls, factor)
+            self._publish(stages)
+        finally:
+            for stage in stages.values():
+                shutil.rmtree(stage, ignore_errors=True)
+        return len(lines)
+
+    def _stage(self, stage: str, meas: str, lines: list[str], factor: int) -> None:
+        """Parse ``lines`` and write them, in one Spark job, into the
+        fresh hidden directory ``stage``. The stage holds a ``_write``
+        marker so that :meth:`_publish` can tell it from a directory
+        the job re-created after a compaction swap moved the original
+        away. Raises ValueError when a line has no timestamp or a
+        field type conflict."""
+        from pyspark.sql import Observation
+
+        tags, fields = self.schemas[meas]
+        os.makedirs(stage)
+        open(os.path.join(stage, _STAGE_MARKER), "w").close()
+        df = self.spark.createDataFrame([(x,) for x in lines], "line string")
+        parsed = parse_line_protocol(df, tags, fields, with_conflicts=True)
+        if factor != 1:
+            parsed = parsed.withColumn("ts_ns", F.col("ts_ns") * F.lit(factor))
+        obs = Observation()
+        parsed = parsed.observe(
+            obs,
+            F.sum(F.col("ts_ns").isNull().cast("long")).alias("no_ts"),
+            F.sum(F.col("_type_conflict").cast("long")).alias("conflicts"),
+        )
+        parsed.drop("measurement", "_type_conflict").write.mode(
+            "append"
+        ).parquet(stage)
+        diag = obs.get
+        if diag["no_ts"]:
+            raise ValueError(f"{diag['no_ts']} line(s) missing a timestamp")
+        if diag["conflicts"]:
+            # InfluxDB 1.x: partial write rejected with a field
+            # type conflict — mapped to HTTP 400 by the caller
+            raise ValueError(
+                f"field type conflict: {diag['conflicts']} line(s) for "
+                f"measurement {meas!r} carry a value whose syntax "
+                f"does not match the declared field type"
+            )
+
+    def _publish(self, stages: dict[str, str]) -> None:
+        """Rename every stage's part files into its measurement
+        directory, holding each measurement's table lock (taken in
+        name order), after checking that every stage is still the one
+        :meth:`_stage` made — a compaction swap between the stage
+        write and this lock moved it away with the old directory."""
+        from contextlib import ExitStack
+
+        from syncflux_spark.locking import table_lock
+
+        with ExitStack() as locks:
+            for meas in sorted(stages):
+                locks.enter_context(table_lock(os.path.join(self.root, meas)))
+            for meas, stage in stages.items():
+                if not os.path.exists(os.path.join(stage, _STAGE_MARKER)):
+                    raise RuntimeError(
+                        f"stage of measurement {meas!r} was moved away by "
+                        "a concurrent compaction; nothing was written"
+                    )
+            for meas, stage in stages.items():
+                dest = os.path.join(self.root, meas)
+                for f in os.listdir(stage):
+                    if f.startswith("part-"):
+                        os.replace(os.path.join(stage, f), os.path.join(dest, f))
 
     def read_measurement(self, measurement: str):
-        import os
-
         return self.spark.read.parquet(os.path.join(self.root, measurement))

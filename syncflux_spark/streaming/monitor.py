@@ -83,12 +83,18 @@ class HAMonitor:
 
     # -- M1: probe + update ------------------------------------------------
     def check_once(self, now: datetime | None = None) -> ClusterStatus:
-        """One supervisor tick (checkCluster, hacluster.go:266-370)."""
+        """One supervisor tick (checkCluster, hacluster.go:266-370).
+
+        The probes and the backfill run outside the status lock, so
+        ``get_status()`` never waits on them: the ``RECOVERING``
+        transition is committed under the lock first, and other
+        threads see it for as long as ``recover`` runs."""
         now = now or _utcnow()
+        master_ok = self._safe(self.master_probe)
+        slave_ok = self._safe(self.slave_probe)
+        recovering = False
         with self._lock:
             st = self.status
-            master_ok = self._safe(self.master_probe)
-            slave_ok = self._safe(self.slave_probe)
             st.master_state = master_ok
             st.slave_state = slave_ok
             if master_ok:
@@ -100,25 +106,24 @@ class HAMonitor:
                     # hacluster.go:294-313: mark down; remember the
                     # last-known-good minus one interval as gap start
                     st.cluster_state = ClusterState.CHECK_SLAVE_DOWN
-            elif st.cluster_state == ClusterState.CHECK_SLAVE_DOWN:
-                if slave_ok:
-                    st.cluster_state = ClusterState.RECOVERING
-                    st.recovering_since = now
-                    gap_start = (
-                        (st.slave_last_ok or now) - self.check_interval
-                    )
-                    t0 = time.monotonic()
-                    if self.recover is not None:
-                        self._safe(lambda: self.recover(gap_start, now))
-                    st.last_recovery_duration = time.monotonic() - t0
-                    st.num_recovers += 1
-                    st.slave_last_ok = now
-                    st.cluster_state = ClusterState.OK
-                    st.recovering_since = None
-            # RECOVERING is transient within a tick here because the
-            # backfill call is synchronous; kept as a distinct state for
-            # API parity (a long-running recover shows RECOVERING from
-            # other threads via get_status()).
+            elif st.cluster_state == ClusterState.CHECK_SLAVE_DOWN and slave_ok:
+                st.cluster_state = ClusterState.RECOVERING
+                st.recovering_since = now
+                gap_start = (st.slave_last_ok or now) - self.check_interval
+                recovering = True
+            # a tick that meets RECOVERING (another tick's backfill is
+            # still running) only refreshes the probe states
+            if not recovering:
+                return self.get_status()
+        t0 = time.monotonic()
+        if self.recover is not None:
+            self._safe(lambda: self.recover(gap_start, now))
+        with self._lock:
+            st.last_recovery_duration = time.monotonic() - t0
+            st.num_recovers += 1
+            st.slave_last_ok = now
+            st.cluster_state = ClusterState.OK
+            st.recovering_since = None
             return self.get_status()
 
     @staticmethod

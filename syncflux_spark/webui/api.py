@@ -532,6 +532,10 @@ class StatusServer:
                         server._count("write_errors_total")
                         self._send(400, {"error": str(ex)})
                         return
+                    except Exception as ex:  # noqa: BLE001 — never a 204
+                        server._count("write_errors_total")
+                        self._send(500, {"error": f"{type(ex).__name__}: {ex}"})
+                        return
                     server._count("points_written_total", written)
                     # influx answers 204 No Content on success
                     self.send_response(204)

@@ -181,3 +181,188 @@ class TestFieldTypeConflicts:
             assert "conflict" in ei.value.read().decode()
         finally:
             srv.stop()
+
+
+class TestStagedWrite:
+    """``LineProtocolSink.write`` parses each measurement once, in one
+    Spark job that writes a hidden stage, and publishes the staged
+    part files by rename only when the whole body passes."""
+
+    SCHEMAS = {
+        "cpu": (["h"], {"v": "float"}),
+        "mem": (["h"], {"n": "integer"}),
+    }
+
+    @pytest.fixture()
+    def sink(self, spark, tmp_path):
+        from syncflux_spark.sources.line_protocol import LineProtocolSink
+
+        return LineProtocolSink(spark, str(tmp_path), self.SCHEMAS)
+
+    @staticmethod
+    def _entries(sink):
+        """Every file and directory name under the sink's root."""
+        import os
+
+        return sorted(
+            os.path.relpath(os.path.join(d, n), sink.root)
+            for d, dirs, files in os.walk(sink.root)
+            for n in dirs + files
+        )
+
+    def test_single_measurement_write_runs_one_job(self, sink, spark):
+        body = "\n".join(
+            f"cpu,h=a v={i}.5 {1700000000000000000 + i}" for i in range(500)
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("lp-one-job", "lp-one-job")
+        try:
+            assert sink.write(body) == 500
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("lp-one-job")) == 1
+
+    def test_accepted_rows_sit_directly_under_measurement_dir(self, sink):
+        import glob
+        import os
+
+        sink.write("cpu,h=a v=1.5 1700000000000000000\n"
+                   "mem,h=a n=2i 1700000000000000000")
+        for meas in ("cpu", "mem"):
+            d = os.path.join(sink.root, meas)
+            assert glob.glob(os.path.join(d, "part-*.parquet"))
+            assert [e for e in os.listdir(d) if os.path.isdir(os.path.join(d, e))] == []
+        assert sink.read_measurement("mem").collect()[0].n == 2
+
+    @pytest.mark.parametrize(
+        "body, match",
+        [
+            ("cpu,h=a v=1.5", "missing a timestamp"),
+            ("cpu,h=a v=1i 1700000000000000000", "field type conflict"),
+        ],
+    )
+    def test_rejected_body_leaves_no_part_file_and_no_stage(self, sink, body, match):
+        with pytest.raises(ValueError, match=match):
+            sink.write(body)
+        assert not [e for e in self._entries(sink)
+                    if e.endswith(".parquet") or ".write-" in e]
+
+    def test_rejected_body_lands_nothing(self, sink):
+        """A conflict on the second measurement of a body keeps the
+        first measurement's valid rows off disk too."""
+        with pytest.raises(ValueError, match="field type conflict"):
+            sink.write("cpu,h=a v=1.5 1700000000000000000\n"
+                       "mem,h=a n=1.5 1700000000000000000")
+        assert not [e for e in self._entries(sink)
+                    if e.endswith(".parquet") or ".write-" in e]
+
+    def test_orphaned_stage_is_hidden_and_swept(self, sink, spark):
+        import os
+        import time
+
+        from syncflux_spark.operators.compact import (
+            clean_stale_staging,
+            data_file_count,
+            dataset_bytes,
+        )
+
+        sink.write("cpu,h=a v=1.5 1700000000000000000")
+        meas_dir = os.path.join(sink.root, "cpu")
+        files, nbytes = data_file_count(meas_dir), dataset_bytes(meas_dir)
+        # a writer that crashed after its stage write, before publish
+        orphan = os.path.join(meas_dir, ".write-dead")
+        spark.createDataFrame([("b", 9.5, 1)], "h string, v double, ts_ns long") \
+            .write.parquet(orphan)
+        assert [r.h for r in sink.read_measurement("cpu").collect()] == ["a"]
+        assert (data_file_count(meas_dir), dataset_bytes(meas_dir)) == (files, nbytes)
+
+        assert clean_stale_staging(meas_dir, older_than_s=3600) == []
+        old = time.time() - 7200
+        os.utime(orphan, (old, old))
+        assert clean_stale_staging(meas_dir, older_than_s=3600) == [orphan]
+        assert not os.path.exists(orphan)
+        assert [r.h for r in sink.read_measurement("cpu").collect()] == ["a"]
+
+    def test_compaction_loses_no_acknowledged_write(self, sink, spark):
+        """A writer thread beside five ``compact_parquet`` passes, one
+        every ~1.2 s: every point a write acknowledged reads back.
+        A write whose stage a swap moved away fails instead."""
+        import os
+        import threading
+
+        from syncflux_spark.operators.compact import compact_parquet
+
+        meas_dir = os.path.join(sink.root, "cpu")
+        sink.write("cpu,h=seed v=0.5 1600000000000000000")
+        acked = {1600000000000000000}
+        done = threading.Event()
+        attempts = []
+
+        def writer():
+            b = 0
+            while not done.is_set():
+                ts = [1700000000000000000 + b * 1000 + i for i in range(20)]
+                body = "\n".join(f"cpu,h=w v={b}.5 {t}" for t in ts)
+                b += 1
+                try:
+                    sink.write(body)
+                except Exception:  # noqa: BLE001 — not acknowledged
+                    attempts.append(False)
+                    continue
+                acked.update(ts)
+                attempts.append(True)
+
+        t = threading.Thread(target=writer)
+        t.start()
+        try:
+            for _ in range(5):
+                done.wait(1.2)
+                compact_parquet(spark, meas_dir, target_file_bytes=10**9)
+        finally:
+            done.set()
+            t.join(timeout=120)
+        assert not t.is_alive()
+        got = {r.ts_ns for r in sink.read_measurement("cpu").select("ts_ns").collect()}
+        assert sum(attempts) >= 2, attempts
+        assert acked <= got, f"{len(acked - got)} acknowledged points lost"
+        assert got <= acked  # nothing unacknowledged landed either
+
+    def test_stage_moved_by_compaction_answers_500(self, sink, spark, monkeypatch):
+        """A compaction swap between the stage write and the publish
+        takes the stage with the old directory: the write answers 500
+        (counted as a write error), never 204, and lands nothing."""
+        import os
+        import urllib.error
+        import urllib.request
+
+        from syncflux_spark.operators.compact import compact_parquet
+        from syncflux_spark.streaming.monitor import HAMonitor
+        from syncflux_spark.webui.api import StatusServer
+
+        sink.write("cpu,h=a v=1.5 1700000000000000000")
+        publish = type(sink)._publish
+
+        def swap_then_publish(self, stages):
+            compact_parquet(spark, os.path.join(self.root, "cpu"))
+            publish(self, stages)
+
+        monkeypatch.setattr(type(sink), "_publish", swap_then_publish)
+        mon = HAMonitor(master_probe=lambda: True, slave_probe=lambda: True)
+        mon.check_once()
+        srv = StatusServer(mon, port=0, write_sink=sink)
+        port = srv.start()
+        try:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}/write",
+                data=b"cpu,h=b v=2.5 1700000000000000001",
+            )
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(req)
+            assert ei.value.code == 500
+            assert "moved away" in ei.value.read().decode()
+            with urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics") as r:
+                metrics = r.read().decode()
+            assert "syncflux_write_errors_total 1" in metrics
+        finally:
+            srv.stop()
+        assert [r.h for r in sink.read_measurement("cpu").collect()] == ["a"]

@@ -152,6 +152,45 @@ class TestHAMonitor:
         assert st.cluster_state == ClusterState.OK
         assert st.num_recovers == 1
 
+    def test_status_reads_recovering_without_waiting(self):
+        """``get_status()`` during a 2 s backfill returns at once and
+        says RECOVERING: the backfill runs outside the status lock."""
+        import threading
+        import time
+
+        slave_alive = {"v": False}
+        started = threading.Event()
+
+        def slow_recover(s, e):
+            started.set()
+            time.sleep(2.0)
+
+        m = HAMonitor(
+            master_probe=lambda: True,
+            slave_probe=lambda: slave_alive["v"],
+            recover=slow_recover,
+        )
+        m.check_once()
+        slave_alive["v"] = True
+        tick = threading.Thread(target=m.check_once)
+        tick.start()
+        try:
+            assert started.wait(5)
+            t0 = time.monotonic()
+            st = m.get_status()
+            waited = time.monotonic() - t0
+            # a second tick meanwhile neither blocks nor recovers again
+            assert m.check_once().cluster_state == ClusterState.RECOVERING
+        finally:
+            tick.join(timeout=10)
+        assert not tick.is_alive()
+        assert waited < 0.2
+        assert st.cluster_state == ClusterState.RECOVERING
+        assert st.recovering_since is not None
+        done = m.get_status()
+        assert done.cluster_state == ClusterState.OK
+        assert done.num_recovers == 1 and done.last_recovery_duration >= 2.0
+
 
 class TestStatefulUserTotals:
     def test_state_survives_restarts(self, spark, tmp_path):
