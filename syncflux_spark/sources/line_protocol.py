@@ -149,12 +149,15 @@ def parse_line_protocol(
     lines whose raw token for a declared field does not spell that
     field's type (InfluxDB's partial-write field-type-conflict
     condition) — conflicting values themselves decode as null, never
-    as an executor-side cast error."""
+    as an executor-side cast error.
+
+    ``ts_ns`` is null for a line without a trailing timestamp and for
+    one outside the long range; consumers decide whether that is a
+    rejection. A field key repeated within one line takes its LAST
+    value (``value=1,value=2`` reads ``value`` as 2)."""
     raw = F.col(line_col)
     head = F.regexp_extract(raw, r"^((?:\\.|[^ \\])+) ", 1)
-    # '' (line without trailing timestamp) → null, not an ANSI cast
-    # error — consumers decide whether null ts is a rejection
-    ts = F.nullif(F.regexp_extract(raw, r" (\d+)$", 1), F.lit("")).cast("long")
+    ts = F.regexp_extract(raw, r" (\d+)$", 1).try_cast("long")
     fseg = F.regexp_extract(raw, r"^(?:\\.|[^ \\])+ (.*) \d+$", 1)
 
     meas = _unesc(F.regexp_extract(head, r"^((?:\\.|[^,\\])+)", 1))
@@ -164,16 +167,16 @@ def parse_line_protocol(
         v = F.regexp_extract(head, pat, 1)
         return F.when(v != "", _unesc(v)).alias(t)
 
-    # tokenize once, build a key→raw-value map, then pull declared keys
-    toks = F.regexp_extract_all(fseg, F.lit(_FIELD_TOKEN), 0)
-    entries = F.transform(
-        toks,
-        lambda tok: F.struct(
-            _unesc(F.regexp_extract(tok, r'^((?:\\.|[^,=\\"])+)=', 1)).alias("key"),
-            F.regexp_replace(tok, r'^(?:\\.|[^,=\\"])+=', "").alias("val"),
-        ),
-    )
-    fmap = F.map_from_entries(entries)
+    # tokenize into keys and raw values (same matches, so positions
+    # align), then look each declared key up in the REVERSED arrays: a
+    # key repeated within a line takes its last value. Keys unescape in
+    # one pass over their newline-joined string (no line holds one).
+    keys = F.regexp_extract_all(fseg, F.lit(_FIELD_TOKEN), 1)
+    keys = F.reverse(F.split(_unesc(F.array_join(keys, "\n")), "\n"))
+    vals = F.reverse(F.regexp_extract_all(fseg, F.lit(_FIELD_TOKEN), 2))
+
+    def raw_value(name: str) -> Column:
+        return F.get(vals, F.array_position(keys, F.lit(name)) - 1)
 
     def _valid(v: Column, dtype: str) -> Column:
         """Does the raw token spell a value of the DECLARED type?
@@ -195,7 +198,7 @@ def parse_line_protocol(
         # try_cast, not cast: a malformed token must surface as the
         # type-conflict diagnostic below, never an executor-side ANSI
         # cast exception halfway through a write job
-        v = fmap.getItem(name)
+        v = raw_value(name)
         if dtype == "integer":
             out = F.try_to_number(
                 F.regexp_replace(v, r"i$", ""), F.lit("S" + "9" * 18)
@@ -223,7 +226,7 @@ def parse_line_protocol(
         conflict = F.lit(False)
         for n, dt in field_types.items():
             conflict = conflict | (
-                fmap.getItem(n).isNotNull() & ~_valid(fmap.getItem(n), dt)
+                raw_value(n).isNotNull() & ~_valid(raw_value(n), dt)
             )
         cols.append(conflict.alias("_type_conflict"))
     return lines.select(*cols)
@@ -244,15 +247,18 @@ class LineProtocolSink:
     ingestion of LP *files* goes through :func:`parse_line_protocol`
     on a distributed scan instead.
 
-    One Spark job per measurement of a body: the parse is written
-    once into a hidden stage directory inside the measurement
-    directory (``<root>/<measurement>/.write-<uuid>/``, which Spark's
-    reader skips), and the missing-timestamp / type-conflict counts
-    ride that write pass as a ``df.observe`` observation instead of a
-    second parse. A body publishes only once every measurement's
-    stage passes: the staged part files are renamed into the
-    measurement directory under ``locking.table_lock`` — the lock
-    ``compact_parquet`` holds for its read and swap — so a published
+    One Spark job per measurement of a body, and no Python rows
+    handed to Spark: the measurement's lines land as UTF-8 text files
+    in a hidden stage directory inside the measurement directory
+    (``<root>/<measurement>/.write-<uuid>/_lines/``; Spark's reader
+    skips both names), Spark's text source reads them back, and the
+    parse is written once into the same stage. The bad-timestamp /
+    type-conflict counts ride that write pass as a ``df.observe``
+    observation instead of a second parse. A body publishes only once
+    every measurement's stage passes: the staged part files are
+    renamed into the measurement directory under
+    ``locking.table_lock`` — the lock ``compact_parquet`` holds for
+    its read and swap — so a published
     file is either compacted in or lands in the swapped-in directory.
     A rejected body (or one whose stage a concurrent compaction moved
     away) lands nothing; a crashed writer's stage is swept by
@@ -326,32 +332,53 @@ class LineProtocolSink:
 
     def _stage(self, stage: str, meas: str, lines: list[str], factor: int) -> None:
         """Parse ``lines`` and write them, in one Spark job, into the
-        fresh hidden directory ``stage``. The stage holds a ``_write``
-        marker so that :meth:`_publish` can tell it from a directory
-        the job re-created after a compaction swap moved the original
-        away. Raises ValueError when a line has no timestamp or a
-        field type conflict."""
+        fresh hidden directory ``stage``. The lines go to Spark as
+        UTF-8 text files under ``<stage>/_lines/``, one per default
+        parallelism slot (at most one per line), read back with
+        Spark's text source, so no Python rows cross into the JVM and
+        the parse keeps one input partition per file. The stage holds
+        a ``_write`` marker so that :meth:`_publish` can tell it from a
+        directory the job re-created after a compaction swap moved the
+        original away. Raises ValueError when a line has no timestamp,
+        one out of range after ``factor`` scaling, or a field type
+        conflict."""
         from pyspark.sql import Observation
 
         tags, fields = self.schemas[meas]
-        os.makedirs(stage)
+        src = os.path.join(stage, "_lines")
+        os.makedirs(src)
         open(os.path.join(stage, _STAGE_MARKER), "w").close()
-        df = self.spark.createDataFrame([(x,) for x in lines], "line string")
-        parsed = parse_line_protocol(df, tags, fields, with_conflicts=True)
+        n = min(len(lines), self.spark.sparkContext.defaultParallelism)
+        cuts = [i * len(lines) // n for i in range(n + 1)]
+        files = [os.path.join(src, f"{i}.lp") for i in range(n)]
+        for i, path in enumerate(files):
+            with open(path, "w", encoding="utf-8") as f:
+                f.write("\n".join(lines[cuts[i]:cuts[i + 1]]))
+        # the files by name, not the hidden directory: Spark warns on
+        # every read of a path whose own name starts with "_" or "."
+        parsed = parse_line_protocol(
+            self.spark.read.text(files), tags, fields,
+            line_col="value", with_conflicts=True,
+        )
         if factor != 1:
-            parsed = parsed.withColumn("ts_ns", F.col("ts_ns") * F.lit(factor))
+            parsed = parsed.withColumn(
+                "ts_ns", F.try_multiply(F.col("ts_ns"), F.lit(factor))
+            )
         obs = Observation()
         parsed = parsed.observe(
             obs,
-            F.sum(F.col("ts_ns").isNull().cast("long")).alias("no_ts"),
+            F.sum(F.col("ts_ns").isNull().cast("long")).alias("bad_ts"),
             F.sum(F.col("_type_conflict").cast("long")).alias("conflicts"),
         )
         parsed.drop("measurement", "_type_conflict").write.mode(
             "append"
         ).parquet(stage)
         diag = obs.get
-        if diag["no_ts"]:
-            raise ValueError(f"{diag['no_ts']} line(s) missing a timestamp")
+        if diag["bad_ts"]:
+            raise ValueError(
+                f"{diag['bad_ts']} line(s) missing a timestamp or "
+                f"carrying one out of range"
+            )
         if diag["conflicts"]:
             # InfluxDB 1.x: partial write rejected with a field
             # type conflict — mapped to HTTP 400 by the caller

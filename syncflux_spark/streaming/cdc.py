@@ -26,12 +26,19 @@ Scale notes: each micro-batch costs one base-vs-batch equality join
 once). Rewriting the base per batch is the plain-parquet trade-off —
 on a real deployment the same ``apply_changes`` plan writes through a
 table format (Delta/Iceberg MERGE) and only touched files rewrite;
-the operator and its semantics are unchanged. The reference has no
+the operator and its semantics are unchanged. Disk stays at two
+bases: each merge deletes the groups the previous merge replaced, so
+a reader of the snapshot a merge just replaced keeps its files for
+one more batch (groups replaced before a stream restart are left to
+``TxTable.vacuum``). The reference has no
 CDC surface; this is the dimension-table counterpart of its
 replication loop (pkg/agent/hacluster.go).
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +80,10 @@ class CdcMergeStream:
         self.state_partitions = state_partitions
         self.state_backend = state_backend
         self.batches_applied = 0
+        #: base groups the last merge commit replaced; deleted after
+        #: the next commit, so a reader of the snapshot the last merge
+        #: replaced keeps its files for one batch
+        self._superseded: list[str] = []
 
     # -- plumbing -----------------------------------------------------------
     def _reader(self):
@@ -124,7 +135,8 @@ class CdcMergeStream:
         ).drop("_cdc_seq", "_cdc_mtime", "_cdc_file")
         # uniqueness is guaranteed by the compaction above, so the
         # merge skips apply_changes' per-batch uniqueness-check job
-        TxTable(self.spark, self.base_path).overwrite(
+        table = TxTable(self.spark, self.base_path)
+        v = table.overwrite(
             lambda base: apply_changes(
                 base,
                 compacted,
@@ -134,6 +146,11 @@ class CdcMergeStream:
             )
         )
         self.batches_applied += 1
+        # an overwrite removes every group of its parent: those are
+        # the groups this commit superseded
+        for rel in self._superseded:
+            shutil.rmtree(os.path.join(self.base_path, rel), ignore_errors=True)
+        self._superseded = table._files_at(v - 1)
 
     # -- drive --------------------------------------------------------------
     def run_available(self) -> int:

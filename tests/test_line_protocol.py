@@ -366,3 +366,106 @@ class TestStagedWrite:
         finally:
             srv.stop()
         assert [r.h for r in sink.read_measurement("cpu").collect()] == ["a"]
+
+    def test_write_hands_spark_no_python_rows(self, sink, spark, monkeypatch):
+        """The body reaches Spark as text files, not as a local list
+        that PySpark pickles through a Python worker."""
+        from pyspark import SparkContext
+
+        def boom(*_a, **_k):
+            raise AssertionError("Python rows handed to Spark")
+
+        monkeypatch.setattr(spark, "createDataFrame", boom)
+        monkeypatch.setattr(SparkContext, "parallelize", boom)
+        assert sink.write("cpu,h=a v=1.5 1700000000000000000\n"
+                          "mem,h=a n=2i 1700000000000000000") == 2
+        monkeypatch.undo()
+        assert sink.read_measurement("cpu").collect()[0].v == 1.5
+
+    def test_non_ascii_escapes_and_crlf_round_trip(self, spark, tmp_path):
+        from syncflux_spark.sources.line_protocol import LineProtocolSink
+
+        sink = LineProtocolSink(
+            spark, str(tmp_path), {"cpu": (["h"], {"s": "string", "v": "float"})}
+        )
+        body = (
+            'cpu,h=µ\\,x\\ y s="日本 \\"q\\", z=1",v=1.5 1700000000000000000\r\n'
+            "\r\n"
+            'cpu,h=東京 s="µs",v=-2 1700000000000000001\r\n'
+            "   \r\n"
+        )
+        assert sink.write(body) == 2
+        got = {(r.h, r.s, r.v, r.ts_ns) for r in sink.read_measurement("cpu").collect()}
+        assert got == {
+            ("µ,x y", '日本 "q", z=1', 1.5, 1700000000000000000),
+            ("東京", "µs", -2.0, 1700000000000000001),
+        }
+
+    @pytest.mark.parametrize("n_lines", [1, 3])  # the session has 4 cores
+    def test_body_shorter_than_parallelism_lands(
+        self, sink, spark, monkeypatch, n_lines
+    ):
+        """A body with fewer lines than the default parallelism lands
+        every line, and no ``_lines`` entry is ever published."""
+        import os
+
+        published = []
+        publish = type(sink)._publish
+
+        def publish_and_list(self, stages):
+            publish(self, stages)
+            published.extend(os.listdir(os.path.join(self.root, "cpu")))
+
+        monkeypatch.setattr(type(sink), "_publish", publish_and_list)
+        assert n_lines < spark.sparkContext.defaultParallelism
+        ts = [1700000000000000000 + i for i in range(n_lines)]
+        body = "\n".join(f"cpu,h=a v={i}.5 {t}" for i, t in enumerate(ts))
+        assert sink.write(body) == n_lines
+        rows = sink.read_measurement("cpu").collect()
+        assert sorted((r.ts_ns, r.v) for r in rows) == [
+            (t, i + 0.5) for i, t in enumerate(ts)
+        ]
+        assert published
+        assert not [e for e in published if e == "_lines" or e.endswith(".lp")]
+        assert not [e for e in self._entries(sink)
+                    if "_lines" in e or e.endswith(".lp")]
+
+    def test_repeated_field_key_keeps_last_value(self, sink):
+        """``v=1,v=2`` reads as v=2 and the body's other lines land
+        with it (the parent failed the whole body with a 500)."""
+        assert sink.write("cpu,h=a v=1,v=2 1700000000000000000\n"
+                          "cpu,h=b v=3 1700000000000000001") == 2
+        got = {(r.h, r.v) for r in sink.read_measurement("cpu").collect()}
+        assert got == {("a", 2.0), ("b", 3.0)}
+
+    @pytest.mark.parametrize(
+        "body, precision",
+        [
+            ("cpu,h=a v=1 99999999999999999999", "ns"),  # beyond a long
+            ("cpu,h=a v=1 1700000000000000000", "s"),  # overflows when scaled
+        ],
+    )
+    def test_out_of_range_timestamp_answers_400(self, sink, body, precision):
+        import urllib.error
+        import urllib.request
+
+        from syncflux_spark.streaming.monitor import HAMonitor
+        from syncflux_spark.webui.api import StatusServer
+
+        mon = HAMonitor(master_probe=lambda: True, slave_probe=lambda: True)
+        mon.check_once()
+        srv = StatusServer(mon, port=0, write_sink=sink)
+        port = srv.start()
+        try:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}/write?precision={precision}",
+                data=f"cpu,h=ok v=0.5 1\n{body}".encode(),
+            )
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(req)
+            assert ei.value.code == 400
+            assert "out of range" in ei.value.read().decode()
+        finally:
+            srv.stop()
+        assert not [e for e in self._entries(sink)
+                    if e.endswith(".parquet") or ".write-" in e]

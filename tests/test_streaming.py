@@ -1271,6 +1271,33 @@ class TestCdcMergeStream:
         s._apply_batch(batch, batch_id=99)  # replay
         assert sorted(map(tuple, s.read_base().collect())) == once
 
+    def test_merges_keep_at_most_two_bases_on_disk(self, spark, tmp_path):
+        """Each merge deletes the base the previous merge replaced:
+        three one-file batches leave the live base plus the one it
+        replaced (the parent left all four), and the merged state is
+        that of every batch applied."""
+        from syncflux_spark.streaming.cdc import CdcMergeStream
+
+        base = str(tmp_path / "base")
+        ch = str(tmp_path / "ch")
+        ckpt = str(tmp_path / "ckpt")
+        self._base(spark, base)
+        self._changes(spark, ch, [(2, "U", "b2", 22.0)])
+        self._changes(spark, ch, [(3, "D", None, None)])
+        self._changes(spark, ch, [(5, "I", "e", 50.0)])
+        s = CdcMergeStream(
+            spark, ch, base, ckpt, key_col="k", max_files_per_trigger=1
+        )
+        assert s.run_available() == 3
+        assert len(os.listdir(os.path.join(base, "data"))) <= 2
+        got = {r.k: (r.status, r.price) for r in s.read_base().collect()}
+        assert got == {
+            1: ("a", 10.0),
+            2: ("b2", 22.0),
+            4: ("d", 40.0),
+            5: ("e", 50.0),
+        }
+
 
 class TestStreamingQuantileSketch:
     def test_state_survives_restart_and_matches_batch(self, spark, tmp_path):
