@@ -116,7 +116,6 @@ HEADLINE = [
     "gopher_quality_flags",
     "c4_filter_flags",
     "entity_match_pairs",
-    "cdc_merge_apply",
     "influxql_holt_winters",
     "influxql_ema_daily",
     "bpe_tokenize_stats",
@@ -149,14 +148,10 @@ HEADLINE = [
     "ivf_topk_kmeans",  # k-means|| quantizer + IVF search (r5 oracle)
     "mm_phash_dedup",  # media fingerprint via mapInPandas (r5 oracle)
     "pipeline_corpus_publish",  # gate→dedup→WAP publish composition (r5)
-    "stream_windowed_rollup",  # r8: state shards sized to load
-    "stream_attribution_unmatched",  # r8: the heaviest stateful stream
     "doc_compression_ratio",  # r8: zlib entropy quality filter
     "dedup_keep_longest",  # r8: quality-argmax canonical selection
     "lsh_candidate_pairs_strict",  # r9: band-precision dial, strict position
     "dedup_graph_triangles_verified",  # r9: triangle QA over verified edges
-    "stream_neardup_index",  # r9: incremental LSH index, min-wins state
-    "stream_session_close",  # r9: watermark-final sessions, event-time timers
 ]
 
 

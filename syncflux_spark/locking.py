@@ -6,13 +6,13 @@ compact_parquet and catalog retention's staging rewrite
 (catalog.py::enforce_retention). That is correct for a SINGLE
 writer per table — but two concurrent writers on one target (say a
 retention pass and a nightly compactor) can interleave a rewrite and
-leave a mixed directory. The copy and replication sinks and
-streaming/cdc.py's CdcMergeStream commit to txtable.TxTable instead
-(OCC, no lock). For the two writers above, this module makes the
-single-writer contract ENFORCED rather than assumed; the /write sink
-(sources/line_protocol.py::LineProtocolSink) renames its staged files
-into a measurement directory under the same lock, so a compaction's
-read and swap never drop a file published in between:
+leave a mixed directory. The copy and replication sinks commit to
+txtable.TxTable instead (OCC, no lock). For the two writers above,
+this module makes the single-writer contract ENFORCED rather than
+assumed; the /write sink (sources/line_protocol.py::LineProtocolSink)
+renames its staged files into a measurement directory under the same
+lock, so a compaction's read and swap never drop a file published in
+between:
 
 * :func:`table_lock` — advisory mutual exclusion scoped to a target
   directory, acquired by atomically creating ``<dir>/../.<name>.lock``

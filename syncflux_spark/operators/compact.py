@@ -112,32 +112,6 @@ def clean_stale_staging(
     return sorted(removed)
 
 
-def compact_txtable(
-    spark: SparkSession,
-    root: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compaction for a txtable.TxTable: rewrite the current snapshot
-    into right-sized files as a TRANSACTIONAL overwrite — a concurrent
-    merger's commit wins the race and the compactor rebases onto it,
-    so compaction never loses a merge (the failure mode the
-    directory-swap form has to exclude with locks). Returns the new
-    committed version."""
-    import os
-
-    from syncflux_spark.txtable import TxTable
-
-    t = TxTable(spark, root)
-    # size from the LIVE snapshot's file groups only — dead versions
-    # awaiting vacuum must not inflate the target file count
-    live = sum(
-        dataset_bytes(os.path.join(root, rel))
-        for rel in t._files_at(t.version())
-    )
-    n = max(1, -(-live // target_file_bytes))
-    return t.overwrite(lambda snap: snap.repartition(n))
-
-
 def compact_tx_tagged(
     spark: SparkSession,
     root: str,
@@ -149,8 +123,7 @@ def compact_tx_tagged(
     """Tag-preserving compaction for a TxTable written through
     ``replace_tagged`` (the copy/replication sinks): rewrite each tag
     value's fragmented groups into ONE right-sized group carrying the
-    SAME tag. Unlike :func:`compact_txtable` (whose overwrite drops
-    tags), this keeps the sink's replay contract intact — a window
+    SAME tag. This keeps the sink's replay contract intact — a window
     re-run after compaction still replaces exactly its own data,
     because the compacted group still wears the window's tag (the
     Delta ``OPTIMIZE WHERE <partition>`` shape).

@@ -7128,377 +7128,6 @@ def stream_replicate_counts_tx(spark, sf):
 
 
 @register(
-    "stream_dedup_counts",
-    f"""
-    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM({_sql_micros('value')}) AS BIGINT) AS sum_value_micro
-    FROM events GROUP BY event_type
-    """,
-)
-def stream_dedup_counts(spark, sf):
-    """Streaming dedup under the oracle gate: the source directory is
-    staged with the events file TWICE, one file per micro-batch
-    (``maxFilesPerTrigger=1``), so every row is re-delivered in a
-    LATER batch than its first copy —
-    ``dropDuplicatesWithinWatermark`` must drop the repeats via the
-    checkpointed state store, not intra-batch dedup. Matching the
-    oracle on the single-copy source proves exactly-once key
-    semantics (streaming/dedup.py)."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.dedup import DedupReplicationStream
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    root = tempfile.mkdtemp(prefix="sf_sdedup_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    for copy_name in ("a", "b"):
-        shutil.copy(
-            os.path.join(sf, "events.parquet"),
-            os.path.join(src, f"events_{copy_name}.parquet"),
-        )
-    op = DedupReplicationStream(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        max_files_per_trigger=1,
-        state_partitions=4,
-    )
-    op.run_available()
-    rep = op.read_replica()
-    return rep.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(micros_amt("value")).alias("sum_value_micro"),
-    )
-
-
-@register(
-    "stream_neardup_index",
-    f"""
-    WITH sh AS ({_sql_shingles()}),
-         hs AS ({_HS_SQL}),
-         sig AS (SELECT doc_id, {_MH_SELECT} FROM hs GROUP BY doc_id),
-         bands AS ({_BANDS_SQL}),
-         bmin AS (SELECT band_id, band_key, MIN(doc_id) AS m
-                  FROM bands GROUP BY band_id, band_key)
-    SELECT b.doc_id,
-           CAST(MIN(bm.m) AS BIGINT) AS canonical_id,
-           MIN(bm.m) < b.doc_id AS is_dup
-    FROM bands b JOIN bmin bm
-      ON bm.band_id = b.band_id AND bm.band_key = b.band_key
-    GROUP BY b.doc_id
-    """,
-)
-def stream_neardup_index(spark, sf):
-    """STREAMING near-dup LSH index under the full oracle gate: the
-    documents file is delivered TWICE in separate micro-batches
-    (``maxFilesPerTrigger=1``); each batch folds its LSH band rows
-    into per-bucket canonical-minimum state via
-    ``applyInPandasWithState``, and the final per-document decision
-    (smallest id sharing >= 1 band) must equal — ids and flags — what
-    the oracle computes from the single-copy batch table. Min-wins
-    state is duplicate- and order-insensitive, which is what makes the
-    bitwise claim possible (streaming/neardup.py); O(1) state per band
-    bucket, bounded by distinct band keys, not corpus size.
-
-    r11 shape, from the measured A/B (SCALE.md): ``persist_bands``
-    writes each batch's band rows (already computed for the state
-    fold) as a by-product, and the decision probe reads THOSE instead
-    of re-banding the corpus — the probe-side md5 re-scan was the
-    query's largest constant (x30 decide: 65.7 s → 1.5 s; values
-    identical by construction). n_shards rides the default None — the
-    library derives it via shards_for_buckets and pins it in the
-    checkpoint marker, the same path a production user gets."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.neardup import StreamingLshIndex
-
-    root = tempfile.mkdtemp(prefix="sf_slsh_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    for copy_name in ("a", "b"):
-        shutil.copy(
-            os.path.join(sf, "documents.parquet"),
-            os.path.join(src, f"documents_{copy_name}.parquet"),
-        )
-    op = StreamingLshIndex(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        max_files_per_trigger=1,
-        state_partitions=4,
-        persist_bands=True,
-    )
-    op.run_available()
-    return op.decisions_ingested()
-
-
-@register(
-    "stream_session_close",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, CAST(epoch_us(ts) AS BIGINT) AS us,
-             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, us,
-             CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS session_id
-      FROM flagged
-    )
-    SELECT user_id, session_id,
-           CAST(MIN(us) AS BIGINT) AS start_us,
-           CAST(MAX(us) AS BIGINT) AS end_us,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM sess GROUP BY user_id, session_id
-    """,
-)
-def stream_session_close(spark, sf):
-    """STREAMING exactly-once session closing under the full oracle
-    gate: events are delivered in three time-ordered micro-batches
-    (early half, late half, and a far-future flush sentinel per user);
-    sessions are emitted APPEND-ONLY, each exactly once, when the
-    event-time watermark proves no future event can extend it —
-    per-key EventTimeTimeout timers close sessions for users who went
-    quiet (streaming/sessions.py). The accumulated closed-session
-    table must equal — ids, bounds, counts, and the per-user running
-    session numbering — the batch gaps-and-islands SQL
-    (`ts_sessionize`'s oracle verbatim). Sentinel sessions never close
-    and are never emitted. State per key = open islands only, bounded
-    by the watermark horizon, not history."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.sessions import StreamingSessionCloser
-
-    # no nanosAsLong here: the staged slices are Spark-written µs
-    # parquet and events.parquet is timestamp[us] — setting the legacy
-    # ns read mode would only leak session-global state (ADVICE r9)
-    root = tempfile.mkdtemp(prefix="sf_sclose_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    ev = load_table(spark, sf, "events").select("user_id", "ts")
-    cut = F.to_timestamp(F.lit("2024-01-16"))
-    slices = [
-        ("a_early", ev.where(F.col("ts") < cut)),
-        ("b_late", ev.where(F.col("ts") >= cut)),
-        (
-            "c_flush",
-            ev.select("user_id")
-            .distinct()
-            .select(
-                "user_id", F.to_timestamp(F.lit("2030-01-01")).alias("ts")
-            ),
-        ),
-    ]
-    # FileStreamSource delivers oldest-mtime first; pin strictly
-    # increasing mtimes explicitly so delivery order never depends on
-    # filesystem clock granularity (an a_early/b_late mtime tie would
-    # flip the batches and drop the early slice as late data)
-    for i, (name, df) in enumerate(slices):
-        tmp = os.path.join(root, f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst_file = os.path.join(src, f"{name}.parquet")
-        shutil.copy(part, dst_file)
-        os.utime(dst_file, (1_700_000_000 + i, 1_700_000_000 + i))
-    op = StreamingSessionCloser(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        max_files_per_trigger=1,
-        # unlike the tiny-keyed-state streams (4 shards, r8), this
-        # stage does real per-key CPU (buffer merge+sort per user over
-        # ~1M events at sf0.1) — A/B order-alternated: 6.3s at 4
-        # shards, 5.1s at 16, 6.0s at 32 (values shard-invariant)
-        state_partitions=16,
-    )
-    op.run_available()
-    return op.closed_sessions()
-
-
-@register(
-    "stream_session_facts",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, CAST(epoch_us(ts) AS BIGINT) AS us,
-             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, us,
-             CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS session_id
-      FROM flagged
-    )
-    SELECT user_id,
-           CAST(MIN(us) AS BIGINT) AS start_us,
-           CAST(MAX(us) AS BIGINT) AS end_us,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM sess GROUP BY user_id, session_id
-    """,
-)
-def stream_session_facts(spark, sf):
-    """STREAMING session closing in FACTS-ONLY mode
-    (streaming/sessions.py, ``numbering=False``): same watermark-
-    proven exactly-once gap sessions as `stream_session_close`, but
-    sessions are identified by (user, start_us) — already unique,
-    since a key's islands are disjoint — and a key whose buffer
-    drains is REMOVED from the state store instead of keeping a
-    numbering-parity counter row forever. This is the deployment
-    shape a 100 TB pipeline that doesn't need per-user session
-    numbering runs: store size is O(keys with an open island inside
-    the watermark horizon), not O(users ever seen). The oracle is the
-    batch gaps-and-islands SQL minus the session_id column (the
-    grouping still happens per island; only the id is dropped from
-    the output)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.sessions import StreamingSessionCloser
-
-    root = tempfile.mkdtemp(prefix="sf_sfacts_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    ev = load_table(spark, sf, "events").select("user_id", "ts")
-    cut = F.to_timestamp(F.lit("2024-01-16"))
-    slices = [
-        ("a_early", ev.where(F.col("ts") < cut)),
-        ("b_late", ev.where(F.col("ts") >= cut)),
-        (
-            "c_flush",
-            ev.select("user_id")
-            .distinct()
-            .select(
-                "user_id", F.to_timestamp(F.lit("2030-01-01")).alias("ts")
-            ),
-        ),
-    ]
-    for i, (name, df) in enumerate(slices):
-        tmp = os.path.join(root, f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst_file = os.path.join(src, f"{name}.parquet")
-        shutil.copy(part, dst_file)
-        os.utime(dst_file, (1_700_000_000 + i, 1_700_000_000 + i))
-    op = StreamingSessionCloser(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        max_files_per_trigger=1,
-        state_partitions=16,
-        numbering=False,
-    )
-    op.run_available()
-    # sentinel islands never close, so no 2030 rows reach the output
-    return op.closed_sessions()
-
-
-@register(
-    "stream_kmv_users",
-    """
-    WITH h AS (SELECT DISTINCT event_type,
-                 ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
-                   AS v
-               FROM events),
-    r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn
-          FROM h)
-    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_sample,
-           CAST(MAX(v) AS BIGINT) AS kth_hash,
-           CASE WHEN COUNT(*) < 64 OR MAX(v) = 0
-                THEN CAST(COUNT(*) AS DOUBLE)
-                ELSE 17732923532771328.0::DOUBLE / CAST(MAX(v) AS BIGINT)::DOUBLE
-           END AS est_distinct
-    FROM r WHERE rn <= 64 GROUP BY event_type
-    """,
-)
-def stream_kmv_users(spark, sf):
-    """STREAMING distinct-count sketch under the full oracle gate:
-    the event file is delivered TWICE in separate micro-batches
-    (``maxFilesPerTrigger=1``), each batch folds into per-type
-    bottom-64 hash state via ``applyInPandasWithState``, and the
-    final sketch must equal — bitwise, estimate included — the KMV
-    the oracle computes from the single-copy batch table. That works
-    because bottom-k is a mergeable, duplicate-insensitive summary;
-    it is the strongest correctness statement a streaming sketch can
-    make, and most streaming systems can't make it (HLL register
-    order depends on delivery). O(k) state per key regardless of
-    stream cardinality (streaming/stateful.py::StreamingKmvSketch)."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.stateful import StreamingKmvSketch
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    root = tempfile.mkdtemp(prefix="sf_skmv_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    for copy_name in ("a", "b"):
-        shutil.copy(
-            os.path.join(sf, "events.parquet"),
-            os.path.join(src, f"events_{copy_name}.parquet"),
-        )
-    op = StreamingKmvSketch(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        max_files_per_trigger=1,
-        state_partitions=4,
-    )
-    op.run_available()
-    return op.current_sketches()
-
-
-@register(
-    "stream_stateful_totals",
-    f"""
-    SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM({_sql_micros('value')}) AS BIGINT) AS sum_value_micro,
-           CAST(MAX(epoch_us(ts)) AS BIGINT) AS last_ts_us
-    FROM events GROUP BY user_id
-    """,
-)
-def stream_stateful_totals(spark, sf):
-    """Custom stateful streaming operator under the oracle gate:
-    ``applyInPandasWithState`` folds the event stream into
-    checkpointed per-user state (count, exact-integer value sum, last
-    timestamp) and emits updated summaries per micro-batch; the final
-    state must equal the batch aggregate the oracle computes. State
-    survival across restarts is separately proven in
-    tests/test_streaming.py::TestStatefulUserTotals."""
-    from syncflux_spark.streaming.stateful import StatefulUserTotals
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    root = tempfile.mkdtemp(prefix="sf_stateful_")
-    op = StatefulUserTotals(
-        spark, sf, f"{root}/dst", f"{root}/ckpt",
-        path_glob_filter="events.parquet",
-        state_partitions=4,
-    )
-    op.run_available()
-    return op.current_totals()
-
-
-@register(
     "mm_decode_meta",
     """
     SELECT doc_id AS media_id,
@@ -7768,273 +7397,6 @@ def mm_feature_knn(spark, sf):
         k=3,
         id_col="media_id",
         vec_col="feature",
-    )
-
-
-def _write_events_row(
-    src: str,
-    name: str,
-    ts_ns: int,
-    event_type: str = "__flush__",
-    value: float = 0.0,
-    event_id: int = -1,
-    user_id: int = -1,
-) -> None:
-    """Append one events-shaped row to a staged stream directory,
-    matching the physical ts type of the staged file (ns parquet
-    stores an int64; µs parquet a timestamp[us]) so the stream's
-    enforced schema accepts the new file. Default shape is the
-    far-future ``__flush__`` watermark sentinel; late-data tests
-    inject real-typed rows instead."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src_type = pq.read_schema(os.path.join(src, "events.parquet")).field("ts").type
-    if str(src_type).startswith("timestamp"):
-        ts_arr = pa.array([ts_ns // 1000], pa.timestamp("us"))
-    else:
-        ts_arr = pa.array([ts_ns], pa.int64())
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([event_id], pa.int64()),
-                "ts": ts_arr,
-                "user_id": pa.array([user_id], pa.int64()),
-                "event_type": pa.array([event_type]),
-                "value": pa.array([value], pa.float64()),
-                "props": pa.array(["{}"]),
-            }
-        ),
-        os.path.join(src, name),
-    )
-
-
-def _write_events_sentinel(src: str, name: str, ts_ns: int) -> None:
-    _write_events_row(src, name, ts_ns)
-
-
-@register(
-    "stream_windowed_rollup",
-    f"""
-    SELECT CAST(e_s - e_s % 3600 AS BIGINT) AS bucket_s, event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(v_micro) AS BIGINT) AS sum_value_micro
-    FROM (SELECT event_type, epoch_us(ts) // 1000000 AS e_s,
-                 {_sql_micros('value')} AS v_micro
-          FROM events)
-    GROUP BY bucket_s, event_type
-    """,
-)
-def stream_windowed_rollup(spark, sf):
-    """Watermarked event-time windowed aggregation end-to-end: the
-    events file streamed with a 10-minute watermark, hourly tumbling
-    windows emitted append-mode to a parquet sink. Two far-future
-    sentinel rows drive the watermark past every real window (each
-    availableNow run emits windows the PREVIOUS run's watermark
-    passed), so the sink holds exactly one row per (hour, type) —
-    matching the batch oracle proves emit-exactly-once plus
-    no-data-loss through the streaming state store."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.windowed import WindowedRollupStream
-
-    root = tempfile.mkdtemp(prefix="sf_wmstream_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(sf, "events.parquet"), os.path.join(src, "events.parquet")
-    )
-    ws = WindowedRollupStream(
-        spark, src, f"{root}/dst", f"{root}/ckpt", state_partitions=4
-    )
-    ws.run_available()
-    max_ns = (
-        load_table(spark, sf, "events").agg(F.max("ts_ns").alias("m")).collect()[0].m
-    )
-
-    def sentinel(name: str, ts_ns: int) -> None:
-        _write_events_sentinel(src, name, ts_ns)
-
-    hour_ns = 3600 * 10**9
-    sentinel("zz_flush1.parquet", max_ns + 2 * hour_ns)
-    ws.run_available()
-    sentinel("zz_flush2.parquet", max_ns + 4 * hour_ns)
-    ws.run_available()
-    return ws.read_rollup().where(F.col("event_type") != "__flush__")
-
-
-@register(
-    "stream_session_rollup",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, CAST(epoch_us(ts) AS BIGINT) AS us,
-             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, us,
-             CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS session_id
-      FROM flagged
-    )
-    SELECT user_id,
-           CAST(MIN(us) AS BIGINT) AS start_us,
-           CAST(MAX(us) AS BIGINT) AS end_us,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM sess GROUP BY user_id, session_id
-    """,
-)
-def stream_session_rollup(spark, sf):
-    """Streaming gap-based sessionization end-to-end: the events file
-    streamed through ``F.session_window`` (30-min inactivity gap,
-    10-min watermark), per-user sessions emitted append-mode once the
-    watermark passes their close. A session boundary here is decided
-    by the state store merging/extending open windows — matching the
-    batch lag-and-running-sum oracle (the same SQL that gates
-    ts_sessionize) proves the two formulations agree session-for-
-    session. Sentinel rows flush the final sessions exactly as in
-    stream_windowed_rollup. Boundary note: at a gap of EXACTLY the
-    threshold the two formulations diverge (session_window's end is
-    exclusive — a last+gap event opens a new session; the oracle
-    splits only on strictly-greater), so sub-µs-probability boundary
-    rows would need the oracle's >= form; the µs-grain fixture has
-    none (probed: 0 exact-1800s gaps).
-    """
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.windowed import SessionWindowStream
-
-    root = tempfile.mkdtemp(prefix="sf_sessstream_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(sf, "events.parquet"), os.path.join(src, "events.parquet")
-    )
-    ws = SessionWindowStream(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        group_cols=("user_id",),
-        state_partitions=4,
-    )
-    ws.run_available()
-    max_ns = (
-        load_table(spark, sf, "events").agg(F.max("ts_ns").alias("m")).collect()[0].m
-    )
-
-    def sentinel(name: str, ts_ns: int) -> None:
-        _write_events_sentinel(src, name, ts_ns)
-
-    hour_ns = 3600 * 10**9
-    sentinel("zz_flush1.parquet", max_ns + 2 * hour_ns)
-    ws.run_available()
-    sentinel("zz_flush2.parquet", max_ns + 4 * hour_ns)
-    ws.run_available()
-    return ws.read_rollup().where(F.col("user_id") != -1)
-
-
-@register(
-    "stream_attribution_pairs",
-    """
-    SELECT e1.user_id,
-           CAST(epoch_us(e1.ts) AS BIGINT) AS purchase_us,
-           CAST(epoch_us(e2.ts) AS BIGINT) AS click_us
-    FROM events e1 JOIN events e2
-      ON e2.user_id = e1.user_id
-     AND e1.event_type = 'purchase' AND e2.event_type = 'click'
-     AND epoch_us(e2.ts) >= epoch_us(e1.ts) - 3600000000
-     AND epoch_us(e2.ts) <= epoch_us(e1.ts)
-    """,
-)
-def stream_attribution_pairs(spark, sf):
-    """Stream-stream interval join end-to-end: purchases and clicks
-    read as two watermarked streams, inner-joined on user_id with a
-    trailing-hour event-time bound, pairs emitted append-mode through
-    a checkpointed parquet sink. Matching the batch self-join oracle
-    proves no pair is lost or duplicated through the join state store.
-    Inner-join output needs no watermark wait, so one availableNow
-    pass emits everything (streaming/joins.py)."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.joins import ClickAttributionStream
-
-    root = tempfile.mkdtemp(prefix="sf_ssjoin_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(sf, "events.parquet"), os.path.join(src, "events.parquet")
-    )
-    st = ClickAttributionStream(
-        spark, src, f"{root}/dst", f"{root}/ckpt", state_partitions=4
-    )
-    st.run_available()
-    return st.read_pairs()
-
-
-@register(
-    "stream_attribution_unmatched",
-    """
-    SELECT p.user_id, CAST(epoch_us(p.ts) AS BIGINT) AS purchase_us
-    FROM events p
-    WHERE p.event_type = 'purchase'
-      AND NOT EXISTS (
-        SELECT 1 FROM events c
-        WHERE c.event_type = 'click' AND c.user_id = p.user_id
-          AND epoch_us(c.ts) >= epoch_us(p.ts) - 3600000000
-          AND epoch_us(c.ts) <= epoch_us(p.ts))
-    """,
-)
-def stream_attribution_unmatched(spark, sf):
-    """Stream-stream LEFT OUTER interval join under the oracle gate:
-    purchases with NO click in the trailing hour (the
-    organic-conversion / abandoned-attribution feed). Outer-null
-    emission is the hard watermark semantics — an unmatched purchase
-    may only emit once the watermark PROVES no qualifying click can
-    still arrive, and it flushes in the batch AFTER the watermark
-    advances — so the drive appends two far-future sentinel files
-    (user −1, filtered out below) and processes one file per trigger:
-    the first sentinel's batch advances the watermark, the second's
-    performs the eviction. Matching the batch NOT EXISTS oracle
-    proves every unmatched purchase emits exactly once and no matched
-    one leaks (streaming/joins.py, join_type='left_outer')."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.joins import ClickAttributionStream
-
-    root = tempfile.mkdtemp(prefix="sf_ssouter_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(sf, "events.parquet"),
-        os.path.join(src, "a_events.parquet"),
-    )
-    st = ClickAttributionStream(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        join_type="left_outer",
-        max_files_per_trigger=1,
-        state_partitions=4,
-    )
-    st.emit_flush_sentinel()
-    st.emit_flush_sentinel()
-    st.run_available()
-    return (
-        st.read_pairs()
-        .where(F.col("click_us").isNull() & (F.col("user_id") >= 0))
-        .select("user_id", "purchase_us")
     )
 
 
@@ -9261,9 +8623,7 @@ def ts_ema(spark, sf):
     power-of-two scale — exact in IEEE — so the fold is bit-identical
     across engines (DuckDB list_reduce seeds with the first element;
     Spark seeds aggregate() with element 1 and folds the rest).
-    State per series is the value list — bounded by series length;
-    unbounded series would stream through
-    streaming/stateful.py::running_totals instead."""
+    State per series is the value list — bounded by series length."""
     ev = load_table(spark, sf, "events")
     vals = F.transform(
         F.array_sort(F.collect_list(F.struct("ts", "value"))),
@@ -9341,8 +8701,7 @@ def ts_holt_winters(spark, sf):
     Same scale shape as ts_ema: one shuffle to group each series,
     then an in-row left fold over the time-ordered list (the fold
     state rides a struct; both engines seed with element 1). Series
-    state is bounded by series length — unbounded series would
-    stream through streaming/stateful.py instead."""
+    state is bounded by series length."""
     ev = load_table(spark, sf, "events")
     vals = F.transform(
         F.array_sort(F.collect_list(F.struct("ts", "value"))),
@@ -12654,61 +12013,6 @@ def influxql_series_cardinality(spark, sf):
 
 
 @register(
-    "stream_late_events",
-    f"""
-    SELECT CAST(e_s - e_s % 3600 AS BIGINT) AS bucket_s, event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(v_micro) AS BIGINT) AS sum_value_micro
-    FROM (SELECT event_type, epoch_us(ts) // 1000000 AS e_s,
-                 {_sql_micros('value')} AS v_micro
-          FROM events)
-    GROUP BY bucket_s, event_type
-    """,
-)
-def stream_late_events(spark, sf):
-    """Watermark LATE-DATA DROP proven end-to-end: after the watermark
-    has passed every real window, a real-typed 'click' row stamped at
-    the corpus MINIMUM hour is injected into the stream. Append-mode
-    emits each window once, so if the engine failed to drop the late
-    row, its long-closed hour would re-emit as a duplicate
-    (bucket, click) row — and the oracle (the batch hourly rollup of
-    the ORIGINAL events only) would hash-mismatch. Matching the
-    oracle therefore proves the drop, not just the rollup."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.windowed import WindowedRollupStream
-
-    root = tempfile.mkdtemp(prefix="sf_latestream_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(sf, "events.parquet"), os.path.join(src, "events.parquet")
-    )
-    ws = WindowedRollupStream(
-        spark, src, f"{root}/dst", f"{root}/ckpt", state_partitions=4
-    )
-    ws.run_available()
-    bounds = (
-        load_table(spark, sf, "events")
-        .agg(F.min("ts_ns").alias("lo"), F.max("ts_ns").alias("hi"))
-        .collect()[0]
-    )
-    hour_ns = 3600 * 10**9
-    # advance the watermark beyond every real window
-    _write_events_row(src, "zz_flush1.parquet", bounds.hi + 2 * hour_ns)
-    ws.run_available()
-    # inject a LATE real-typed row into the earliest (long-closed) hour
-    _write_events_row(
-        src, "zz_late.parquet", bounds.lo, event_type="click", value=123.0
-    )
-    ws.run_available()
-    _write_events_row(src, "zz_flush2.parquet", bounds.hi + 4 * hour_ns)
-    ws.run_available()
-    return ws.read_rollup().where(F.col("event_type") != "__flush__")
-
-
-@register(
     "emb_diverse_sample",
     f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -13183,156 +12487,6 @@ def entity_match_pairs(spark, sf):
         block_col=F.expr("substring(c_name, 1, length(c_name) - 2)"),
         max_dist=1,
     ).select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
-
-
-_CDC_CHANGES_SQL = """
-      SELECT o_orderkey AS k, 'U' AS op, o_orderstatus AS s,
-             o_totalprice * 1.1 AS p
-      FROM orders WHERE o_orderkey % 10 = 3
-      UNION ALL
-      SELECT o_orderkey, 'D', o_orderstatus, o_totalprice
-      FROM orders WHERE o_orderkey % 10 = 7
-      UNION ALL
-      SELECT o_orderkey + 10000000, 'I', 'N', o_totalprice + 5
-      FROM orders WHERE o_orderkey % 10 = 1
-"""
-
-
-def _cdc_fixture(spark, sf):
-    """Deterministic I/U/D batch derived from orders: keys ≡3 (mod
-    10) are updates (+10% price), ≡7 deletes, ≡1 re-keyed inserts."""
-    base = load_table(spark, sf, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    k = F.col("o_orderkey")
-    upd = base.where(k % 10 == 3).select(
-        k.alias("o_orderkey"),
-        F.lit("U").alias("op"),
-        F.col("o_orderstatus"),
-        (F.col("o_totalprice") * 1.1).alias("o_totalprice"),
-    )
-    dele = base.where(k % 10 == 7).select(
-        k.alias("o_orderkey"),
-        F.lit("D").alias("op"),
-        "o_orderstatus",
-        "o_totalprice",
-    )
-    ins = base.where(k % 10 == 1).select(
-        (k + 10_000_000).alias("o_orderkey"),
-        F.lit("I").alias("op"),
-        F.lit("N").alias("o_orderstatus"),
-        (F.col("o_totalprice") + 5).alias("o_totalprice"),
-    )
-    return base, upd.unionByName(dele).unionByName(ins)
-
-
-@register(
-    "cdc_merge_apply",
-    f"""
-    WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
-    ch AS ({_CDC_CHANGES_SQL})
-    SELECT b.o_orderkey,
-           CASE WHEN c.op IN ('U','I') THEN c.s
-                ELSE b.o_orderstatus END AS o_orderstatus,
-           CASE WHEN c.op IN ('U','I') THEN c.p
-                ELSE b.o_totalprice END AS o_totalprice
-    FROM base b LEFT JOIN ch c ON b.o_orderkey = c.k
-    WHERE c.op IS NULL OR c.op <> 'D'
-    UNION ALL
-    SELECT c.k, c.s, c.p
-    FROM ch c LEFT JOIN base b ON b.o_orderkey = c.k
-    WHERE c.op = 'I' AND b.o_orderkey IS NULL
-    """,
-)
-def cdc_merge_apply(spark, sf):
-    """CDC MERGE INTO over plain parquet: apply a deterministic
-    insert/update/delete batch to the orders base table and return
-    the merged table. One equality join of base against the (small,
-    broadcastable) change batch plus an anti-joined insert union —
-    the lakehouse merge shape with no transaction log
-    (operators/cdc.py::apply_changes)."""
-    from syncflux_spark.operators.cdc import apply_changes
-
-    base, changes = _cdc_fixture(spark, sf)
-    return apply_changes(base, changes, key_col="o_orderkey")
-
-
-@register(
-    "cdc_merge_audit",
-    f"""
-    WITH base AS (SELECT o_orderkey FROM orders),
-    ch AS ({_CDC_CHANGES_SQL}),
-    j AS (SELECT ch.op, b.o_orderkey IS NOT NULL AS present
-          FROM ch LEFT JOIN base b ON b.o_orderkey = ch.k)
-    SELECT CAST(SUM(CASE WHEN op = 'I' THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_insert,
-           CAST(SUM(CASE WHEN op = 'U' AND present THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_update,
-           CAST(SUM(CASE WHEN op = 'D' AND present THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_delete,
-           CAST(SUM(CASE WHEN op <> 'I' AND NOT present THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_noop,
-           CAST(SUM(CASE WHEN op = 'I' AND NOT present THEN 1 ELSE 0 END)
-             - SUM(CASE WHEN op = 'D' AND present THEN 1 ELSE 0 END)
-             AS BIGINT) AS row_delta
-    FROM j
-    """,
-)
-def cdc_merge_audit(spark, sf):
-    """The merge-job audit row: applied insert/update/delete counts,
-    no-op changes (U/D on absent keys), and the net row delta — what
-    a nightly merge logs before committing. One aggregate over the
-    change batch left-joined to base keys."""
-    from syncflux_spark.operators.cdc import change_counts
-
-    base, changes = _cdc_fixture(spark, sf)
-    return change_counts(base, changes, key_col="o_orderkey")
-
-
-@register(
-    "stream_cdc_apply",
-    f"""
-    WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
-    ch AS ({_CDC_CHANGES_SQL})
-    SELECT b.o_orderkey,
-           CASE WHEN c.op IN ('U','I') THEN c.s
-                ELSE b.o_orderstatus END AS o_orderstatus,
-           CASE WHEN c.op IN ('U','I') THEN c.p
-                ELSE b.o_totalprice END AS o_totalprice
-    FROM base b LEFT JOIN ch c ON b.o_orderkey = c.k
-    WHERE c.op IS NULL OR c.op <> 'D'
-    UNION ALL
-    SELECT c.k, c.s, c.p
-    FROM ch c LEFT JOIN base b ON b.o_orderkey = c.k
-    WHERE c.op = 'I' AND b.o_orderkey IS NULL
-    """,
-)
-def stream_cdc_apply(spark, sf):
-    """Streaming CDC under the oracle gate: the I/U/D fixture batch
-    flows through a checkpointed readStream → foreachBatch merge
-    (streaming/cdc.py::CdcMergeStream — one TxTable overwrite commit
-    per batch, replay-idempotent by MERGE semantics), and the
-    resulting base table must hash-equal the one-shot SQL MERGE the
-    oracle computes. Restart/replay survival is separately proven in
-    tests/test_streaming.py::TestCdcMergeStream."""
-    from syncflux_spark.streaming.cdc import CdcMergeStream
-    from syncflux_spark.txtable import TxTable
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    root = tempfile.mkdtemp(prefix="sf_cdc_")
-    base, changes = _cdc_fixture(spark, sf)
-    TxTable.create(spark, f"{root}/base", base)
-    changes.write.mode("overwrite").parquet(f"{root}/changes")
-    s = CdcMergeStream(
-        spark,
-        f"{root}/changes",
-        f"{root}/base",
-        f"{root}/ckpt",
-        key_col="o_orderkey",
-        state_partitions=4,
-    )
-    s.run_available()
-    return s.read_base()
 
 
 #: fixed BPE merge table for the tokenizer-accounting entry — rank
@@ -14817,69 +13971,6 @@ def value_decile_bins(spark, sf):
     )
 
 
-@register(
-    "stream_quantile_sketch",
-    f"""
-    WITH h AS (
-      SELECT event_type,
-             ('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 12))::BIGINT AS h,
-             CAST(value AS DOUBLE) AS v
-      FROM events),
-    m AS (SELECT event_type, h, v FROM (
-        SELECT event_type, h, v,
-               row_number() OVER (PARTITION BY event_type ORDER BY h, v) AS rn
-        FROM h) WHERE rn <= {_QSK_K}),
-    r AS (SELECT event_type, v,
-                 row_number() OVER (PARTITION BY event_type ORDER BY v) AS vr,
-                 COUNT(*) OVER (PARTITION BY event_type) AS n
-          FROM m)
-    SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_sample,
-           MAX(CASE WHEN vr = GREATEST(1, CAST(CEIL(0.5 * n) AS BIGINT))
-                    THEN v END) AS p50,
-           MAX(CASE WHEN vr = GREATEST(1, CAST(CEIL(0.9 * n) AS BIGINT))
-                    THEN v END) AS p90,
-           MAX(CASE WHEN vr = GREATEST(1, CAST(CEIL(0.99 * n) AS BIGINT))
-                    THEN v END) AS p99
-    FROM r GROUP BY event_type
-    """,
-)
-def stream_quantile_sketch(spark, sf):
-    """STREAMING percentile monitor under the full oracle gate: the
-    event file is delivered TWICE in separate micro-batches, each
-    folds into per-type bottom-256 (priority, value) state via
-    ``applyInPandasWithState``, and the final p50/p90/p99 must
-    equal — estimates included — the batch quantile sketch the
-    oracle computes from the single-copy table. Works because the
-    bottom-k priority sample is a mergeable, DUPLICATE-INSENSITIVE
-    summary (a re-delivered row re-adds the same (hash, value) pair);
-    O(k) state per key regardless of stream volume
-    (streaming/stateful.py::StreamingQuantileSketch)."""
-    import os
-    import shutil
-
-    from syncflux_spark.streaming.stateful import StreamingQuantileSketch
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    root = tempfile.mkdtemp(prefix="sf_sqsk_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    for copy_name in ("a", "b"):
-        shutil.copy(
-            os.path.join(sf, "events.parquet"),
-            os.path.join(src, f"events_{copy_name}.parquet"),
-        )
-    op = StreamingQuantileSketch(
-        spark,
-        src,
-        f"{root}/dst",
-        f"{root}/ckpt",
-        max_files_per_trigger=1,
-        state_partitions=4,
-    )
-    op.run_available()
-    return op.current_sketches()
-
-
 # -- audio plumbing ---------------------------------------------------------
 
 
@@ -15084,218 +14175,9 @@ def doc_compression_ratio(spark, sf):
     )
 
 
-#: Names with a green row in some CORRECTNESS_r*.json (r1 ∪ r2 ∪ r3).
-#: The driver samples a fixed-size prefix of ``queries()`` in dict
-#: order, so the public order puts never-driver-confirmed entries
-#: first (highest-risk families leading) and already-confirmed ones
-#: last — each round then confirms ~50 *new* queries instead of
-#: re-testing the same prefix.  Update this set from the newest
-#: CORRECTNESS file each round.
-_DRIVER_CONFIRMED = frozenset(
-    """
-    benchmark_contamination bigram_top_terms bloom_purchase_filter
-    bm25_search bpe_merge_candidates bpe_tokenize_stats
-    bucketed_join_revenue c4_filter_flags cdc_merge_apply
-    cdc_merge_audit cms_sketch_merge cms_user_counts cohort_retention
-    containment_pairs containment_pairs_exact contrastive_triplets
-    conversion_latency_daily corpus_filter_report corpus_mixture_stats
-    corpus_overview corpus_snapshot_diff cq_daily_rollup
-    cq_downsample_roundtrip csv_roundtrip_stats
-    cumulative_spend_per_customer customer_rfm_segments
-    dedup_components dedup_cross_source_matrix dedup_exact
-    dedup_graph_clustering dedup_graph_kcore dedup_graph_triangles
-    dedup_graph_triangles_verified dedup_incremental
-    dedup_incremental_indexed dedup_keep_documents dedup_keep_longest
-    dedup_near_keep dedup_near_keep_capped dedup_normalized
-    dedup_rate_by_source doc_boilerplate_ratio doc_chunk_windows
-    doc_compression_ratio doc_cosine_pairs doc_fingerprint doc_lang_mix
-    doc_novelty doc_pack_bins doc_pagerank doc_pagerank_capped
-    doc_sample_10pct doc_size_weighted_sample doc_split_assign
-    doc_stratified_sample doc_top_terms drift_value_chi2
-    duplicate_substring_spans emb_bucket_census emb_class_centroids
-    emb_covariance emb_dedup_components emb_dedup_components_capped
-    emb_diverse_sample emb_eval_leakage emb_hard_negatives
-    emb_near_dup_pairs emb_near_dup_pairs_auto
-    emb_near_dup_pairs_capped emb_norms emb_quantize_int8
-    emb_random_projection emb_top_eigenvector entity_match_pairs
-    epoch_shuffle_manifest event_transitions funnel_conversion
-    global_value_quantiles gopher_quality_flags hll_distinct_users
-    hybrid_search_rrf influxql_agg_math influxql_cmo_daily
-    influxql_count_star influxql_cumulative_daily influxql_dema_daily
-    influxql_derivative_daily influxql_elapsed_clicks
-    influxql_ema_daily influxql_field_math influxql_fill_zero_6h
-    influxql_first_last_daily influxql_having_idiom
-    influxql_holt_winters influxql_holt_winters_seasonal
-    influxql_integral_daily influxql_kama_daily influxql_ker_daily
-    influxql_math_fns influxql_math_of_agg influxql_mean_1h
-    influxql_percentile_spread influxql_regex_measurements
-    influxql_rsi_daily influxql_sample_series
-    influxql_select_into_roundtrip influxql_series_cardinality
-    influxql_show_series influxql_slimit_series influxql_subquery_peak
-    influxql_tag_values influxql_tema_daily influxql_top3_daily
-    influxql_trix_daily influxql_tz_daily influxql_where_math
-    ivf_index_roundtrip ivf_pq_topk ivf_topk ivf_topk_kmeans
-    json_roundtrip_stats key_skew_report kmv_distinct_users
-    kmv_rolling_distinct kmv_set_overlap kmv_sketch_merge
-    knn_threshold_pairs knn_topk lang_confusion_matrix lang_detect
-    leakage_safe_split lm_predictability lp_roundtrip_stats
-    lsh_ann_topk lsh_ann_topk_multi lsh_auto_cap lsh_bucket_census
-    lsh_candidate_pairs lsh_candidate_pairs_auto
-    lsh_candidate_pairs_capped lsh_candidate_pairs_strict maxsim_topk
-    maxsim_topk_ann minhash_signatures mixture_resample
-    mm_audio_features mm_audio_frame_counts mm_audio_meta
-    mm_decode_meta mm_feature_knn mm_frame_counts mm_image_decode
-    mm_phash_dedup mm_video_frames ngram_jaccard_pairs
-    ngram_jaccard_pairs_strfp orc_roundtrip_stats orders_per_month
-    outage_event_counts partitioned_scan_counts passage_boilerplate
-    pii_scrub_stats pipeline_corpus_publish pmi_top_bigrams pq_ann_topk
-    pq_rescored_topk q10_returned_items q11_important_parts
-    q12_priority_shipping q13_customer_distribution q14_promo_share
-    q15_top_supplier q16_supplier_counts q17_small_quantity_revenue
-    q18_large_orders q19_discounted_revenue q1_pricing_summary
-    q20_excess_suppliers q21_waiting_suppliers q22_inactive_customers
-    q2_min_cost_supplier q3_shipping_priority q4_order_priority
-    q5_local_supplier_volume q6_revenue_forecast q7_volume_shipping
-    q8_market_share q9_product_profit quality_scores
-    quantile_rolling_series quantile_sketch_merge regex_token_stats
-    repetition_stats revenue_cube_flags revenue_rollup_region
-    semantic_dedup_auto semantic_dedup_flags session_top_paths
-    session_type_lift simhash_fingerprint simhash_near_pairs
-    simhash_near_pairs_wide simhash_near_pairs_wide64
-    sliding_distinct_users sorted_neighborhood_pairs source_quota_cap
-    stream_attribution_pairs stream_attribution_unmatched
-    stream_cdc_apply stream_corpus_publish stream_dedup_counts
-    stream_kmv_users stream_late_events stream_neardup_index
-    stream_quantile_sketch stream_replicate_counts
-    stream_replicate_counts_tx stream_session_close
-    stream_session_facts stream_session_rollup stream_stateful_totals
-    stream_windowed_rollup substring_dup_fraction
-    supplier_rank_in_nation table_profile token_budget_by_source
-    token_budget_select token_diversity token_stats
-    top_customers_by_revenue top_users_per_event_type
-    training_shard_manifest ts_acf ts_asof_purchase ts_asof_tolerance
-    ts_ccf_click_purchase ts_chande_momentum ts_changepoint
-    ts_chunk_counts ts_copy_roundtrip ts_copy_roundtrip_tx
-    ts_count_distinct ts_counter_increase ts_cumulative_sum
-    ts_derivative ts_difference ts_downsample_1h ts_downsample_fill
-    ts_downsample_fill_linear ts_downsample_fill_previous ts_elapsed
-    ts_ema ts_ema_cascade ts_field_coercion ts_first_per_series
-    ts_gap_detect ts_holt_winters ts_hourly_bands ts_integral
-    ts_interval_coverage ts_json_props ts_kaufman_er ts_last_per_series
-    ts_m4_downsample ts_mad_outliers ts_math_transforms
-    ts_measurement_stats ts_mode ts_moving_average ts_nn_derivative
-    ts_nn_difference ts_outliers ts_percentiles ts_pivot_daily_counts
-    ts_retention_tx ts_rolling_median ts_rsi ts_sample_per_series
-    ts_scan_range ts_seasonal_anomaly ts_seasonal_mase
-    ts_series_cardinality ts_series_discovery ts_series_similarity
-    ts_series_stats ts_sessionize ts_sparse_field_merge
-    ts_spread_stddev ts_theil_sen ts_top_bottom ts_trailing_1h_stats
-    ts_trend_slope ts_type_correlation ts_upsert_collapse
-    ts_value_histogram ts_winsorized_stats users_click_and_purchase
-    users_click_no_purchase value_decile_bins vocab_growth_curve
-    vocab_top_terms winnow_incremental winnow_overlap_pairs
-    winnow_profile word_jaccard_pairs zorder_scan_counts
-    """.split()
-)
-
-#: Unconfirmed families most at risk of a cross-engine mismatch —
-#: surfaced first so the driver's sample covers them this round.
-_PRIORITY_PREFIXES = (
-    "influxql_", "cdc_", "stream_", "mm_", "pq_", "ivf_", "bpe_",
-    "containment_pairs_exact", "cq_", "lp_",
-    # round-5 transactional-sink flagships: newest surface, zero
-    # driver rows yet — front of the sample until confirmed
-    "pipeline_", "ts_retention_tx",
-    # r9: 53 unconfirmed+focus names compete for ~50 sample slots —
-    # promote the verdict-named r8 query so it cannot be one of the
-    # ~3 that spill to next round
-    "doc_compression_ratio",
-)
-
-#: Queries whose implementation or oracle changed THIS round — pinned
-#: to the very front of the sample so the gate re-checks them before
-#: anything else (a changed query with a stale green row is the one
-#: regression the self-maintaining order can't see on its own).
-_ROUND_FOCUS = (
-    # r13: word_jaccard_all_pairs and containment_pairs_exact gained
-    # (a) the PPJoin POSITIONAL filter at the candidate stage (plus
-    # the AllPairs length filter moved there for word Jaccard), and
-    # (b) HASH-EARLY fingerprints in hash64 mode — xxhash64 applied
-    # right after the token/shingle explode so dfreq, the rare-first
-    # sort-collect, and every candidate/semi-join key carry longs.
-    # Values unchanged by construction (filters are exact — pigeonhole
-    # on the rare-first order; hash-early produces the same hash sets
-    # the verify already intersected), pinned by brute-force + mode-
-    # equality tests and both oracles at sf0.001/sf0.01 — but impl
-    # and plan changed, so both green rows re-pin first.
-    "word_jaccard_pairs",
-    "containment_pairs_exact",
-    # r13: triangle_counts sizes every post-pair-gen shuffle to the
-    # edge mass (loop_parallelism) and materializes inside the clamp —
-    # values unchanged (counts are partitioning-invariant; parity
-    # green at sf0.001/sf0.01), impl/plan changed for its consumers.
-    "dedup_graph_triangles",
-    "dedup_graph_triangles_verified",
-    "dedup_graph_clustering",
-    # r13: winnow_incremental_pairs builds ONE flagged, persisted
-    # posting frame (df-gate join runs once; pair-join sides share the
-    # cache) instead of separate batch/all keep-joins — values
-    # unchanged (x30 checksums identical), impl/plan changed.
-    "winnow_incremental",
-)
-
-
-def _confirmed_names() -> frozenset:
-    """The union of the static set above and every green row found in
-    CORRECTNESS_r*.json files next to the repo root — so the ordering
-    self-maintains: once the gate confirms a query, the next run
-    pushes it to the back of the sample automatically."""
-    import glob
-    import json
-    import os
-
-    names = set(_DRIVER_CONFIRMED)
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            continue
-        rows = doc.get("queries", doc) if isinstance(doc, dict) else {}
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            ):
-                names.add(name)
-    return frozenset(names)
-
-
-def _public_order() -> list[str]:
-    names = list(REGISTRY)
-    confirmed_set = _confirmed_names() - set(_ROUND_FOCUS)
-    focus = [n for n in _ROUND_FOCUS if n in REGISTRY]
-    names = [n for n in names if n not in _ROUND_FOCUS]
-    unconfirmed = [n for n in names if n not in confirmed_set]
-    confirmed = [n for n in names if n in confirmed_set]
-    prio = [n for n in unconfirmed if n.startswith(_PRIORITY_PREFIXES)]
-    rest = [n for n in unconfirmed if not n.startswith(_PRIORITY_PREFIXES)]
-    return focus + prio + rest + confirmed
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].spark for name in _public_order()}
+    return {name: q.spark for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].sql
-        for name in _public_order()
-        if REGISTRY[name].sql is not None
-    }
+    return {name: q.sql for name, q in REGISTRY.items() if q.sql is not None}

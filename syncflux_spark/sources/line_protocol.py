@@ -157,8 +157,8 @@ def parse_line_protocol(
     value (``value=1,value=2`` reads ``value`` as 2)."""
     raw = F.col(line_col)
     head = F.regexp_extract(raw, r"^((?:\\.|[^ \\])+) ", 1)
-    ts = F.regexp_extract(raw, r" (\d+)$", 1).try_cast("long")
-    fseg = F.regexp_extract(raw, r"^(?:\\.|[^ \\])+ (.*) \d+$", 1)
+    ts = F.regexp_extract(raw, r" (-?\d+)$", 1).try_cast("long")
+    fseg = F.regexp_extract(raw, r"^(?:\\.|[^ \\])+ (.*) -?\d+$", 1)
 
     meas = _unesc(F.regexp_extract(head, r"^((?:\\.|[^,\\])+)", 1))
 

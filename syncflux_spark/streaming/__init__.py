@@ -1,13 +1,9 @@
-from syncflux_spark.streaming.dedup import DedupReplicationStream
 from syncflux_spark.streaming.monitor import ClusterState, ClusterStatus, HAMonitor
 from syncflux_spark.streaming.replicate import ReplicationStream
-from syncflux_spark.streaming.windowed import WindowedRollupStream
 
 __all__ = [
     "ClusterState",
     "ClusterStatus",
-    "DedupReplicationStream",
     "HAMonitor",
     "ReplicationStream",
-    "WindowedRollupStream",
 ]

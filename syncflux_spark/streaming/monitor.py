@@ -20,6 +20,7 @@ Pure driver-side code — no data-plane cost.
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
 from dataclasses import dataclass, field
@@ -62,7 +63,9 @@ class HAMonitor:
     recover: callable(start, end) that backfills the missed window —
     normally ``ReplicationStream.run_available`` (which ignores the
     window because the checkpoint already knows it; the window is
-    passed for report parity with hacluster.go:310-321).
+    passed for report parity with hacluster.go:310-321). A ``recover``
+    that raises leaves the cluster in ``CHECK_SLAVE_DOWN``, so the
+    next tick with the slave up retries the same window.
     """
 
     def __init__(
@@ -116,21 +119,33 @@ class HAMonitor:
             if not recovering:
                 return self.get_status()
         t0 = time.monotonic()
+        recovered = True
         if self.recover is not None:
-            self._safe(lambda: self.recover(gap_start, now))
+            try:
+                self.recover(gap_start, now)
+            except Exception:  # noqa: BLE001 — a failed backfill is retried
+                logging.getLogger(__name__).exception(
+                    "backfill from %s to %s failed", gap_start, now
+                )
+                recovered = False
         with self._lock:
+            st.recovering_since = None
+            if not recovered:
+                # back to "down" with slave_last_ok untouched, so the
+                # next tick that sees the slave up retries the same gap
+                st.cluster_state = ClusterState.CHECK_SLAVE_DOWN
+                return self.get_status()
             st.last_recovery_duration = time.monotonic() - t0
             st.num_recovers += 1
             st.slave_last_ok = now
             st.cluster_state = ClusterState.OK
-            st.recovering_since = None
             return self.get_status()
 
     @staticmethod
     def _safe(fn) -> bool:
         try:
             out = fn()
-            return out is None or bool(out)  # None-returning recover → ok
+            return out is None or bool(out)  # a None-returning probe is up
         except Exception:  # noqa: BLE001 — probe failure means "down"
             return False
 

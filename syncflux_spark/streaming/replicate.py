@@ -49,8 +49,6 @@ class ReplicationStream:
         max_files_per_trigger: int | None = None,
         path_glob_filter: str | None = None,
         table_format: str = "tx",
-        state_partitions: int | None = None,
-        state_backend: str | None = None,
     ):
         # the sink is always a TxTable; the keyword is accepted only so
         # callers that still spell out table_format="tx" keep working
@@ -64,15 +62,6 @@ class ReplicationStream:
         #: file streams require a DIRECTORY source; a glob filter
         #: scopes the stream to one measurement's files within it
         self.path_glob_filter = path_glob_filter
-        #: state-store shard count for stateful subclasses (the dedup
-        #: stream's dropDuplicatesWithinWatermark keeps per-key state;
-        #: plain replication has none, where this only sizes per-batch
-        #: shuffles). See utils.shuffle_partitions for the pin/restore
-        #: semantics and measurements. None = session conf.
-        self.state_partitions = state_partitions
-        #: state-store provider dial for stateful subclasses
-        #: (utils.STATE_BACKENDS); None = session conf.
-        self.state_backend = state_backend
         self.batches_written = 0
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -93,8 +82,7 @@ class ReplicationStream:
         # source's current files (schema evolution would re-resolve on
         # restart, which is the behavior the reference gets from
         # re-running GetSchema after recovery, hacluster.go:331)
-        # TIMESTAMP, not TIMESTAMP_NTZ: downstream watermarks (dedup
-        # subclass) require the tz-aware type; session tz is UTC
+        # TIMESTAMP, not TIMESTAMP_NTZ; session tz is UTC
         self.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         batch_reader = self.spark.read
         if self.path_glob_filter:
@@ -115,19 +103,14 @@ class ReplicationStream:
         deterministic 'catch up now' trigger — used for backfill after
         an outage and in tests). Returns batches written this run."""
         before = self.batches_written
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                self._reader()
-                .writeStream.foreachBatch(self._write_batch)
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            self._reader()
+            .writeStream.foreachBatch(self._write_batch)
+            .option("checkpointLocation", self.checkpoint_path)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         return self.batches_written - before
 
     def start_continuous(self, processing_interval: str = "10 seconds"):

@@ -4,9 +4,8 @@ overwrite-based writers.
 
 The advisory locks (locking.py) ENFORCE the single-writer contract;
 this module REMOVES it for the tables that need true concurrency
-(the chunked copy/replication sinks, a streaming CDC merger, and a
-compactor on one table). The design is the standard lakehouse shape,
-cut to the bone:
+(the chunked copy/replication sinks and a compactor on one table).
+The design is the standard lakehouse shape, cut to the bone:
 
 * ``{root}/data/<uuid>.parquet/`` — immutable data-file groups; a
   writer only ever ADDS new groups, never mutates existing ones.
@@ -16,7 +15,7 @@ cut to the bone:
   - **snapshot** commits record the COMPLETE file-group list (plus
     per-group stats/tags). Every ``checkpoint_interval``-th version
     is a snapshot, and so is any commit whose full list is no longer
-    than its delta would be (version 0, every ``overwrite``).
+    than its delta would be (version 0, a swap of every group).
   - **delta** commits record only ``add``/``remove`` group lists
     (plus stats/tags for the adds) against the previous version.
 
@@ -39,20 +38,18 @@ cut to the bone:
   never produce a torn read.
 * **Optimistic concurrency, one commit loop**: every writer
   (``create``, ``append``, ``replace_tagged``, ``swap_groups``,
-  ``overwrite``/``merge_changes``, ``publish_with_audit``,
-  ``expire_below``) is an *edit* of the parent state passed to
-  ``_commit``. The loop resolves the parent once, lets the edit
-  stage its data group and compute its add/remove lists and schema
-  (checked against THAT parent), writes the full commit document to
-  a temp file and atomically claims version ``V+1`` via ``os.link``
-  onto the log name (fails-if-exists like ``O_EXCL``, but the linked
-  file already carries its complete content, so a concurrent reader
-  can never observe a half-written commit; on object stores, a
-  conditional PUT). A lost race re-runs the edit against the
-  winner's state — adds commute, tag removals are recomputed,
-  ``overwrite`` recomputes its data (bounded by ``max_retries``,
-  then :class:`CommitConflict`). A staged group whose commit does
-  not land is deleted.
+  ``publish_with_audit``, ``expire_below``) is an *edit* of the parent
+  state passed to ``_commit``. The loop resolves the parent once, lets
+  the edit stage its data group and compute its add/remove lists and
+  schema (checked against THAT parent), writes the full commit
+  document to a temp file and atomically claims version ``V+1`` via
+  ``os.link`` onto the log name (fails-if-exists like ``O_EXCL``, but
+  the linked file already carries its complete content, so a
+  concurrent reader can never observe a half-written commit; on object
+  stores, a conditional PUT). A lost race re-runs the edit against the
+  winner's state — adds commute, tag removals are recomputed — up to
+  ``max_retries`` times, then :class:`CommitConflict`. A staged group
+  whose commit does not land is deleted.
 * **Tags**: a commit may label each added group with small key/value
   strings (``{"win": "<start>_<end>"}``). :meth:`replace_tagged`
   atomically swaps every group carrying one tag value for a new
@@ -336,7 +333,7 @@ class TxTable:
         edit — and every schema check inside one — is computed against
         the state its commit lands on. The document is a snapshot at
         checkpoint versions and whenever the full file list is no
-        longer than the delta would be (version 0, overwrites), else
+        longer than the delta would be (version 0, full rewrites), else
         an O(1) delta; deltas record the schema only when it changes.
 
         Every staged group the commit does not add is deleted, whether
@@ -610,50 +607,6 @@ class TxTable:
             }
 
         return self._commit(edit)
-
-    def overwrite(
-        self, compute, max_retries: int = 3,
-        stats_cols: list[str] | None = None,
-    ) -> int:
-        """Replace the table with ``compute(snapshot_df) -> DataFrame``
-        under OCC: the result is staged, then commit V+1 is claimed;
-        losing the race re-runs ``compute`` against the winner's
-        snapshot (the lost attempt's group is deleted), at most
-        ``max_retries`` times, then raises :class:`CommitConflict`.
-        The result's schema becomes the table schema, and the commit
-        is a snapshot (its file list is one group), so it doubles as
-        a log checkpoint. Returns the committed version."""
-
-        def edit(state, stage):
-            files, _stats, _tags, schema = state
-            out = compute(self._read(files, schema))
-            rel, st = stage(out, stats_cols)
-            return {
-                "add": [rel], "remove": files, "stats": {rel: st},
-                "schema": self._nullable(out.schema),
-            }
-
-        return self._commit(edit, max_retries=max_retries)
-
-    def merge_changes(
-        self,
-        changes: DataFrame,
-        key_col: str,
-        op_col: str = "op",
-        max_retries: int = 3,
-    ) -> int:
-        """MERGE an I/U/D change batch (operators/cdc.py semantics)
-        transactionally: recomputed against the latest snapshot on
-        every retry, so two concurrent mergers serialize correctly
-        instead of basing on the same parent and losing one batch."""
-        from syncflux_spark.operators.cdc import apply_changes
-
-        return self.overwrite(
-            lambda base: apply_changes(
-                base, changes, key_col=key_col, op_col=op_col
-            ),
-            max_retries=max_retries,
-        )
 
     def publish_with_audit(
         self,

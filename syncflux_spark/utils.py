@@ -13,17 +13,12 @@ def shuffle_partitions(spark: SparkSession, n: int | None):
     """Temporarily size ``spark.sql.shuffle.partitions`` around a
     block, restoring the session value afterwards.
 
-    The streaming state store is the motivating caller: a stateful
-    query pins its SHARD COUNT from this conf at its first batch
-    (recorded in the checkpoint offset log, immutable for the
-    checkpoint's lifetime), and every micro-batch then pays one task
-    plus one store load/commit PER SHARD regardless of data volume —
-    so the default batch parallelism (sized for full-table shuffles)
-    over-shards small keyed state by 10-100×. Measured on the sf0.1
-    fixtures: the stream-stream outer join ran 5× faster at 4 shards
-    than at 32, identical results. At 100 TB the same dial turns the
-    other way — raise it to the stateful stage's true parallelism
-    before the FIRST run, because the checkpoint freezes it.
+    Every shuffle pays one task plus one partition file per shuffle
+    partition regardless of data volume, so the batch default (sized
+    for full-table scans) over-shards small per-round state; the
+    iterative loops size it with :func:`loop_parallelism`. A stream
+    pins the conf into its checkpoint at its first batch, so set it
+    before the FIRST run.
 
     ``n=None`` is a no-op passthrough, so callers can thread an
     optional knob without branching.
@@ -47,57 +42,6 @@ def shuffle_partitions(spark: SparkSession, n: int | None):
         spark.conf.set(key, prev)
 
 
-#: provider classes behind the ``state_backend`` dial on the
-#: streaming operators. ``hdfs`` (Spark's default) keeps every shard's
-#: state as an in-heap map snapshotted to the checkpoint — right for
-#: small keyed state; ``rocksdb`` keeps it off-heap on local disk with
-#: changelog/zip snapshots — the 100 TB backend, where watermark-
-#: horizon state (stream-stream join buffers, session windows over
-#: millions of keys) must not live on the executor heap.
-STATE_BACKENDS = {
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"
-    ),
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-}
-
-
-@contextlib.contextmanager
-def streaming_state(
-    spark: SparkSession,
-    partitions: int | None = None,
-    backend: str | None = None,
-):
-    """Scope BOTH streaming-state dials around a stream run: shard
-    count (see :func:`shuffle_partitions`) and the state-store
-    provider class. Like the shard count, the provider is pinned into
-    the checkpoint at the stream's first batch — switching it on an
-    existing checkpoint is not supported by Spark, so set it before
-    the FIRST run. ``None`` for either leaves the session conf
-    untouched. Session-global like :func:`shuffle_partitions` — do
-    not start concurrent queries on the session inside the block."""
-    if backend is not None and backend not in STATE_BACKENDS:
-        raise ValueError(
-            f"state_backend must be one of {sorted(STATE_BACKENDS)}, "
-            f"got {backend!r}"
-        )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    with shuffle_partitions(spark, partitions):
-        if backend is None:
-            yield
-            return
-        prev = spark.conf.get(key)
-        spark.conf.set(key, STATE_BACKENDS[backend])
-        try:
-            yield
-        finally:
-            spark.conf.set(key, prev)
-
-
 def loop_parallelism(
     spark: SparkSession, n_rows: int, rows_per_partition: int = 250_000
 ) -> int:
@@ -110,8 +54,7 @@ def loop_parallelism(
     the batch default (sized for full-table scans) multiplies that
     fixed cost by rounds. Measured on the sf0.1 semantic components
     loop (2k labels, ~7 rounds): 12.7s at 32 partitions → 5.0s at 8,
-    identical labels — the iterative-loop twin of the streaming
-    state-shard sizing in :func:`shuffle_partitions`.
+    identical labels; applied with :func:`shuffle_partitions`.
 
     Clamped to the session default so the dial only ever turns DOWN
     at toy state sizes: at 10⁹ nodes the quotient exceeds any session
@@ -184,69 +127,6 @@ def loop_checkpoint(df: DataFrame) -> DataFrame:
         return DataFrame(fresh, spark)
     except Exception:  # private API moved: keep correctness
         return ck
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` resolved through Hadoop's
-    filesystem registry — the SAME resolution Spark applies to
-    ``checkpointLocation``, so ``file:/``, ``hdfs://``, ``s3a://``,
-    ``dbfs:/`` and scheme-less local paths all land on the store the
-    checkpoint actually lives on. Driver-local ``os.path`` calls only
-    see the local disk, which silently misses every remote scheme
-    (ADVICE r11: a marker "not found" on s3a:// would re-derive state
-    sizing against a grown corpus and orphan the checkpoint)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
-def checkpoint_marker_read(spark: SparkSession, path: str) -> str | None:
-    """Read a small text marker from any Hadoop-visible filesystem;
-    ``None`` when absent. Markers pin per-checkpoint decisions (state
-    shard counts, sink coverage) that must survive restarts on the
-    checkpoint's OWN store — see :func:`_hadoop_fs` for why this is
-    not ``open()``."""
-    fs, jpath = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        out = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            out.append(b)
-        return out.decode("utf-8")
-    finally:
-        stream.close()
-
-
-def checkpoint_marker_write(spark: SparkSession, path: str, value: str) -> None:
-    """Write (overwrite) a small text marker on the checkpoint's
-    filesystem — companion of :func:`checkpoint_marker_read`."""
-    fs, jpath = _hadoop_fs(spark, path)
-    parent = jpath.getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(bytearray(value.encode("utf-8")))
-    finally:
-        stream.close()
-
-
-def checkpoint_has_commits(spark: SparkSession, checkpoint_path: str) -> bool:
-    """True when a streaming checkpoint has at least one COMMITTED
-    batch — the "this checkpoint has history" predicate sink-coverage
-    markers need (a marker may only claim from-batch-0 coverage on a
-    checkpoint with no prior commits). Resolved on the checkpoint's
-    filesystem like the markers."""
-    fs, jpath = _hadoop_fs(spark, checkpoint_path.rstrip("/") + "/commits")
-    if not fs.exists(jpath):
-        return False
-    return len(fs.listStatus(jpath)) > 0
 
 
 def eager_persist(df: DataFrame) -> DataFrame:

@@ -522,13 +522,12 @@ class StatusServer:
                         except OSError:
                             self._send(400, {"error": "bad gzip body"})
                             return
-                    body = raw.decode()
                     precision = self._query_param("precision") or "ns"
                     try:
                         written = server.write_sink.write(
-                            body, precision=precision
+                            raw.decode(), precision=precision
                         )
-                    except ValueError as ex:
+                    except ValueError as ex:  # incl. a non-UTF-8 body
                         server._count("write_errors_total")
                         self._send(400, {"error": str(ex)})
                         return

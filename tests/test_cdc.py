@@ -1,149 +1,10 @@
-"""CDC merge-apply semantics and blocked record linkage."""
+"""Blocked record linkage (operators/dedup.py::blocked_edit_distance_pairs)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from syncflux_spark.operators.cdc import apply_changes, change_counts
 from syncflux_spark.operators.dedup import blocked_edit_distance_pairs
-
-
-@pytest.fixture(scope="module")
-def base(spark):
-    return spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "k long, status string, price double",
-    )
-
-
-@pytest.fixture(scope="module")
-def changes(spark):
-    return spark.createDataFrame(
-        [
-            (2, "U", "b2", 22.0),   # update present key
-            (3, "D", None, None),   # delete present key
-            (4, "I", "d", 40.0),    # fresh insert
-            (1, "I", "a2", 11.0),   # re-delivered insert: replaces
-            (9, "U", "x", 90.0),    # update absent key: no-op
-            (8, "D", None, None),   # delete absent key: no-op
-        ],
-        "k long, op string, status string, price double",
-    )
-
-
-class TestApplyChanges:
-    def test_merge_semantics(self, base, changes):
-        out = {
-            r.k: (r.status, r.price)
-            for r in apply_changes(base, changes, key_col="k").collect()
-        }
-        assert out == {
-            1: ("a2", 11.0),  # idempotent re-insert replaced values
-            2: ("b2", 22.0),  # updated
-            4: ("d", 40.0),   # inserted
-        }  # 3 deleted; 8/9 no-ops contributed nothing
-
-    def test_audit_counts(self, base, changes):
-        r = change_counts(base, changes, key_col="k").collect()[0]
-        assert (r.n_insert, r.n_update, r.n_delete, r.n_noop) == (2, 1, 1, 2)
-        # +1 fresh insert (k=4), -1 delete (k=3); re-insert of k=1
-        # replaces in place
-        assert r.row_delta == 0
-
-    def test_schema_matches_base(self, base, changes):
-        merged = apply_changes(base, changes, key_col="k")
-        assert merged.columns == base.columns
-
-    def test_empty_batch_is_identity(self, base, spark):
-        empty = spark.createDataFrame(
-            [], "k long, op string, status string, price double"
-        )
-        out = sorted(
-            (r.k, r.status, r.price)
-            for r in apply_changes(base, empty, key_col="k").collect()
-        )
-        assert out == [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)]
-
-    def test_duplicate_keys_raise(self, base, spark):
-        from syncflux_spark.operators.cdc import DuplicateChangeKeyError
-
-        dup = spark.createDataFrame(
-            [(2, "I", "x", 1.0), (2, "U", "y", 2.0), (3, "D", None, None)],
-            "k long, op string, status string, price double",
-        )
-        with pytest.raises(DuplicateChangeKeyError, match="multiple changes"):
-            apply_changes(base, dup, key_col="k")
-        # the guard is skippable after upstream pre-compaction
-        compacted = dup.where(~((F.col("k") == 2) & (F.col("op") == "I")))
-        out = apply_changes(base, compacted, key_col="k", check_unique=False)
-        assert {r.k for r in out.collect()} == {1, 2}
-
-
-class TestCompactChanges:
-    def test_keeps_last_per_key(self, spark):
-        from syncflux_spark.operators.cdc import compact_changes
-
-        ch = spark.createDataFrame(
-            [
-                (1, 10, "I", "a"),
-                (1, 20, "U", "a2"),   # last for k=1
-                (2, 5, "U", "b"),     # only for k=2
-                (3, 1, "I", "c"),
-                (3, 2, "U", "c2"),
-                (3, 3, "D", None),    # last for k=3
-            ],
-            "k long, seq long, op string, status string",
-        )
-        out = {
-            r.k: (r.seq, r.op)
-            for r in compact_changes(ch, "k", "seq").collect()
-        }
-        assert out == {1: (20, "U"), 2: (5, "U"), 3: (3, "D")}
-
-    def test_net_op_fold(self, spark):
-        """With op_col, the I/U/D history folds to its net MERGE
-        effect: I-then-U nets to I (upsert — the key must exist
-        afterward even if base never had it), anything ending in D
-        nets to D, I-after-D re-creates."""
-        from syncflux_spark.operators.cdc import compact_changes
-
-        ch = spark.createDataFrame(
-            [
-                (1, 1, "I", "a"), (1, 2, "U", "a2"),          # → I a2
-                (2, 1, "U", "b"), (2, 2, "D", None),          # → D
-                (3, 1, "I", "c"), (3, 2, "D", None),
-                (3, 3, "I", "c2"), (3, 4, "U", "c3"),         # → I c3
-                (4, 1, "U", "d"), (4, 2, "U", "d2"),          # → U d2
-                (5, 1, "I", "e"), (5, 2, "D", None),
-                (5, 3, "U", "zzz"),                           # → U zzz
-            ],
-            "k long, seq long, op string, status string",
-        )
-        out = {
-            r.k: (r.op, r.status)
-            for r in compact_changes(ch, "k", "seq", op_col="op").collect()
-        }
-        assert out == {
-            1: ("I", "a2"),
-            2: ("D", None),
-            3: ("I", "c3"),
-            4: ("U", "d2"),
-            5: ("U", "zzz"),
-        }
-
-    def test_ambiguous_tie_raises(self, spark):
-        from syncflux_spark.operators.cdc import (
-            DuplicateChangeKeyError,
-            compact_changes,
-        )
-
-        ch = spark.createDataFrame(
-            [(1, 7, "U", "a"), (1, 7, "D", None)],
-            "k long, seq long, op string, status string",
-        )
-        with pytest.raises(DuplicateChangeKeyError, match="ambiguous"):
-            compact_changes(ch, "k", "seq").collect()
 
 
 class TestBlockedEditDistance:
@@ -197,81 +58,6 @@ class TestBlockedEditDistance:
         # equality join on the block key
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-
-
-class TestCdcPlanDiscipline:
-    def test_base_never_shuffles(self, spark, base, changes, tmp_path):
-        """Both merge joins must broadcast the (small) batch side —
-        the base table is scanned once and never exchanged. Parquet
-        inputs so the planner has file-size stats (a local-relation
-        fixture defaults to a huge size estimate and plans SMJ first,
-        which never happens over real tables)."""
-        base.write.parquet(str(tmp_path / "b"))
-        changes.write.parquet(str(tmp_path / "c"))
-        bp = spark.read.parquet(str(tmp_path / "b"))
-        cp = spark.read.parquet(str(tmp_path / "c"))
-        plan = (
-            apply_changes(bp, cp, key_col="k")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        for line in plan.splitlines():
-            if "Exchange" in line and "BroadcastExchange" not in line:
-                raise AssertionError(f"unexpected exchange: {line}")
-
-
-class TestCdcProperties:
-    """apply_changes vs a plain-Python MERGE reference over generated
-    batches (hypothesis)."""
-
-    def test_random_batches_match_reference(self, spark):
-        from hypothesis import given, settings, strategies as st_
-
-        keys = st_.integers(min_value=0, max_value=14)
-        base_rows = st_.dictionaries(
-            keys, st_.integers(min_value=0, max_value=99), max_size=10
-        )
-        changes = st_.lists(
-            st_.tuples(
-                keys,
-                st_.sampled_from(["I", "U", "D"]),
-                st_.integers(min_value=100, max_value=199),
-            ),
-            max_size=8,
-            unique_by=lambda c: c[0],  # at most one change per key
-        )
-
-        @settings(max_examples=12, deadline=None)
-        @given(base=base_rows, ch=changes)
-        def check(base, ch):
-            bdf = spark.createDataFrame(
-                [(k, float(v)) for k, v in base.items()] or [],
-                "k long, price double",
-            )
-            cdf = spark.createDataFrame(
-                [(k, op, float(v)) for k, op, v in ch] or [],
-                "k long, op string, price double",
-            )
-            got = {
-                r.k: r.price
-                for r in apply_changes(bdf, cdf, key_col="k").collect()
-            }
-            ref = {k: float(v) for k, v in base.items()}
-            for k, op, v in ch:
-                if op == "D":
-                    ref.pop(k, None)
-                elif op == "U":
-                    if k in ref:
-                        ref[k] = float(v)
-                else:  # I: insert or idempotent replace
-                    ref[k] = float(v)
-            assert got == ref
-
-        check()
 
 
 class TestLinkageProperties:

@@ -247,6 +247,15 @@ class TestStagedWrite:
         assert not [e for e in self._entries(sink)
                     if e.endswith(".parquet") or ".write-" in e]
 
+    def test_pre_1970_timestamps_land(self, sink):
+        sink.write("cpu,h=a v=1 -1000000000\n"
+                   "cpu,h=b v=2.5,v=-3.5 -1\n"
+                   "mem,h=a n=-7i -1700000000000000000")
+        got = {(r.h, r.v, r.ts_ns) for r in sink.read_measurement("cpu").collect()}
+        assert got == {("a", 1.0, -1_000_000_000), ("b", -3.5, -1)}
+        (r,) = sink.read_measurement("mem").collect()
+        assert (r.h, r.n, r.ts_ns) == ("a", -7, -1_700_000_000_000_000_000)
+
     def test_rejected_body_lands_nothing(self, sink):
         """A conflict on the second measurement of a body keeps the
         first measurement's valid rows off disk too."""

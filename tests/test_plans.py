@@ -725,16 +725,6 @@ class TestParallelismSizing:
                 raise RuntimeError("boom")
         assert spark.conf.get(key) == before  # restored despite the raise
 
-    def test_streaming_state_rejects_unknown_backend_eagerly(self, spark):
-        from syncflux_spark.utils import streaming_state
-
-        key = "spark.sql.shuffle.partitions"
-        before = spark.conf.get(key)
-        with pytest.raises(ValueError, match="state_backend"):
-            with streaming_state(spark, 4, "bogus"):
-                pass
-        assert spark.conf.get(key) == before
-
 
 class TestStarCollapsePlans:
     """The hot-bucket star-collapse dial's scale contract, CI-pinned

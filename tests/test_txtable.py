@@ -1,4 +1,4 @@
-"""TxTable: commit-log snapshots, OCC writers, transactional MERGE."""
+"""TxTable: commit-log snapshots, OCC writers, vacuum, data skipping."""
 
 from __future__ import annotations
 
@@ -25,9 +25,11 @@ class TestSnapshots:
             TxTable.create(spark, str(tmp_path / "t"), _df(spark, [(9, "z")]))
 
     def test_time_travel(self, spark, tmp_path):
-        t = TxTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
-        t.append(_df(spark, [(2, "b")]))
-        t.overwrite(lambda s: s.where("k = 2"))
+        t = TxTable.create(
+            spark, str(tmp_path / "t"), _df(spark, [(1, "a")]), stats_cols=["k"]
+        )
+        t.append(_df(spark, [(2, "b")]), stats_cols=["k"])
+        t.expire_below("k", 2)  # drops the create group from the log
         assert t.version() == 2
         assert t.snapshot(0).count() == 1
         assert t.snapshot(1).count() == 2
@@ -60,54 +62,31 @@ class TestConcurrency:
         assert t.version() == 4
         assert {r.k for r in t.snapshot().collect()} == {0, 1, 2, 3, 4}
 
-    def test_concurrent_merges_serialize(self, spark, tmp_path):
-        """Two mergers racing on one table: OCC forces the loser to
-        rebase on the winner's commit, so BOTH batches' effects land
-        (the directory-swap writers would lose one)."""
-        t = TxTable.create(
-            spark, str(tmp_path / "t"),
-            _df(spark, [(1, "a"), (2, "b"), (3, "c")]),
-        )
-        ch1 = spark.createDataFrame(
-            [(2, "U", "b2")], "k long, op string, v string"
-        )
-        ch2 = spark.createDataFrame(
-            [(3, "D", None), (4, "I", "d")], "k long, op string, v string"
-        )
-        errs = []
-
-        def merge(ch):
-            try:
-                TxTable(spark, t.root).merge_changes(ch, key_col="k")
-            except Exception as e:  # pragma: no cover
-                errs.append(e)
-
-        t1 = threading.Thread(target=merge, args=(ch1,))
-        t2 = threading.Thread(target=merge, args=(ch2,))
-        t1.start()
-        t2.start()
-        t1.join()
-        t2.join()
-        assert not errs
-        got = {r.k: r.v for r in t.snapshot().collect()}
-        assert got == {1: "a", 2: "b2", 4: "d"}  # both merges applied
-
     def test_conflict_raises_after_retries(self, spark, tmp_path):
         t = TxTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
+        attempts = []
 
-        def compute(s):
+        def edit(state, stage):
             # sabotage: someone else always commits between read & claim
+            attempts.append(1)
             t.append(_df(spark, [(99, "interloper")]))
-            return s
+            rel, st = stage(_df(spark, [(2, "b")]))
+            return {"add": [rel], "stats": {rel: st}}
 
         with pytest.raises(CommitConflict, match="races"):
-            TxTable(spark, t.root).overwrite(compute, max_retries=2)
+            TxTable(spark, t.root)._commit(edit, max_retries=2)
+        assert len(attempts) == 2
+        live = {x.split("/")[-1] for x in t._files_at(t.version())}
+        assert set(os.listdir(os.path.join(t.root, "data"))) == live
+        assert sorted(r.k for r in t.snapshot().collect()) == [1, 99, 99]
 
 
 class TestVacuum:
     def test_removes_only_old_unreferenced(self, spark, tmp_path):
-        t = TxTable.create(spark, str(tmp_path / "t"), _df(spark, [(1, "a")]))
-        t.overwrite(lambda s: s)  # v1 supersedes v0's group
+        t = TxTable.ensure(spark, str(tmp_path / "t"))
+        t.replace_tagged("win", "w0", _df(spark, [(0, "a")]))
+        # v2 supersedes v1's group
+        t.replace_tagged("win", "w0", _df(spark, [(1, "a")]))
         orphan_rel, _ = t._write_group(_df(spark, [(9, "x")]))  # never committed
         # everything is fresh: nothing removed
         assert t.vacuum(older_than_s=3600) == []
@@ -117,79 +96,8 @@ class TestVacuum:
         for name in os.listdir(data):
             os.utime(os.path.join(data, name), (old, old))
         removed = t.vacuum(older_than_s=3600)
-        assert orphan_rel in removed and len(removed) == 2  # v0 group + orphan
+        assert orphan_rel in removed and len(removed) == 2  # v1 group + orphan
         assert [r.k for r in t.snapshot().collect()] == [1]  # live intact
-
-
-class TestCdcStreamOnTxTable:
-    def test_stream_merge_through_commit_log(self, spark, tmp_path):
-        """CdcMergeStream: the streaming MERGE commits through the
-        transaction log — replay-idempotent AND safe against
-        concurrent writers on the base."""
-        from syncflux_spark.streaming.cdc import CdcMergeStream
-
-        base = str(tmp_path / "base")
-        ch = str(tmp_path / "ch")
-        ckpt = str(tmp_path / "ckpt")
-        TxTable.create(
-            spark, base,
-            spark.createDataFrame(
-                [(1, "a", 10.0), (2, "b", 20.0)],
-                "k long, status string, price double",
-            ),
-        )
-        spark.createDataFrame(
-            [(2, "U", "b2", 22.0), (3, "I", "c", 30.0)],
-            "k long, op string, status string, price double",
-        ).coalesce(1).write.mode("append").parquet(ch)
-        s = CdcMergeStream(spark, ch, base, ckpt, key_col="k")
-        assert s.run_available() == 1
-        got = {r.k: (r.status, r.price) for r in s.read_base().collect()}
-        assert got == {1: ("a", 10.0), 2: ("b2", 22.0), 3: ("c", 30.0)}
-        assert TxTable(spark, base).version() == 1
-        # second catch-up with no new files: no new commit
-        s2 = CdcMergeStream(spark, ch, base, ckpt, key_col="k")
-        assert s2.run_available() == 0
-        assert TxTable(spark, base).version() == 1
-
-
-class TestTxCompaction:
-    def test_compactor_never_loses_a_merge(self, spark, tmp_path):
-        """Compaction racing a merge: whoever loses the commit race
-        rebases, so the final state has BOTH the merge's effect and
-        one compacted layout."""
-        from syncflux_spark.operators.compact import compact_txtable
-
-        t = TxTable.create(
-            spark, str(tmp_path / "t"),
-            _df(spark, [(i, f"v{i}") for i in range(50)]),
-        )
-        for i in range(3):  # fragment the table
-            t.append(_df(spark, [(100 + i, f"n{i}")]))
-        ch = spark.createDataFrame(
-            [(0, "D", None), (200, "I", "new")], "k long, op string, v string"
-        )
-        errs = []
-
-        def merge():
-            try:
-                TxTable(spark, t.root).merge_changes(ch, key_col="k")
-            except Exception as e:  # pragma: no cover
-                errs.append(e)
-
-        def compact():
-            try:
-                compact_txtable(spark, t.root, target_file_bytes=10**9)
-            except Exception as e:  # pragma: no cover
-                errs.append(e)
-
-        t1 = threading.Thread(target=merge)
-        t2 = threading.Thread(target=compact)
-        t1.start(); t2.start(); t1.join(); t2.join()
-        assert not errs
-        got = {r.k: r.v for r in t.snapshot().collect()}
-        assert 0 not in got and got[200] == "new"  # merge survived
-        assert len(got) == 53  # 50 - 1 + 3 + 1
 
 
 class TestDataSkipping:

@@ -1,8 +1,8 @@
 """Model-based property test for TxTable: a random sequence of
 append / publish_with_audit / replace_tagged / expire_below /
-compact_tx_tagged / compact_txtable / vacuum / vacuum_log operations must leave the table equal to a plain
-Python dict model at every step — rows, window contents, version
-monotonicity, and log resolvability all at once.
+compact_tx_tagged / vacuum / vacuum_log operations must leave the
+table equal to a plain Python dict model at every step — rows, window
+contents, version monotonicity, and log resolvability all at once.
 
 Complements the targeted race/retention tests in test_tx_routing.py:
 those pin individual interleavings; this sweeps COMPOSITIONS of the
@@ -22,7 +22,7 @@ OPS = st.lists(
     st.tuples(
         st.sampled_from(
             ["replace", "replace", "replace", "append", "publish",
-             "expire", "compact", "overwrite", "vacuum", "vacuum_log"]
+             "expire", "compact", "vacuum", "vacuum_log"]
         ),
         st.integers(min_value=0, max_value=3),
         st.integers(min_value=1, max_value=3),
@@ -91,13 +91,6 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops):
             from syncflux_spark.operators.compact import compact_tx_tagged
 
             compact_tx_tagged(spark, root, stats_cols=["ts_ns"], min_files=1)
-        elif kind == "overwrite" and model_rows():  # needs a data group
-            from syncflux_spark.operators.compact import compact_txtable
-
-            # overwrite drops tags: every window's rows become untagged
-            compact_txtable(spark, root)
-            for w in list(windows):
-                untagged.extend(windows.pop(w))
         elif kind == "vacuum":
             t.vacuum(older_than_s=0.0)
         elif kind == "vacuum_log":

@@ -272,6 +272,20 @@ class TestWriteEndpoint:
         code, _ = self._write(port, "cpu,host=h1,dc=eu usage=1.0")
         assert code == 400
 
+    def test_non_utf8_body_400_and_counted(self, wserver):
+        port, _ = wserver
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/write", data=b"cpu,h=\xff v=1 1"
+        )
+        try:
+            with urllib.request.urlopen(req) as r:
+                code = r.status
+        except urllib.error.HTTPError as e:
+            code = e.code
+        assert code == 400
+        _, body, _ = _get(port, "/metrics")
+        assert "syncflux_write_errors_total 1\n" in body
+
     def test_precision_param_scales_timestamps(self, wserver):
         port, sink = wserver
         # same instant written three ways; all must land at the

@@ -36,7 +36,6 @@ FAMILIES = [
     ("Sketches (KMV/CMS/Bloom/HLL/quantile)", r"^(kmv_|cms_|bloom_|hll_|quantile_|global_value|value_decile|key_skew|drift_|table_profile)"),
     ("Events analytics (funnels, sessions, cohorts)", r"^(funnel_|cohort_|session_|sliding_|outage_|event_|conversion_|users_|top_users)"),
     ("Streaming (`stream_*`)", r"^stream_"),
-    ("CDC (`cdc_*`)", r"^cdc_"),
     ("Multimodal (`mm_*`)", r"^mm_"),
     ("Interchange formats (CSV/JSON/ORC)", r"^(csv_|json_|orc_)"),
 ]
