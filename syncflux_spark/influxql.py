@@ -60,6 +60,7 @@ and EXPLAIN [ANALYZE] answering with the compiled Spark plan.
 from __future__ import annotations
 
 import re
+import threading
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime, timedelta, timezone
 
@@ -1362,6 +1363,10 @@ class InfluxQLEngine:
         #: plain and seasonal — streams too: forecasts come from the
         #: per-series finisher hook, seasonal state is S longs.
         self.fold_stream_threshold = 1_000_000
+        #: running queries for SHOW QUERIES / KILL QUERY, by qid
+        self._active_lock = threading.Lock()
+        self._active: dict[int, dict] = {}
+        self._qid_counter = 0
 
     def _est_buckets(self, st: "SelectStmt") -> int | None:
         """Bucket-count estimate from the statement alone: exact when
@@ -1387,14 +1392,8 @@ class InfluxQLEngine:
         per-query Spark job group (interruptOnCancel), so KILL QUERY
         <qid> cancels its jobs mid-flight. The HTTP /query handler
         wraps execution in this; direct library callers may too."""
-        import threading as _th
         import time as _time
         from contextlib import contextmanager
-
-        if not hasattr(self, "_active_lock"):
-            self._active_lock = _th.Lock()
-            self._active: dict[int, dict] = {}
-            self._qid_counter = 0
 
         @contextmanager
         def _cm():
@@ -1427,19 +1426,16 @@ class InfluxQLEngine:
         like Influx's output."""
         import time as _time
 
-        if not hasattr(self, "_active_lock"):
-            rows = []
-        else:
-            with self._active_lock:
-                rows = [
-                    (
-                        qid,
-                        meta["query"],
-                        meta["db"],
-                        f"{int(_time.monotonic() - meta['start'])}s",
-                    )
-                    for qid, meta in sorted(self._active.items())
-                ]
+        with self._active_lock:
+            rows = [
+                (
+                    qid,
+                    meta["query"],
+                    meta["db"],
+                    f"{int(_time.monotonic() - meta['start'])}s",
+                )
+                for qid, meta in sorted(self._active.items())
+            ]
         return self.spark.createDataFrame(
             rows, "qid long, query string, database string, duration string"
         )
@@ -1449,8 +1445,6 @@ class InfluxQLEngine:
         running collects fail with a cancellation error in the
         issuing thread, matching InfluxDB's behavior of erroring the
         killed client."""
-        if not hasattr(self, "_active_lock"):
-            raise InfluxQLError(f"no such query id {st.qid}")
         with self._active_lock:
             meta = self._active.get(st.qid)
         if meta is None:
@@ -1887,11 +1881,26 @@ class InfluxQLEngine:
             out = out.limit(st.limit)
         return out
 
+    def _one_partition_if_small(self, df: DataFrame) -> DataFrame:
+        """``df`` as one partition when Spark's size estimate of it
+        (the optimized plan's ``sizeInBytes``: file bytes for a file
+        scan) fits ``spark.sql.files.maxPartitionBytes``, else ``df``.
+        An aggregate over one partition needs no exchange, so it runs
+        as one Spark job instead of a shuffle-map job plus a result
+        job; small inputs are where that fixed cost dominates."""
+        jss = self.spark._jsparkSession
+        limit = jss.sessionState().conf().filesMaxPartitionBytes()
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        if int(stats.sizeInBytes()) <= limit:
+            return df.coalesce(1)
+        return df
+
     def _select_agg(
         self, st: SelectStmt, df: DataFrame, tag_cols: list[str]
     ) -> DataFrame:
         import dataclasses
 
+        df = self._one_partition_if_small(df)
         if any(p.func and p.field == "*" for p in st.projs):
             # wildcard aggregate: influx expands count(*) to one
             # aggregate per FIELD, named {func}_{field}

@@ -7,6 +7,19 @@ shuffle partitions are sized for the local harness (override
 unavoidable pandas-UDF exchange cheap, and the session timezone is
 pinned to UTC so timestamp semantics match the ns-epoch data model of
 the reference (pkg/agent/client.go:312-327 converts ns-epoch → UTC).
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.
+enabled``) is off. With it on, every DataFrame, Column and
+``functions`` call records its Python call site in the JVM, which
+costs several py4j round trips per call: compiling a ``GROUP BY
+time()`` aggregate made ~470 round trips with it on and ~140 with it
+off. The cost of turning it off: a Spark error no longer names the
+Python line that built the failing expression in its query context.
+To get that back while debugging, build the first session of the
+process with
+``get_spark(conf={"spark.python.sql.dataFrameDebugging.enabled":
+"true"})`` — PySpark reads the setting once per process, from the
+first session that a DataFrame call sees.
 """
 
 from __future__ import annotations
@@ -54,6 +67,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10m")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # caller overrides apply LAST (e.g. the measurement harnesses
     # re-enable the UI to read stage shuffle metrics over REST; a

@@ -2242,3 +2242,124 @@ class TestShowKillQueries:
         t.join(timeout=60)
         assert not t.is_alive()
         assert state["done"].startswith("cancelled:")
+
+    def test_first_queries_get_distinct_qids(self, spark, events, monkeypatch):
+        """A second query that starts while the first one is still being
+        registered gets its own qid, and SHOW QUERIES lists each query
+        while it runs. The hook runs the second query inside the first
+        ``threading.Lock()`` call that ``tracked`` makes, the window in
+        which two HTTP handler threads once built two registries."""
+        import sys
+        import threading
+
+        engine = InfluxQLEngine(spark, tables={"events": events}, now=NOW)
+        ran = []
+
+        def run(text):
+            with engine.tracked(text) as qid:
+                listed = engine.query("SHOW QUERIES").collect()
+                ran.append((qid, text, {(r.qid, r.query) for r in listed}))
+
+        real_lock, fired = threading.Lock, []
+
+        def lock_running_second_query():
+            if not fired and sys._getframe(1).f_code.co_name == "tracked":
+                fired.append(True)
+                run("SELECT second FROM events")
+            return real_lock()
+
+        monkeypatch.setattr(threading, "Lock", lock_running_second_query)
+        run("SELECT first FROM events")
+        if not fired:  # the registry exists before any query starts
+            run("SELECT second FROM events")
+        assert len({qid for qid, _, _ in ran}) == 2, ran
+        for qid, text, listed in ran:
+            assert (qid, text) in listed
+
+
+class TestSmallInputAggregate:
+    """``GROUP BY time()`` over an input that fits one file partition
+    reads it as one partition: one Spark job, no exchange, the same
+    result as the multi-partition plan."""
+
+    Q = (
+        'SELECT mean("value"), count("value"), max("count") FROM "m" '
+        "WHERE time >= 1704067200s AND time < 1704070800s "
+        'GROUP BY time(1m), "region"'
+    )
+    PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+
+    @pytest.fixture(scope="class")
+    def engine(self, spark, tmp_path_factory):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from syncflux_spark.sources.parquet import load_table
+
+        rng = np.random.default_rng(3)
+        n = 4 * 360  # 4 series, one point every 10 s for an hour
+        t0 = 1_704_067_200_000_000  # 2024-01-01, µs
+        root = tmp_path_factory.mktemp("small_agg")
+        pq.write_table(
+            pa.table({
+                "ts": pa.array(t0 + np.arange(n) // 4 * 10_000_000,
+                               pa.timestamp("us", tz="UTC")),
+                "host": [f"h{i % 4}" for i in range(n)],
+                "region": [f"r{i % 2}" for i in range(n)],
+                "value": rng.normal(50, 20, n),
+                "count": rng.integers(0, 1000, n),
+            }),
+            str(root / "m.parquet"),
+            row_group_size=128,  # several splits once partitions shrink
+        )
+        table = load_table(spark, str(root), "m")
+        return InfluxQLEngine(spark, tables={"m": table}, tags={"m": ["host", "region"]})
+
+    @staticmethod
+    def _plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    @staticmethod
+    def _by_key(rows) -> dict:
+        return {(r.time, r.region): r for r in rows}
+
+    def test_one_job_and_same_result_as_multi_partition_plan(self, spark, engine):
+        sc = spark.sparkContext
+        with engine.tracked(self.Q) as qid:
+            # qids count per engine, so an earlier engine's jobs may
+            # share this group name
+            group = f"influxql-q{qid}"
+            before = set(sc.statusTracker().getJobIdsForGroup(group))
+            df = engine.query(self.Q)
+            one = self._by_key(df.collect())
+        assert "Coalesce 1" in self._plan(df)
+        assert len(set(sc.statusTracker().getJobIdsForGroup(group)) - before) == 1
+
+        old = spark.conf.get(self.PARTITION_BYTES)
+        spark.conf.set(self.PARTITION_BYTES, "1k")
+        try:
+            df = engine.query(self.Q)
+            many = self._by_key(df.collect())
+            plan = self._plan(df)
+        finally:
+            spark.conf.set(self.PARTITION_BYTES, old)
+        assert "Exchange" in plan and "Coalesce" not in plan, plan
+        assert len(one) == 60 * 2 and one.keys() == many.keys()
+        for k, r in one.items():
+            assert (r["count"], r["max"]) == (many[k]["count"], many[k]["max"])
+            assert r["mean"] == pytest.approx(many[k]["mean"], rel=1e-12)
+
+    def test_raw_scan_never_coalesces(self, engine):
+        df = engine.query('SELECT * FROM "m" WHERE time >= 1704067200s '
+                          "AND time < 1704067800s")
+        assert "Coalesce" not in self._plan(df)
+
+    def test_compile_round_trip_budget(self, engine, py4j_round_trips):
+        """Compiling the benchmark's dashboard aggregate stays within
+        200 py4j round trips (it took ~470 with PySpark's DataFrame
+        debugging on)."""
+        engine.query(self.Q)
+        with py4j_round_trips:
+            engine.query(self.Q)
+        assert py4j_round_trips.n <= 200, py4j_round_trips.n

@@ -141,6 +141,7 @@ class TestFieldTypeConflicts:
             'm,h=a s=12 1700000000000000000',       # number into string
             "m,h=a f=12i 1700000000000000000",      # integer into float
             "m,h=a b=maybe 1700000000000000000",    # junk into boolean
+            "m,h=a n=9223372036854775808i 1700000000000000000",  # > long
         ],
     )
     def test_conflicts_rejected_as_value_error(self, sink, line):
@@ -154,6 +155,13 @@ class TestFieldTypeConflicts:
         assert n == 1
         row = sink.read_measurement("m").collect()[0]
         assert (row.n, row.s, row.f, row.b) == (5, "ok", 1.5, True)
+
+    def test_whole_long_range_lands(self, sink):
+        """19-digit integers land (they used to read null)."""
+        sink.write("m,h=a n=-9223372036854775808i 1\n"
+                   "m,h=b n=9223372036854775807i 2")
+        got = {r.h: r.n for r in sink.read_measurement("m").collect()}
+        assert got == {"a": -(2**63), "b": 2**63 - 1}
 
     def test_http_write_maps_conflict_to_400(self, spark, tmp_path):
         import urllib.error
@@ -478,3 +486,101 @@ class TestStagedWrite:
             srv.stop()
         assert not [e for e in self._entries(sink)
                     if e.endswith(".parquet") or ".write-" in e]
+
+
+class TestLeanWrite:
+    """The sink parses plain lines (no backslash, no double quote) with
+    string functions and the others with the escape- and quote-aware
+    regexes; both agree with :func:`parse_line_protocol`."""
+
+    TAGS = ["host", "region", "status"]
+    FIELDS = {"value": "float", "count": "integer", "ok": "boolean"}
+
+    @pytest.fixture()
+    def sink(self, spark, tmp_path):
+        from syncflux_spark.sources.line_protocol import LineProtocolSink
+
+        return LineProtocolSink(
+            spark, str(tmp_path), {"cpu": (self.TAGS, self.FIELDS)}
+        )
+
+    def _body(self, n: int) -> str:
+        """``n`` benchmark-shaped lines (sparse tags and fields)."""
+        lines = []
+        for i in range(n):
+            head = f"cpu,host=h{i % 7},region=r{i % 3}"
+            if i % 5:
+                head += f",status=s{i % 4}"
+            fields = f"value={i * 0.37 - 100!r}"
+            if i % 3:
+                fields += f",count={i * 13 - 50}i"
+            if i % 4:
+                fields += ",ok=true" if i % 2 else ",ok=false"
+            lines.append(f"{head} {fields} {1700000000000000000 + i}")
+        return "\n".join(lines)
+
+    def test_every_boolean_spelling(self, sink):
+        """InfluxDB reads t, T, true, True, TRUE and f, F, false,
+        False, FALSE as booleans."""
+        spellings = ["t", "T", "true", "True", "TRUE",
+                     "f", "F", "false", "False", "FALSE"]
+        assert sink.write("\n".join(
+            f"cpu,host=a value=1,ok={b} {i}" for i, b in enumerate(spellings)
+        )) == 10
+        got = {r.ts_ns: r.ok for r in sink.read_measurement("cpu").collect()}
+        assert got == {i: i < 5 for i in range(10)}
+
+    def test_plain_lines_match_the_general_parse(self, sink, spark):
+        from collections import Counter
+
+        body = "\n".join([
+            self._body(40),
+            "cpu,region=only v=1,value=2.5 5",  # tags absent, undeclared field
+            "cpu,host=a,extra=x,region=b value=-1e3,value=7,count=3i -9",
+            "cpu,host=,region=r value=1 6",  # empty tag value reads null
+            "cpu,host=a value=.5,count=-0i,ok=TRUE 7",
+        ])
+        assert sink.write(body) == 44
+        got = sink.read_measurement("cpu").collect()
+        lines = spark.createDataFrame([(ln,) for ln in body.split("\n")], ["line"])
+        want = parse_line_protocol(lines, self.TAGS, self.FIELDS).drop("measurement")
+        cols = [*self.TAGS, *self.FIELDS, "ts_ns"]
+        assert Counter(tuple(r[c] for c in cols) for r in got) == Counter(
+            tuple(r[c] for c in cols) for r in want.collect()
+        )
+        (r,) = [r for r in got if r.ts_ns == -9]
+        assert (r.host, r.region, r.value, r["count"]) == ("a", "b", 7.0, 3)
+
+    def test_plain_and_quoted_lines_in_one_body(self, sink):
+        assert sink.write('cpu,host=a value=1.5 1\n'
+                          'cpu,host=b\\ c value=2.5 2\n'
+                          'cpu,host=d value=3.5,note="x y" 3') == 3
+        got = {(r.host, r.value) for r in sink.read_measurement("cpu").collect()}
+        assert got == {("a", 1.5), ("b c", 2.5), ("d", 3.5)}
+
+    def test_only_newline_ends_a_line(self, spark, tmp_path):
+        """U+2028, \\x1c, \\x0c, \\x85 and a bare \\r are not line ends
+        in line protocol; a trailing \\r (CRLF) is dropped."""
+        from syncflux_spark.sources.line_protocol import LineProtocolSink
+
+        sink = LineProtocolSink(
+            spark, str(tmp_path), {"cpu": (["h"], {"v": "float", "s": "string"})}
+        )
+        body = ('cpu,h=a v=1,s="x\u2028y" 1\n'
+                "cpu,h=a\x1cb v=1 2\r\n"
+                'cpu,h=c\x0c v=3,s="x\x85z\rw" 3')
+        assert sink.write(body) == 3
+        got = {(r.h, r.s, r.ts_ns) for r in sink.read_measurement("cpu").collect()}
+        assert got == {("a", "x\u2028y", 1), ("a\x1cb", None, 2),
+                       ("c\x0c", "x\x85z\rw", 3)}
+
+    def test_warm_write_round_trip_budget(self, sink, py4j_round_trips):
+        """A 10k-line write, after the first one built the sink's parse
+        for the measurement, stays within 250 py4j round trips (~1,000
+        while every request built its parse with PySpark's DataFrame
+        debugging on)."""
+        body = self._body(10_000)
+        sink.write(body)
+        with py4j_round_trips:
+            assert sink.write(body) == 10_000
+        assert py4j_round_trips.n <= 250, py4j_round_trips.n

@@ -227,8 +227,16 @@ class TestInfluxQLCompilation:
         hash aggregation (partial before the exchange, final after) —
         the same plan a hand-written DataFrame rollup produces; a
         sort-based or two-exchange plan means the bucket expression
-        broke hash aggregation."""
-        plan = plan_of(spark, sf_dir, "influxql_mean_1h")
+        broke hash aggregation. That is the plan of an input larger
+        than one file partition; sf0.001's events fit one, so the
+        partition size is lowered here to stand for a large input."""
+        conf = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "1k")
+        try:
+            plan = plan_of(spark, sf_dir, "influxql_mean_1h")
+        finally:
+            spark.conf.set(conf, old)
         # exactly one hash exchange (the aggregation); the only other
         # allowed exchange is the rangepartitioning for InfluxDB's
         # default time-ordered output, which sorts the tiny rollup,
@@ -238,6 +246,15 @@ class TestInfluxQLCompilation:
         pre_exchange = plan.split("Exchange hashpartitioning")[-1]
         assert "HashAggregate" in pre_exchange and "partial_" in pre_exchange
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    def test_small_rollup_reads_one_partition(self, spark, sf_dir):
+        """An input that fits one file partition is read as one
+        partition, so the same rollup aggregates and sorts without any
+        exchange."""
+        plan = plan_of(spark, sf_dir, "influxql_mean_1h")
+        assert "Coalesce 1" in plan, plan
+        assert "Exchange" not in plan, plan
+        assert "HashAggregate" in plan
 
     def test_time_bounds_reach_scan(self, spark, sf_dir):
         """WHERE time bounds written in InfluxQL text must land in the
