@@ -15,12 +15,12 @@ from __future__ import annotations
 
 import os
 import re
-from datetime import datetime, timezone
+from collections.abc import Callable
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
-from syncflux_spark.catalog import InfluxSchDb, SparkCatalog
-from syncflux_spark.functions.time import copy_window, parse_duration
+from syncflux_spark.catalog import InfluxSchDb, RetPol, SparkCatalog
 from syncflux_spark.operators.copy import SyncReport, sync_dbrp
 from syncflux_spark.sources.parquet import load_table
 
@@ -49,15 +49,19 @@ def replicate_data(
     catalog: SparkCatalog,
     schema: list[InfluxSchDb],
     dst_root: str,
-    start: datetime,
-    end: datetime,
+    window: Callable[[RetPol], tuple[datetime, datetime]],
     chunk="5m",
     **sync_kwargs,
 ) -> list[SyncReport]:
-    """C3 ``ReplicateData`` (hacluster.go:213-234): for each DB × RP in
-    the schema, chunk-sync every measurement of that RP over
-    [start, end) into ``{dst_root}/{target_db}/{rp}/``. Each (db, rp)
-    gets its own SyncReport (C5 accounting), recovery per C2."""
+    """C3 ``ReplicateData`` / C4 ``ReplicateDataFull``
+    (hacluster.go:213-256): for each DB × RP in the schema, chunk-sync
+    every measurement of that RP over ``window(rp)`` into
+    ``{dst_root}/{target_db}/{rp}/``. C3 passes a fixed
+    ``lambda rp: (start, end)``; C4 derives it from the RP's duration
+    with ``lambda rp: copy_window(rp.duration, maxret, now)`` (infinite
+    RPs clamped to ``maxret``, X4 GetFirstLastTime, client.go:24-38).
+    Each (db, rp) gets its own SyncReport (C5 accounting), recovery
+    per C2."""
     reports: list[SyncReport] = []
     for db in schema:
         for rp in db.rps.values():
@@ -67,39 +71,7 @@ def replicate_data(
             }
             if not ms:
                 continue
-            dst = os.path.join(dst_root, db.target_name, rp.name)
-            rep = sync_dbrp(spark, ms, dst, start, end, chunk=chunk, **sync_kwargs)
-            rep.src = f"{db.name}.{rp.name}"
-            reports.append(rep)
-    return reports
-
-
-def replicate_data_full(
-    spark: SparkSession,
-    catalog: SparkCatalog,
-    schema: list[InfluxSchDb],
-    dst_root: str,
-    max_retention="8760h",
-    chunk="5m",
-    now: datetime | None = None,
-    **sync_kwargs,
-) -> list[SyncReport]:
-    """C4 ``ReplicateDataFull`` (hacluster.go:236-256): like C3 but the
-    window derives from each RP's duration — ``[now - duration, now]``,
-    infinite RPs clamped to ``max_retention`` (X4 GetFirstLastTime,
-    client.go:24-38)."""
-    now = now or datetime.now(timezone.utc)
-    maxret = parse_duration(max_retention)
-    reports: list[SyncReport] = []
-    for db in schema:
-        for rp in db.rps.values():
-            start, end = copy_window(rp.duration, maxret, now)
-            ms = {
-                name: catalog.measurement_df(db.name, name, rp.name)
-                for name in rp.measurements
-            }
-            if not ms:
-                continue
+            start, end = window(rp)
             dst = os.path.join(dst_root, db.target_name, rp.name)
             rep = sync_dbrp(spark, ms, dst, start, end, chunk=chunk, **sync_kwargs)
             rep.src = f"{db.name}.{rp.name}"

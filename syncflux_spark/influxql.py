@@ -61,6 +61,7 @@ from __future__ import annotations
 
 import re
 import threading
+import uuid
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime, timedelta, timezone
 
@@ -1363,10 +1364,14 @@ class InfluxQLEngine:
         #: plain and seasonal — streams too: forecasts come from the
         #: per-series finisher hook, seasonal state is S longs.
         self.fold_stream_threshold = 1_000_000
-        #: running queries for SHOW QUERIES / KILL QUERY, by qid
+        #: running queries for SHOW QUERIES / KILL QUERY, by qid; each
+        #: runs in job group ``{_group_prefix}{qid}``. qids count from 1
+        #: in every engine and job groups are shared by the whole
+        #: SparkContext, so the prefix carries a token of this engine.
         self._active_lock = threading.Lock()
         self._active: dict[int, dict] = {}
         self._qid_counter = 0
+        self._group_prefix = f"influxql-{uuid.uuid4().hex[:12]}-q"
 
     def _est_buckets(self, st: "SelectStmt") -> int | None:
         """Bucket-count estimate from the statement alone: exact when
@@ -1400,7 +1405,7 @@ class InfluxQLEngine:
             with self._active_lock:
                 self._qid_counter += 1
                 qid = self._qid_counter
-            group = f"influxql-q{qid}"
+            group = f"{self._group_prefix}{qid}"
             sc = self.spark.sparkContext
             sc.setJobGroup(group, text[:200], interruptOnCancel=True)
             with self._active_lock:

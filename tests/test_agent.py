@@ -1,4 +1,4 @@
-"""C3/C4 orchestration tests: replicate_data(_full) over a small
+"""C3/C4 orchestration tests: replicate_data over a small
 catalog warehouse — the agent-layer loop (hacluster.go:213-256) on top
 of the chunk-sync engine."""
 
@@ -8,8 +8,9 @@ from datetime import datetime, timedelta, timezone
 
 import pytest
 
-from syncflux_spark.agent import replicate_data, replicate_data_full
+from syncflux_spark.agent import replicate_data
 from syncflux_spark.catalog import FieldSch, MeasurementSch, RetPol, SparkCatalog
+from syncflux_spark.functions.time import copy_window, parse_duration
 from syncflux_spark.operators.copy import read_copied
 
 BASE = datetime(2024, 3, 1, tzinfo=timezone.utc)
@@ -48,7 +49,8 @@ def test_replicate_data_window(spark, warehouse, tmp_path):
     schema = cat.get_schema(db_filter=f"^{db}$")
     reports = replicate_data(
         spark, cat, schema, str(tmp_path),
-        BASE, BASE + timedelta(hours=24), chunk="12h", num_workers=2,
+        lambda rp: (BASE, BASE + timedelta(hours=24)),
+        chunk="12h", num_workers=2,
     )
     assert len(reports) == 1 and reports[0].bad_chunks == []
     back = read_copied(spark, f"{tmp_path}/{db}/autogen", "cpu")
@@ -59,9 +61,11 @@ def test_replicate_data_full_clamps_to_rp(spark, warehouse, tmp_path):
     cat, db = warehouse
     schema = cat.get_schema(db_filter=f"^{db}$")
     now = BASE + timedelta(hours=48)
-    reports = replicate_data_full(
-        spark, cat, schema, str(tmp_path), chunk="24h",
-        now=now, num_workers=2,
+    maxret = parse_duration("8760h")
+    reports = replicate_data(
+        spark, cat, schema, str(tmp_path),
+        lambda rp: copy_window(rp.duration, maxret, now),
+        chunk="24h", num_workers=2,
     )
     assert len(reports) == 1 and reports[0].bad_chunks == []
     back = read_copied(spark, f"{tmp_path}/{db}/autogen", "cpu")

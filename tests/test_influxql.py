@@ -2276,6 +2276,60 @@ class TestShowKillQueries:
         for qid, text, listed in ran:
             assert (qid, text) in listed
 
+    def test_kill_leaves_other_engines_query_running(self, spark, events):
+        """Two engines in one process both number their first query 1.
+        Their job groups must differ, so KILL QUERY 1 on one engine
+        cancels its own query and leaves the other engine's query 1
+        running."""
+        import threading
+        import time
+
+        sc = spark.sparkContext
+        engines = [
+            InfluxQLEngine(spark, tables={"events": events}, now=NOW)
+            for _ in range(2)
+        ]
+        state: dict[int, dict] = {0: {}, 1: {}}
+
+        def run(i):
+            eng, st = engines[i], state[i]
+            try:
+                with eng.tracked("SELECT slow FROM synthetic") as qid:
+                    st["qid"], st["group"] = qid, eng._active[qid]["group"]
+                    # one task that runs until it is cancelled
+                    spark.range(0, 10**13, 1, 1).selectExpr("sum(id)").collect()
+                st["done"] = "finished"
+            except Exception as e:
+                st["done"] = f"cancelled:{type(e).__name__}"
+
+        threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
+        for t in threads:
+            t.start()
+        try:
+            for _ in range(200):  # both registered and their jobs started
+                if all(
+                    "group" in st and sc.statusTracker().getJobIdsForGroup(st["group"])
+                    for st in state.values()
+                ):
+                    break
+                time.sleep(0.05)
+            assert state[0]["qid"] == state[1]["qid"] == 1
+            assert state[0]["group"] != state[1]["group"]
+            engines[0].query("KILL QUERY 1")
+            threads[0].join(timeout=60)
+            assert state[0]["done"].startswith("cancelled:")
+            threads[1].join(timeout=2)
+            assert threads[1].is_alive() and "done" not in state[1], state[1]
+            engines[1].query("KILL QUERY 1")
+            threads[1].join(timeout=60)
+            assert state[1]["done"].startswith("cancelled:")
+        finally:
+            for st in state.values():
+                if "group" in st:
+                    sc.cancelJobGroup(st["group"])
+            for t in threads:
+                t.join(timeout=60)
+
 
 class TestSmallInputAggregate:
     """``GROUP BY time()`` over an input that fits one file partition
@@ -2327,14 +2381,11 @@ class TestSmallInputAggregate:
     def test_one_job_and_same_result_as_multi_partition_plan(self, spark, engine):
         sc = spark.sparkContext
         with engine.tracked(self.Q) as qid:
-            # qids count per engine, so an earlier engine's jobs may
-            # share this group name
-            group = f"influxql-q{qid}"
-            before = set(sc.statusTracker().getJobIdsForGroup(group))
+            group = engine._active[qid]["group"]
             df = engine.query(self.Q)
             one = self._by_key(df.collect())
         assert "Coalesce 1" in self._plan(df)
-        assert len(set(sc.statusTracker().getJobIdsForGroup(group)) - before) == 1
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
         old = spark.conf.get(self.PARTITION_BYTES)
         spark.conf.set(self.PARTITION_BYTES, "1k")
