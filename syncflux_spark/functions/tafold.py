@@ -1,47 +1,32 @@
-"""Linear-time per-series kernels for the InfluxQL TA fold family.
+"""Row-streaming form of the InfluxQL TA fold family.
 
-The in-row codegen forms in ``influxql.py`` compute bucket *j*'s value
-by re-folding the per-series prefix ``x₁..xⱼ`` — O(B²) work inside one
-projection, which is fine at rollup scale (≤ a few thousand buckets)
-but a straggler that never finishes at ``GROUP BY time(1m)`` over a
-year (525 k buckets → ~10¹¹ fold steps on ONE row). Above the
-engine's ``fold_linear_threshold`` (estimated from the statement's
-time range and group interval at plan-build time) the engine switches
-to these kernels: ONE Arrow-batched pass per series that carries the
-running state and emits every bucket's value — O(B).
-
-Above ``fold_stream_threshold`` (~10⁶ buckets) even the linear form
-has a wall: the whole series materializes as ONE Arrow array cell
-(`collect_list` in the JVM, then one giant list through one Python
-worker). :func:`streaming_fold` is the row-streaming fallback — no
-per-series array is ever built: the rollup rows are clustered by
-series and sorted by time, then a ``mapInPandas`` kernel carries the
-recurrence state ACROSS Arrow batches, so memory is O(arrow batch),
-not O(series). One series still flows through one task (the
-recurrence is inherently sequential — same as the reference's
-engine), but a 10⁷-bucket series completes in bounded memory
+Every member (EMA, RSI, DEMA/TEMA/TRIX, KAMA/ER, holt_winters) has two
+forms, picked per statement by ``InfluxQLEngine.fold_stream_threshold``
+(estimated buckets, known at plan build). The in-row codegen form in
+``influxql.py`` computes bucket *j*'s value by re-folding the series
+prefix ``x₁..xⱼ`` — O(B²) work inside one JVM projection, no Python
+worker, the cheaper form below ~100 buckets. Above the threshold, and
+for any unbounded time range, :func:`streaming_fold` runs: the rollup
+rows are clustered by series and sorted by time, then a
+``mapInPandas`` kernel carries the recurrence state ACROSS Arrow
+batches — O(B) work, memory O(arrow batch), never a per-series array.
+One series still flows through one task (the recurrence is inherently
+sequential), but a 10⁷-bucket series completes in bounded memory
 (tests/test_tafold_stream.py).
 
-**Bit-determinism contract**: every kernel replays EXACTLY the same
-sequence of individually-rounded IEEE-754 operations as the codegen
-fold it replaces (and therefore as the DuckDB oracle): same operand
-order, same intermediate rounding, no FMA contraction (CPython and
-JVM both evaluate ``a*b + c*d`` as two mults and an add on doubles).
-SQL null semantics are mirrored op-by-op: plain arithmetic
-null-propagates, ``greatest(expr, 0.0)`` treats a null operand as
-absent (yielding 0.0), ``when(cond_null)`` falls to the otherwise
-branch. Tested bit-exact against the codegen forms over randomized
-series including nulls (tests/test_influxql.py::TestLinearFolds).
-Both the array kernels and the streaming fold consume the SAME
-stepper closures (one recurrence implementation), so the streaming
-path inherits the contract by construction — pinned again directly
-in tests/test_tafold_stream.py.
-
-These are per-SERIES kernels: one input row per series for the array
-form (the array column holding that series' rollup values in time
-order), one input row per BUCKET for the streaming form — in both,
-the Python-side loop is O(buckets) with Arrow transfer amortized, not
-a row-at-a-time UDF over fact rows.
+The steppers below are the ONE Python statement of each recurrence.
+**Bit-determinism contract**: each replays EXACTLY the sequence of
+individually-rounded IEEE-754 operations of the codegen fold (and
+therefore of the DuckDB oracle): same operand order, same
+intermediate rounding, no FMA contraction (CPython and JVM both
+evaluate ``a*b + c*d`` as two mults and an add on doubles). SQL null
+semantics are mirrored op-by-op: plain arithmetic null-propagates,
+``greatest(expr, 0.0)`` treats a null operand as absent (yielding
+0.0), ``when(cond_null)`` falls to the otherwise branch. Pinned
+bit-exact against the codegen forms on Spark (tests/test_influxql.py::
+TestLinearFolds, tests/test_tafold_stream.py, both including null
+buckets) and against from-scratch prefix re-folds over randomized
+series (tests/test_tafold_properties.py).
 """
 
 from __future__ import annotations
@@ -49,37 +34,16 @@ from __future__ import annotations
 import math
 from collections import deque
 
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
-
 
 def _is_null(x) -> bool:
     return x is None or (isinstance(x, float) and math.isnan(x))
 
 
-def _vals(cell) -> list:
-    """Arrow list cell → Python list with None for SQL nulls (Arrow
-    surfaces them as NaN in float arrays, None in object arrays)."""
-    xs = cell.tolist() if hasattr(cell, "tolist") else list(cell)
-    return [None if _is_null(x) else x for x in xs]
-
-
-def _arr_udf(fn):
-    """Wrap a list→list series kernel as an Arrow-batched pandas UDF
-    over array<double> columns."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def k(col):
-        return col.apply(lambda cell: fn(_vals(cell)))
-
-    return k
-
-
 # ---------------------------------------------------------------------------
 # Steppers: each returns a closure ``step(x) -> value`` that advances
 # one bucket and returns that bucket's output (None for SQL null /
-# warm-up slots). The ONE implementation of each recurrence — the
-# array kernels below and streaming_fold both run these.
+# warm-up slots). The ONE implementation of each recurrence;
+# streaming_fold runs them.
 # ---------------------------------------------------------------------------
 
 
@@ -396,67 +360,8 @@ def hw_finisher(n_fc: int, iv: int):
     return finish
 
 
-def _run(stepper_factory, xs: list) -> list:
-    step = stepper_factory()
-    return [step(x) for x in xs]
-
-
 # ---------------------------------------------------------------------------
-# Array kernels (one row per series, array<double> in/out) — thin
-# wrappers over the steppers.
-# ---------------------------------------------------------------------------
-
-
-def ema_values(xs: list, alpha: float, beta: float) -> list:
-    return _run(lambda: ema_stepper(alpha, beta), xs)
-
-
-def ema_udf(alpha: float, beta: float):
-    return _arr_udf(lambda xs: ema_values(xs, alpha, beta))
-
-
-def rsi_values(xs: list, n: int) -> list:
-    return _run(lambda: rsi_stepper(n), xs)
-
-
-def rsi_udf(n: int):
-    return _arr_udf(lambda xs: rsi_values(xs, n))
-
-
-def cascade_values(xs: list, alpha: float, beta: float, kind: str) -> list:
-    return _run(lambda: cascade_stepper(alpha, beta, kind), xs)
-
-
-def cascade_udf(alpha: float, beta: float, kind: str):
-    return _arr_udf(lambda xs: cascade_values(xs, alpha, beta, kind))
-
-
-def kama_values(xs: list, n: int, spread: float, slow: float) -> list:
-    return _run(lambda: kama_stepper(n, spread, slow), xs)
-
-
-def kama_udf(n: int, spread: float, slow: float):
-    return _arr_udf(lambda xs: kama_values(xs, n, spread, slow))
-
-
-def hw_fit_values(xs: list) -> list:
-    return _run(hw_fit_stepper, xs)
-
-
-def hw_fit_udf():
-    """holt_winters_with_fit fitted values: input the int64-micros
-    array; output the fitted doubles (see hw_fit_stepper)."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def k(col):
-        return col.apply(lambda cell: hw_fit_values(_vals(cell)))
-
-    return k
-
-
-# ---------------------------------------------------------------------------
-# Row-streaming fold: the O(arrow-batch) memory path for series too
-# long to materialize as one array cell.
+# Row-streaming fold: O(B) work, O(arrow-batch) memory per series.
 # ---------------------------------------------------------------------------
 
 
@@ -479,13 +384,13 @@ def streaming_fold(
 
     ``emit_from`` drops each series' first ``emit_from − 1`` buckets
     from the OUTPUT while still folding them into the state — the
-    warm-up semantics the array call sites express with their ``idx``
-    sequence lower bound (RSI/KAMA start at N+1, TRIX at 2);
+    warm-up semantics the in-row form expresses with its first emitted
+    bucket (RSI/KAMA start at N+1, TRIX at 2);
     ``float("inf")`` emits no per-bucket rows at all (forecast-only
     operators). ``finisher(step, last_time) -> [(t, v), ...]`` runs
     once per COMPLETED series (at each key change and at stream end)
     and appends its rows — how holt_winters emits forecasts past each
-    series' last bucket without the array form's final-state fold.
+    series' last bucket without the in-row form's final-state fold.
 
     Scale shape: the shuffle moves one row per (series, bucket) —
     exactly what the rollup already produced; no collect_list, no

@@ -6,7 +6,8 @@ Covers the reference's entire scalar-function surface (SURVEY §2.7):
   (pkg/agent/client.go:312-327): ns-epoch → timestamp. Spark
   timestamps are µs-precision, so the canonical representation of a
   point time at full fidelity is a ``time_ns`` LongType column; the
-  timestamp view is derived (and truncates ns→µs, documented).
+  timestamp view is derived (and truncates ns→µs, documented). X2's
+  string input is ``unixnano_to_ts(c.cast("long"))``.
 - X3 ``parseInputTime`` (pkg/util.go:9-28): CLI-style time strings.
 - X4 ``RetPol.GetFirstLastTime`` (pkg/agent/client.go:24-38): copy
   window from retention duration with infinite-RP clamping.
@@ -54,19 +55,6 @@ def unixnano_to_ts(col: Column | str) -> Column:
     UDF.
     """
     return F.timestamp_micros(ns_to_us(col))
-
-
-def str_unixnano_to_ts(col: Column | str) -> Column:
-    """X2: string ns-epoch → timestamp (cast then X1,
-    pkg/agent/client.go:318-327)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return unixnano_to_ts(c.cast("long"))
-
-
-def ts_to_unixnano(col: Column | str) -> Column:
-    """Inverse of X1: timestamp → ns-epoch long (µs-resolution * 1000)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c) * F.lit(1000)
 
 
 def time_bucket(col: Column | str, width_seconds: int) -> Column:

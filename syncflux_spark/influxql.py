@@ -68,6 +68,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from syncflux_spark.functions import tafold
 from syncflux_spark.functions.time import parse_duration
 
 # ---------------------------------------------------------------------------
@@ -1311,6 +1312,32 @@ def split_statements(q: str) -> list[str]:
 # ---------------------------------------------------------------------------
 
 
+@dataclass(frozen=True)
+class _TaFold:
+    """One member of the InfluxQL TA fold family, in both its forms
+    (see :meth:`InfluxQLEngine._ta_fold`). ``stepper`` is a zero-arg
+    factory of the row stream's per-bucket step (functions/tafold.py;
+    None: in-row only), pickled to the Python workers, so it must not
+    capture the engine. ``in_row(g) -> (g, rows)`` builds the JVM
+    form over the collapsed series row ``g``: ``rows`` is an
+    array<struct<t, v>> column to explode. ``emit_from`` is the first
+    emitted bucket (1-based; inf: forecasts only), ``finisher`` emits
+    the stream's per-series forecast rows, and ``micros`` collapses
+    ``_xs`` as fixed-point int64 micros instead of doubles."""
+
+    stepper: object
+    in_row: object
+    emit_from: float = 1
+    finisher: object = None
+    micros: bool = False
+
+
+def _floordiv(col: Column, d: int) -> Column:
+    """⌊col / d⌋ as a long, through a double divide — the fixed-point
+    Holt-Winters op the oracle and functions/tafold.py replay."""
+    return F.floor(col.cast("double") / F.lit(float(d))).cast("long")
+
+
 class InfluxQLEngine:
     """Execute InfluxQL against registered Spark tables.
 
@@ -1321,6 +1348,15 @@ class InfluxQLEngine:
     not a tag and not a time column is a field. Metadata statements
     need a :class:`SparkCatalog` (optional otherwise).
     """
+
+    #: estimated bucket count (time range / group interval, known at
+    #: plan build) up to which the TA fold family runs its in-row JVM
+    #: fold; above it, and for any unbounded time range, the rollup
+    #: rows stream through functions/tafold.py::streaming_fold. The
+    #: in-row fold is O(B²) per series and wins below ~100 buckets;
+    #: the stream is O(B) with a fixed Python-worker cost (SCALE.md
+    #: has the measurements).
+    fold_stream_threshold = 100
 
     def __init__(
         self,
@@ -1344,26 +1380,6 @@ class InfluxQLEngine:
         #: (each CQ writes under {cq_root}/{target}/)
         self.cq_root = cq_root
         self.continuous_queries: dict[str, object] = {}
-        #: above this estimated bucket count (time range / group
-        #: interval, decided at plan build) the TA fold family
-        #: (EMA/RSI/DEMA/TEMA/TRIX/KAMA/holt_winters_with_fit)
-        #: switches from O(B²) in-row prefix folds to the linear
-        #: Arrow kernels in functions/tafold.py (bit-identical per
-        #: TestLinearFolds). Unbounded time ranges take the linear
-        #: path: their bucket count is unknowable at plan time and
-        #: only the linear form is safe at scale.
-        self.fold_linear_threshold = 5000
-        #: above this estimated bucket count even the linear Arrow
-        #: kernel hits a wall — the whole series materializes as ONE
-        #: collect_list array cell through one Python worker — so the
-        #: fold family (EMA/RSI/DEMA/TEMA/TRIX/KAMA/ER) switches to
-        #: the row-streaming form (functions/tafold.py::
-        #: streaming_fold): state carried across Arrow batches, memory
-        #: O(batch) instead of O(series), bit-identical (the same
-        #: stepper closures drive both paths). holt_winters — both
-        #: plain and seasonal — streams too: forecasts come from the
-        #: per-series finisher hook, seasonal state is S longs.
-        self.fold_stream_threshold = 1_000_000
         #: running queries for SHOW QUERIES / KILL QUERY, by qid; each
         #: runs in job group ``{_group_prefix}{qid}``. qids count from 1
         #: in every engine and job groups are shared by the whole
@@ -1381,14 +1397,6 @@ class InfluxQLEngine:
         if not iv or lo is None or hi is None:
             return None
         return int((hi - lo) // iv) + 1
-
-    def _use_linear_fold(self, st: "SelectStmt") -> bool:
-        est = self._est_buckets(st)
-        return est is None or est > self.fold_linear_threshold
-
-    def _use_stream_fold(self, st: "SelectStmt") -> bool:
-        est = self._est_buckets(st)
-        return est is not None and est > self.fold_stream_threshold
 
     # -- running-query admin (SHOW QUERIES / KILL QUERY) --------------------
     def tracked(self, text: str):
@@ -1985,39 +1993,9 @@ class InfluxQLEngine:
         ] + posts
         out = out.select(*sel)
 
-        if any(
-            p.transform in ("holt_winters", "holt_winters_with_fit")
-            for p in st.projs
-        ):
-            return self._apply_holt_winters(out, st, group_tags, bucket is not None)
-        if any(
-            p.transform == "exponential_moving_average" for p in st.projs
-        ):
-            return self._apply_ema(out, st, group_tags, bucket is not None)
-        if any(
-            p.transform == "relative_strength_index" for p in st.projs
-        ):
-            return self._apply_rsi(out, st, group_tags, bucket is not None)
-        if any(
-            p.transform == "chande_momentum_oscillator" for p in st.projs
-        ):
-            return self._apply_cmo(out, st, group_tags, bucket is not None)
-        if any(
-            p.transform
-            in (
-                "double_exponential_moving_average",
-                "triple_exponential_moving_average",
-                "triple_exponential_derivative",
-            )
-            for p in st.projs
-        ):
-            return self._apply_ema_cascade(out, st, group_tags, bucket is not None)
-        if any(
-            p.transform
-            in ("kaufmans_efficiency_ratio", "kaufmans_adaptive_moving_average")
-            for p in st.projs
-        ):
-            return self._apply_kaufman(out, st, group_tags, bucket is not None)
+        ta = next((p for p in st.projs if p.transform in self._TA_FOLDS), None)
+        if ta is not None:
+            return self._ta_fold(out, st, group_tags, bucket is not None, ta)
         if any(p.transform for p in st.projs):
             out = self._apply_transforms(out, st, group_tags, bucket is not None)
 
@@ -2194,12 +2172,116 @@ class InfluxQLEngine:
             out = out.where(cond)
         return out
 
-    def _apply_ema(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str], has_bucket: bool
+    #: the TA fold family: transform name → member builder. Each
+    #: builder takes (proj, N, group interval ns) and returns the
+    #: member's :class:`_TaFold`; :meth:`_ta_fold` runs it.
+    _TA_FOLDS = {
+        "exponential_moving_average": "_apply_ema",
+        "relative_strength_index": "_apply_rsi",
+        "chande_momentum_oscillator": "_apply_cmo",
+        "double_exponential_moving_average": "_apply_ema_cascade",
+        "triple_exponential_moving_average": "_apply_ema_cascade",
+        "triple_exponential_derivative": "_apply_ema_cascade",
+        "kaufmans_efficiency_ratio": "_apply_kaufman",
+        "kaufmans_adaptive_moving_average": "_apply_kaufman",
+        "holt_winters": "_apply_holt_winters",
+        "holt_winters_with_fit": "_apply_holt_winters",
+    }
+
+    def _ta_fold(
+        self, out: DataFrame, st: SelectStmt, group_tags: list[str],
+        has_bucket: bool, p: Proj,
     ) -> DataFrame:
-        """``exponential_moving_average(func(v), N)`` over a ``GROUP
-        BY time`` rollup: one EMA value per bucket per series, with
-        InfluxQL's α = 2/(N+1) smoothing and EMA₁ = x₁ seeding.
+        """The one scaffold of the TA fold family, over a ``GROUP BY
+        time`` rollup (one row per bucket × series): validate the
+        statement, keep the SLIMIT/SOFFSET series window, run the
+        member in one of its two forms, then ORDER/OFFSET/LIMIT.
+
+        * In-row (up to ``fold_stream_threshold`` estimated buckets,
+          and always for CMO, which has no stepper): the rollup
+          collapses to one row per series — ``_pts`` (time-sorted
+          (t, value) structs) and ``_xs`` (the values as doubles, or
+          as fixed-point int64 micros for holt_winters) — and the
+          member's codegen fold yields (t, v) structs that explode
+          back to rows. JVM only, no Python worker; O(B²) prefix
+          folds, cheapest below ~100 buckets.
+        * Row stream (above the threshold, and for any unbounded
+          time range): the rollup rows stream through
+          functions/tafold.py::streaming_fold, recurrence state
+          carried across Arrow batches — O(B), memory O(batch). The
+          member's stepper replays the in-row fold's IEEE op
+          sequence, so both forms are bit-identical.
+        """
+        fname = p.transform
+        if not has_bucket:
+            raise InfluxQLError(f"{fname} requires GROUP BY time(...)")
+        if len(st.projs) != 1:
+            raise InfluxQLError(
+                f"{fname} must be the only projection in the select"
+            )
+        n = int(p.transform_arg or 0)
+        if n < 1:
+            what = "forecast count" if fname.startswith("holt_") else "period"
+            raise InfluxQLError(f"{fname} {what} must be >= 1")
+        fold = getattr(self, self._TA_FOLDS[fname])(p, n, st.group_time_ns)
+        if st.slimit is not None or st.soffset:
+            out = self._apply_slimit(out, st, group_tags)
+        name, tags = p.out_name, [F.col(t) for t in group_tags]
+        est = self._est_buckets(st)
+        if fold.stepper is not None and (
+            est is None or est > self.fold_stream_threshold
+        ):
+            src = out.select(
+                "time", *group_tags, F.col(name).cast("double").alias(name)
+            )
+            res = tafold.streaming_fold(
+                src, list(group_tags), "time", name, fold.stepper,
+                emit_from=fold.emit_from, finisher=fold.finisher,
+            )
+        else:
+            pts = F.array_sort(
+                F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
+            )
+            if fold.micros:
+                xs = F.transform(
+                    "_pts",
+                    lambda s: F.floor(s[name] * 1_000_000 + F.lit(0.5)).cast(
+                        "long"
+                    ),
+                )
+            else:
+                xs = F.transform("_pts", lambda s: s[name].cast("double"))
+            g = out.groupBy(*tags).agg(pts.alias("_pts"))
+            g, rows = fold.in_row(g.select(*tags, "_pts", xs.alias("_xs")))
+            res = g.select(*tags, F.explode(rows).alias("_r")).select(
+                F.col("_r.t").alias("time"), *tags, F.col("_r.v").alias(name)
+            )
+        res = res.orderBy(F.desc("time") if st.order_desc else F.asc("time"))
+        if st.offset:
+            res = res.offset(st.offset)
+        if st.limit is not None:
+            res = res.limit(st.limit)
+        return res
+
+    @staticmethod
+    def _per_bucket(start: int, value_at) -> Column:
+        """(t, v) structs for buckets ``start``..B of a collapsed
+        series, v = ``value_at(j)`` (j 1-based); empty when the series
+        is shorter than ``start``."""
+        idx = F.when(
+            F.size("_xs") >= start, F.sequence(F.lit(start), F.size("_xs"))
+        ).otherwise(F.array().cast("array<int>"))
+        return F.transform(
+            idx,
+            lambda j: F.struct(
+                F.element_at("_pts", j)["t"].alias("t"), value_at(j).alias("v")
+            ),
+        )
+
+    def _apply_ema(self, p: Proj, n: int, iv: int) -> "_TaFold":
+        """``exponential_moving_average(func(v), N)``: one EMA value
+        per bucket per series, with InfluxQL's α = 2/(N+1) smoothing
+        and EMA₁ = x₁ seeding.
 
         Determinism: α and β = 1-α are computed ONCE in Python and
         inlined as literals into both the Spark fold and the DuckDB
@@ -2208,125 +2290,34 @@ class InfluxQLEngine:
         fixed order, so the recurrence is bit-identical across
         engines (reassociation, the usual float hazard, never
         happens; neither engine contracts the step into an FMA).
-
-        Shape: the rollup collapses to one ordered array per series
-        (bounded by buckets-per-series, never fact rows); bucket i's
-        EMA is a left fold over the first i values — O(buckets²)
-        in-row work per series, all inside one codegen projection; at
-        1 k buckets/series that is ~10⁶ fused multiply-adds per row,
-        far below the cost of the rollup's own shuffle."""
-        if not has_bucket:
-            raise InfluxQLError(
-                "exponential_moving_average requires GROUP BY time(...)"
-            )
-        if len(st.projs) != 1:
-            raise InfluxQLError(
-                "exponential_moving_average must be the only projection "
-                "in the select"
-            )
-        p = st.projs[0]
-        n = int(p.transform_arg or 0)
-        if n < 1:
-            raise InfluxQLError(
-                "exponential_moving_average period must be >= 1"
-            )
+        In-row, bucket j's EMA is a left fold over the first j
+        values."""
         alpha = 2.0 / (n + 1.0)
         beta = 1.0 - alpha
-        name, tags = p.out_name, [F.col(t) for t in group_tags]
-        if self._use_stream_fold(st):
-            from syncflux_spark.functions.tafold import ema_stepper
 
-            return self._stream_fold(
-                out, st, group_tags, name,
-                lambda: ema_stepper(alpha, beta),
+        def ema_at(j):
+            return F.aggregate(
+                F.slice("_xs", F.lit(2), j - F.lit(1)),
+                F.element_at("_xs", F.lit(1)),
+                lambda acc, x: x * F.lit(alpha) + acc * F.lit(beta),
             )
-        pts = F.array_sort(
-            F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
+
+        return _TaFold(
+            lambda: tafold.ema_stepper(alpha, beta),
+            lambda g: (g, self._per_bucket(1, ema_at)),
         )
-        g = out.groupBy(*tags).agg(pts.alias("_pts"))
-        xs = F.transform("_pts", lambda s: s[name].cast("double"))
-        g = g.select(*tags, F.col("_pts"), xs.alias("_xs"))
-        idx = F.sequence(F.lit(1), F.size("_xs"))
-        if self._use_linear_fold(st):
-            # large/unbounded ranges: one linear Arrow pass per series
-            # (bit-identical to the fold — see functions/tafold.py)
-            from syncflux_spark.functions.tafold import ema_udf
 
-            g = g.withColumn("_vals", ema_udf(alpha, beta)(F.col("_xs")))
-            emas = F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at("_pts", i)["t"].alias("t"),
-                    F.element_at("_vals", i).alias("v"),
-                ),
-            )
-        else:
-            emas = F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at("_pts", i)["t"].alias("t"),
-                    F.aggregate(
-                        F.slice("_xs", F.lit(2), i - F.lit(1)),
-                        F.element_at("_xs", F.lit(1)),
-                        lambda acc, x: x * F.lit(alpha) + acc * F.lit(beta),
-                    ).alias("v"),
-                ),
-            )
-        res = g.select(*tags, F.explode(emas).alias("_r")).select(
-            F.col("_r.t").alias("time"),
-            *[F.col(t) for t in group_tags],
-            F.col("_r.v").alias(name),
-        )
-        order = [F.desc("time")] if st.order_desc else [F.asc("time")]
-        res = res.orderBy(*order)
-        if st.offset:
-            res = res.offset(st.offset)
-        if st.limit is not None:
-            res = res.limit(st.limit)
-        return res
-
-    def _apply_rsi(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str], has_bucket: bool
-    ) -> DataFrame:
-        """``relative_strength_index(func(v), N)`` over a ``GROUP BY
-        time`` rollup: Wilder's RSI per bucket per series. Gains and
-        losses of consecutive bucket values seed an N-bucket simple
-        average and then smooth by Wilder's recurrence
-        ``ag' = (ag·(N-1) + g) / N``; RSI = 100·ag/(ag+al), emitted
-        from bucket N+1 onward (matching InfluxDB's warm-up), null
-        when the window saw no movement. Every step is a fixed
-        sequence of individually-rounded IEEE ops with literal
+    def _apply_rsi(self, p: Proj, n: int, iv: int) -> "_TaFold":
+        """``relative_strength_index(func(v), N)``: Wilder's RSI per
+        bucket per series. Gains and losses of consecutive bucket
+        values seed an N-bucket simple average and then smooth by
+        Wilder's recurrence ``ag' = (ag·(N-1) + g) / N``; RSI =
+        100·ag/(ag+al), emitted from bucket N+1 (matching InfluxDB's
+        warm-up), null when the window saw no movement. Every step is
+        a fixed sequence of individually-rounded IEEE ops with literal
         constants shared with the oracle — bit-deterministic, same
-        argument as ``_apply_ema``. Per-bucket prefix folds are
-        O(buckets²) in-row over the collapsed rollup."""
-        if not has_bucket:
-            raise InfluxQLError(
-                "relative_strength_index requires GROUP BY time(...)"
-            )
-        if len(st.projs) != 1:
-            raise InfluxQLError(
-                "relative_strength_index must be the only projection "
-                "in the select"
-            )
-        p = st.projs[0]
-        n = int(p.transform_arg or 0)
-        if n < 1:
-            raise InfluxQLError("relative_strength_index period must be >= 1")
+        argument as ``_apply_ema``."""
         fn, fn1 = float(n), float(n - 1)
-        name, tags = p.out_name, [F.col(t) for t in group_tags]
-        if self._use_stream_fold(st):
-            from syncflux_spark.functions.tafold import rsi_stepper
-
-            return self._stream_fold(
-                out, st, group_tags, name,
-                lambda: rsi_stepper(n), emit_from=n + 1,
-            )
-        pts = F.array_sort(
-            F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
-        )
-        g = out.groupBy(*tags).agg(pts.alias("_pts"))
-        xs = F.transform("_pts", lambda s: s[name].cast("double"))
-        g = g.select(*tags, F.col("_pts"), xs.alias("_xs"))
 
         def step(acc, x):
             k = acc["k"] + F.lit(1)
@@ -2342,314 +2333,126 @@ class InfluxQLEngine:
                 x.alias("prev"), ag.alias("ag"), al.alias("al"), k.alias("k")
             )
 
+        def rsi(s):
+            return F.when(
+                s["ag"] + s["al"] != F.lit(0.0),
+                (F.lit(100.0) * s["ag"]) / (s["ag"] + s["al"]),
+            )
+
         seed = F.struct(
             F.element_at("_xs", F.lit(1)).alias("prev"),
             F.lit(0.0).alias("ag"),
             F.lit(0.0).alias("al"),
             F.lit(0).alias("k"),
         )
-        # bucket j's state folds buckets 2..j; RSI defined for j >= N+1
-        idx = F.when(
-            F.size("_xs") >= n + 1,
-            F.sequence(F.lit(n + 1), F.size("_xs")),
-        ).otherwise(F.array().cast("array<int>"))
-        if self._use_linear_fold(st):
-            from syncflux_spark.functions.tafold import rsi_udf
 
-            g = g.withColumn("_vals", rsi_udf(n)(F.col("_xs")))
-            rsis = F.transform(
-                idx,
-                lambda j: F.struct(
-                    F.element_at("_pts", j)["t"].alias("t"),
-                    F.element_at("_vals", j).alias("v"),
-                ),
-            )
-        else:
-            rsis = F.transform(
-                idx,
-                lambda j: F.struct(
-                    F.element_at("_pts", j)["t"].alias("t"),
-                    (
-                        lambda s: F.when(
-                            s["ag"] + s["al"] != F.lit(0.0),
-                            (F.lit(100.0) * s["ag"]) / (s["ag"] + s["al"]),
-                        )
-                    )(
-                        F.aggregate(
-                            F.slice("_xs", F.lit(2), j - F.lit(1)), seed, step
-                        )
-                    ).alias("v"),
-                ),
-            )
-        res = g.select(*tags, F.explode(rsis).alias("_r")).select(
-            F.col("_r.t").alias("time"),
-            *[F.col(t) for t in group_tags],
-            F.col("_r.v").alias(name),
-        )
-        order = [F.desc("time")] if st.order_desc else [F.asc("time")]
-        res = res.orderBy(*order)
-        if st.offset:
-            res = res.offset(st.offset)
-        if st.limit is not None:
-            res = res.limit(st.limit)
-        return res
-
-    def _apply_cmo(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str], has_bucket: bool
-    ) -> DataFrame:
-        """``chande_momentum_oscillator(func(v), N)`` over a ``GROUP
-        BY time`` rollup: CMO = 100·(ΣU − ΣD)/(ΣU + ΣD) over the last
-        N bucket-to-bucket moves, emitted from bucket N+1. Unlike
-        EMA/RSI this is a sliding WINDOW sum, not a recurrence — both
-        engines materialize the per-series gains/losses arrays (plain
-        ``transform``, no fold) and then left-fold each N-slice with a
-        scalar double accumulator, so the addition order is fixed and
-        the oracle match is bit-exact (a window-function SUM would
-        reassociate). Null when the window saw no movement."""
-        if not has_bucket:
-            raise InfluxQLError(
-                "chande_momentum_oscillator requires GROUP BY time(...)"
-            )
-        if len(st.projs) != 1:
-            raise InfluxQLError(
-                "chande_momentum_oscillator must be the only projection "
-                "in the select"
-            )
-        p = st.projs[0]
-        n = int(p.transform_arg or 0)
-        if n < 1:
-            raise InfluxQLError(
-                "chande_momentum_oscillator period must be >= 1"
-            )
-        name, tags = p.out_name, [F.col(t) for t in group_tags]
-        pts = F.array_sort(
-            F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
-        )
-        g = out.groupBy(*tags).agg(pts.alias("_pts"))
-        xs = F.transform("_pts", lambda s: s[name].cast("double"))
-        g = g.select(*tags, F.col("_pts"), xs.alias("_xs"))
-        # diff i = x_{i+1} - x_i (array of n-1 moves), then gains and
-        # losses arrays — no folds yet, just per-element projections
-        diffs = F.transform(
-            F.sequence(F.lit(1), F.size("_xs") - F.lit(1)),
-            lambda i: F.element_at("_xs", i + F.lit(1))
-            - F.element_at("_xs", i),
-        )
-        g = g.select(*tags, F.col("_pts"), diffs.alias("_d"))
-        gains = F.transform("_d", lambda d: F.greatest(d, F.lit(0.0)))
-        losses = F.transform("_d", lambda d: F.greatest(-d, F.lit(0.0)))
-        g = g.select(
-            *tags, F.col("_pts"), gains.alias("_g"), losses.alias("_l")
-        )
-
-        def winsum(arr, j):
-            # left-to-right fold of the N moves ending at bucket j
-            # (diff indexes j-N .. j-1) — fixed order, scalar state
+        def rsi_at(j):  # bucket j's state folds buckets 2..j
             return F.aggregate(
-                F.slice(arr, j - F.lit(n), F.lit(n)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+                F.slice("_xs", F.lit(2), j - F.lit(1)), seed, step, rsi
             )
 
-        idx = F.when(
-            F.size("_pts") >= n + 1,
-            F.sequence(F.lit(n + 1), F.size("_pts")),
-        ).otherwise(F.array().cast("array<int>"))
-        cmos = F.transform(
-            idx,
-            lambda j: F.struct(
-                F.element_at("_pts", j)["t"].alias("t"),
-                (
-                    lambda su, sd: F.when(
-                        su + sd != F.lit(0.0),
-                        (F.lit(100.0) * (su - sd)) / (su + sd),
-                    )
-                )(winsum(F.col("_g"), j), winsum(F.col("_l"), j)).alias("v"),
-            ),
+        return _TaFold(
+            lambda: tafold.rsi_stepper(n),
+            lambda g: (g, self._per_bucket(n + 1, rsi_at)),
+            emit_from=n + 1,
         )
-        res = g.select(*tags, F.explode(cmos).alias("_r")).select(
-            F.col("_r.t").alias("time"),
-            *[F.col(t) for t in group_tags],
-            F.col("_r.v").alias(name),
-        )
-        order = [F.desc("time")] if st.order_desc else [F.asc("time")]
-        res = res.orderBy(*order)
-        if st.offset:
-            res = res.offset(st.offset)
-        if st.limit is not None:
-            res = res.limit(st.limit)
-        return res
 
-    def _series_arrays(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str],
-        has_bucket: bool, fname: str,
-    ):
-        """Shared scaffold for the fold-family transforms: validate
-        the statement shape, collapse the rollup to one time-ordered
-        (``_pts`` struct array, ``_xs`` double array) row per series.
-        Returns (proj, N, out_name, tag Columns, grouped DF)."""
-        if not has_bucket:
-            raise InfluxQLError(f"{fname} requires GROUP BY time(...)")
-        if len(st.projs) != 1:
-            raise InfluxQLError(
-                f"{fname} must be the only projection in the select"
+    def _apply_cmo(self, p: Proj, n: int, iv: int) -> "_TaFold":
+        """``chande_momentum_oscillator(func(v), N)``: CMO =
+        100·(ΣU − ΣD)/(ΣU + ΣD) over the last N bucket-to-bucket moves,
+        emitted from bucket N+1. Unlike EMA/RSI this is a sliding
+        WINDOW sum, not a recurrence: the per-series moves array
+        materializes once, then each N-slice is left-folded with
+        scalar double accumulators, so the addition order is fixed and
+        the oracle match is bit-exact (a window-function SUM would
+        reassociate). Null when the window saw no movement. The
+        window is O(N) per bucket, so CMO has only the in-row form."""
+
+        def step(acc, d):
+            return F.struct(
+                (acc["u"] + F.greatest(d, F.lit(0.0))).alias("u"),
+                (acc["d"] + F.greatest(-d, F.lit(0.0))).alias("d"),
             )
-        p = st.projs[0]
-        n = int(p.transform_arg or 0)
-        if n < 1:
-            raise InfluxQLError(f"{fname} period must be >= 1")
-        name, tags = p.out_name, [F.col(t) for t in group_tags]
-        pts = F.array_sort(
-            F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
-        )
-        g = out.groupBy(*tags).agg(pts.alias("_pts"))
-        xs = F.transform("_pts", lambda s: s[name].cast("double"))
-        g = g.select(*tags, F.col("_pts"), xs.alias("_xs"))
-        return p, n, name, tags, g
 
-    def _stream_fold(
-        self,
-        out: DataFrame,
-        st: SelectStmt,
-        group_tags: list[str],
-        name: str,
-        stepper_factory,
-        emit_from: float = 1,
-        finisher=None,
-    ) -> DataFrame:
-        """Shared tail of the fold family's ROW-STREAMING path (above
-        fold_stream_threshold): no per-series array ever builds — the
-        rollup rows stream through functions/tafold.py::streaming_fold
-        with recurrence state carried across Arrow batches. The value
-        cast to double mirrors the array path's ``_xs`` cast; ORDER/
-        LIMIT/OFFSET match _explode_series."""
-        from syncflux_spark.functions.tafold import streaming_fold
+        def cmo(s):
+            return F.when(
+                s["u"] + s["d"] != F.lit(0.0),
+                (F.lit(100.0) * (s["u"] - s["d"])) / (s["u"] + s["d"]),
+            )
 
-        src = out.select(
-            "time", *group_tags, F.col(name).cast("double").alias(name)
-        )
-        res = streaming_fold(
-            src, list(group_tags), "time", name, stepper_factory,
-            emit_from=emit_from, finisher=finisher,
-        )
-        order = [F.desc("time")] if st.order_desc else [F.asc("time")]
-        res = res.orderBy(*order)
-        if st.offset:
-            res = res.offset(st.offset)
-        if st.limit is not None:
-            res = res.limit(st.limit)
-        return res
+        def cmo_at(j):  # the N moves ending at bucket j: _d[j-N .. j-1]
+            return F.aggregate(
+                F.slice("_d", j - F.lit(n), F.lit(n)),
+                F.struct(F.lit(0.0).alias("u"), F.lit(0.0).alias("d")),
+                step,
+                cmo,
+            )
 
-    def _explode_series(
-        self, g: DataFrame, rows, st: SelectStmt, group_tags: list[str],
-        name: str,
-    ) -> DataFrame:
-        """Explode per-series (t, v) structs back to rows and apply
-        ORDER/LIMIT/OFFSET — the shared tail of the fold family."""
-        tags = [F.col(t) for t in group_tags]
-        res = g.select(*tags, F.explode(rows).alias("_r")).select(
-            F.col("_r.t").alias("time"),
-            *[F.col(t) for t in group_tags],
-            F.col("_r.v").alias(name),
-        )
-        order = [F.desc("time")] if st.order_desc else [F.asc("time")]
-        res = res.orderBy(*order)
-        if st.offset:
-            res = res.offset(st.offset)
-        if st.limit is not None:
-            res = res.limit(st.limit)
-        return res
+        def in_row(g):
+            # move i = x_{i+1} - x_i
+            moves = F.transform(
+                F.sequence(F.lit(1), F.size("_xs") - F.lit(1)),
+                lambda i: F.element_at("_xs", i + F.lit(1))
+                - F.element_at("_xs", i),
+            )
+            g = g.withColumn("_d", moves)
+            return g, self._per_bucket(n + 1, cmo_at)
 
-    def _apply_ema_cascade(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str], has_bucket: bool
-    ) -> DataFrame:
-        """DEMA / TEMA / TRIX over a ``GROUP BY time`` rollup: the
-        three-level EMA cascade e1→e2→e3 advances all levels in ONE
-        fold step (e1' = αx+βe1, e2' = αe1'+βe2, e3' = αe2'+βe3, all
-        seeded at x₁), then
+        return _TaFold(None, in_row, emit_from=n + 1)
+
+    def _apply_ema_cascade(self, p: Proj, n: int, iv: int) -> "_TaFold":
+        """DEMA / TEMA / TRIX: the three-level EMA cascade e1→e2→e3
+        advances all levels in ONE fold step (e1' = αx+βe1, e2' =
+        αe1'+βe2, e3' = αe2'+βe3, all seeded at x₁), then
 
         * ``double_exponential_moving_average`` = 2·e1 − e2 (from
           bucket 1),
         * ``triple_exponential_moving_average`` = (3·e1 − 3·e2) + e3,
         * ``triple_exponential_derivative`` (TRIX) =
-          100·(e3ⱼ − e3ⱼ₋₁)/e3ⱼ₋₁ (from bucket 2; null at zero).
+          100·(e3ⱼ − e3ⱼ₋₁)/e3ⱼ₋₁ (from bucket 2; null at zero). The
+          fold state carries the previous e3 as ``p3``.
 
         Bit-determinism as in ``_apply_ema``: literal α/β shared with
-        the oracle, fixed op order, per-bucket prefix folds in-row."""
-        p, n, name, tags, g = self._series_arrays(
-            out, st, group_tags, has_bucket, st.projs[0].transform
-        )
+        the oracle, fixed op order."""
         alpha = 2.0 / (n + 1.0)
         beta = 1.0 - alpha
-        if self._use_stream_fold(st):
-            from syncflux_spark.functions.tafold import cascade_stepper
-
-            kind_s = p.transform
-            return self._stream_fold(
-                out, st, group_tags, name,
-                lambda: cascade_stepper(alpha, beta, kind_s),
-                emit_from=2
-                if kind_s == "triple_exponential_derivative"
-                else 1,
-            )
+        kind = p.transform
 
         def step(acc, x):
             e1 = x * F.lit(alpha) + acc["e1"] * F.lit(beta)
             e2 = e1 * F.lit(alpha) + acc["e2"] * F.lit(beta)
             e3 = e2 * F.lit(alpha) + acc["e3"] * F.lit(beta)
-            return F.struct(e1.alias("e1"), e2.alias("e2"), e3.alias("e3"))
-
-        def state_at(j):
-            x1 = F.element_at("_xs", F.lit(1))
-            seed = F.struct(
-                x1.alias("e1"), x1.alias("e2"), x1.alias("e3")
-            )
-            return F.aggregate(
-                F.slice("_xs", F.lit(2), j - F.lit(1)), seed, step
+            return F.struct(
+                e1.alias("e1"), e2.alias("e2"), e3.alias("e3"),
+                acc["e3"].alias("p3"),
             )
 
-        kind = p.transform
-        start = 2 if kind == "triple_exponential_derivative" else 1
-        idx = F.when(
-            F.size("_xs") >= start,
-            F.sequence(F.lit(start), F.size("_xs")),
-        ).otherwise(F.array().cast("array<int>"))
-
-        if self._use_linear_fold(st):
-            from syncflux_spark.functions.tafold import cascade_udf
-
-            g = g.withColumn(
-                "_vals", cascade_udf(alpha, beta, kind)(F.col("_xs"))
-            )
-            rows = F.transform(
-                idx,
-                lambda j: F.struct(
-                    F.element_at("_pts", j)["t"].alias("t"),
-                    F.element_at("_vals", j).alias("v"),
-                ),
-            )
-            return self._explode_series(g, rows, st, group_tags, name)
-
-        def value_at(j):
-            s = state_at(j)
+        def value(s):
             if kind == "double_exponential_moving_average":
                 return F.lit(2.0) * s["e1"] - s["e2"]
             if kind == "triple_exponential_moving_average":
                 return (F.lit(3.0) * s["e1"] - F.lit(3.0) * s["e2"]) + s["e3"]
-            prev = state_at(j - F.lit(1))
             return F.when(
-                prev["e3"] != F.lit(0.0),
-                (F.lit(100.0) * (s["e3"] - prev["e3"])) / prev["e3"],
+                s["p3"] != F.lit(0.0),
+                (F.lit(100.0) * (s["e3"] - s["p3"])) / s["p3"],
             )
 
-        rows = F.transform(
-            idx,
-            lambda j: F.struct(
-                F.element_at("_pts", j)["t"].alias("t"),
-                value_at(j).alias("v"),
-            ),
+        def value_at(j):
+            x1 = F.element_at("_xs", F.lit(1))
+            seed = F.struct(
+                x1.alias("e1"), x1.alias("e2"), x1.alias("e3"),
+                F.lit(None).cast("double").alias("p3"),
+            )
+            return F.aggregate(
+                F.slice("_xs", F.lit(2), j - F.lit(1)), seed, step, value
+            )
+
+        start = 2 if kind == "triple_exponential_derivative" else 1
+        return _TaFold(
+            lambda: tafold.cascade_stepper(alpha, beta, kind),
+            lambda g: (g, self._per_bucket(start, value_at)),
+            emit_from=start,
         )
-        return self._explode_series(g, rows, st, group_tags, name)
 
     #: Kaufman adaptive-MA smoothing-constant bounds (InfluxDB fixed):
     #: fast EMA period 2, slow period 30 → α_fast = 2/3, α_slow = 2/31
@@ -2657,12 +2460,9 @@ class InfluxQLEngine:
     _KAMA_SLOW = 2.0 / 31.0
     _KAMA_SPREAD = _KAMA_FAST - _KAMA_SLOW
 
-    def _apply_kaufman(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str], has_bucket: bool
-    ) -> DataFrame:
+    def _apply_kaufman(self, p: Proj, n: int, iv: int) -> "_TaFold":
         """``kaufmans_efficiency_ratio(func(v), N)`` and
-        ``kaufmans_adaptive_moving_average(func(v), N)`` over a
-        ``GROUP BY time`` rollup.
+        ``kaufmans_adaptive_moving_average(func(v), N)``.
 
         ER_j = |x_j − x_{j−N}| / Σ|moves| over the window (the Σ is a
         fixed-order slice fold), emitted from bucket N+1; null when
@@ -2672,125 +2472,148 @@ class InfluxQLEngine:
         as 0, keeping the recurrence defined). All constants are
         Python-computed literals shared with the recursive-CTE
         oracle; op order is fixed — bit-exact."""
-        p, n, name, tags, g = self._series_arrays(
-            out, st, group_tags, has_bucket, st.projs[0].transform
-        )
-        if self._use_stream_fold(st):
-            from syncflux_spark.functions.tafold import (
-                er_stepper,
-                kama_stepper,
-            )
+        # plain locals: the stepper closure is pickled to the Python
+        # workers — capturing self would drag the session
+        spread, slow = self._KAMA_SPREAD, self._KAMA_SLOW
+        er = p.transform == "kaufmans_efficiency_ratio"
 
-            # plain locals: the factory closure is pickled to the
-            # Python workers — capturing self would drag the session
-            spread, slow = self._KAMA_SPREAD, self._KAMA_SLOW
-            factory = (
-                (lambda: er_stepper(n))
-                if p.transform == "kaufmans_efficiency_ratio"
-                else (lambda: kama_stepper(n, spread, slow))
-            )
-            return self._stream_fold(
-                out, st, group_tags, name, factory, emit_from=n + 1
-            )
-        ad = F.transform(
-            F.sequence(F.lit(1), F.size("_xs") - F.lit(1)),
-            lambda i: F.abs(
-                F.element_at("_xs", i + F.lit(1)) - F.element_at("_xs", i)
-            ),
-        )
-        g = g.select(*tags, F.col("_pts"), F.col("_xs"), ad.alias("_ad"))
-
-        def er_parts(j):
+        def er_at(j, otherwise=None):
+            # |x_j − x_{j−N}| / Σ of the N |moves| ending at bucket j
             num = F.abs(
                 F.element_at("_xs", j) - F.element_at("_xs", j - F.lit(n))
             )
-            den = F.aggregate(
+
+            def ratio(den):
+                r = F.when(den != F.lit(0.0), num / den)
+                return r if otherwise is None else r.otherwise(otherwise)
+
+            return F.aggregate(
                 F.slice("_ad", j - F.lit(n), F.lit(n)),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
+                ratio,
             )
-            return num, den
-
-        idx = F.when(
-            F.size("_xs") >= n + 1,
-            F.sequence(F.lit(n + 1), F.size("_xs")),
-        ).otherwise(F.array().cast("array<int>"))
-
-        if p.transform == "kaufmans_efficiency_ratio":
-            rows = F.transform(
-                idx,
-                lambda j: F.struct(
-                    F.element_at("_pts", j)["t"].alias("t"),
-                    (lambda num, den: F.when(den != F.lit(0.0), num / den))(
-                        *er_parts(j)
-                    ).alias("v"),
-                ),
-            )
-            return self._explode_series(g, rows, st, group_tags, name)
-
-        # KAMA: fold buckets N+2..j with the kama recurrence; the acc
-        # carries (kama, k) where k is the CURRENT bucket index so the
-        # step can read x_k and the window behind it from the arrays
-        if self._use_linear_fold(st):
-            from syncflux_spark.functions.tafold import kama_udf
-
-            g = g.withColumn(
-                "_vals",
-                kama_udf(n, self._KAMA_SPREAD, self._KAMA_SLOW)(F.col("_xs")),
-            )
-            rows = F.transform(
-                idx,
-                lambda j: F.struct(
-                    F.element_at("_pts", j)["t"].alias("t"),
-                    F.element_at("_vals", j).alias("v"),
-                ),
-            )
-            return self._explode_series(g, rows, st, group_tags, name)
 
         def kama_at(j):
-            seed = F.struct(
-                F.element_at("_xs", F.lit(n + 1)).alias("kama"),
-                F.lit(n + 1).alias("k"),
-            )
-
+            # fold buckets N+2..j; the acc carries the CURRENT bucket
+            # index k so the step can read the window behind x_k
             def step(acc, x):
                 k = acc["k"] + F.lit(1)
-                num = F.abs(
-                    F.element_at("_xs", k) - F.element_at("_xs", k - F.lit(n))
-                )
-                den = F.aggregate(
-                    F.slice("_ad", k - F.lit(n), F.lit(n)),
-                    F.lit(0.0),
-                    lambda a, y: a + y,
-                )
-                er0 = F.when(den != F.lit(0.0), num / den).otherwise(F.lit(0.0))
-                sc = er0 * F.lit(self._KAMA_SPREAD) + F.lit(self._KAMA_SLOW)
+                sc = er_at(k, F.lit(0.0)) * F.lit(spread) + F.lit(slow)
                 sc2 = sc * sc
                 kama = acc["kama"] + sc2 * (x - acc["kama"])
                 return F.struct(kama.alias("kama"), k.alias("k"))
 
+            seed = F.struct(
+                F.element_at("_xs", F.lit(n + 1)).alias("kama"),
+                F.lit(n + 1).alias("k"),
+            )
             return F.aggregate(
                 F.slice("_xs", F.lit(n + 2), j - F.lit(n + 1)), seed, step
             )["kama"]
 
-        rows = F.transform(
-            idx,
-            lambda j: F.struct(
-                F.element_at("_pts", j)["t"].alias("t"),
-                kama_at(j).alias("v"),
-            ),
+        def in_row(g):
+            ad = F.transform(
+                F.sequence(F.lit(1), F.size("_xs") - F.lit(1)),
+                lambda i: F.abs(
+                    F.element_at("_xs", i + F.lit(1)) - F.element_at("_xs", i)
+                ),
+            )
+            return g.withColumn("_ad", ad), self._per_bucket(
+                n + 1, er_at if er else kama_at
+            )
+
+        return _TaFold(
+            (lambda: tafold.er_stepper(n))
+            if er
+            else (lambda: tafold.kama_stepper(n, spread, slow)),
+            in_row,
+            emit_from=n + 1,
         )
-        return self._explode_series(g, rows, st, group_tags, name)
+
+    def _apply_holt_winters(self, p: Proj, n_fc: int, iv: int) -> "_TaFold":
+        """``holt_winters(func(v), N, S)``: N forecast buckets past
+        each series' end, spaced by the group interval. Follows the
+        engine's deterministic HW variant (see
+        queries.py::ts_holt_winters): additive level + trend with
+        dyadic α=1/2, β=1/4 run in fixed-point int64 micros —
+        InfluxDB fits α/β per query by Nelder-Mead, which is
+        non-reproducible across builds, so this dialect documents
+        fixed constants instead. S > 0 adds the additive seasonal
+        component (:meth:`_apply_holt_winters_seasonal`).
+        ``holt_winters_with_fit`` additionally emits the one-step-
+        ahead fitted value for every input bucket before the
+        forecasts (non-seasonal form only): bucket i's fit is
+        l + b of the state after bucket i-1; bucket 1's fit is its
+        own value (the seed state)."""
+        season = int(p.transform_arg2 or 0)
+        if season < 0:
+            raise InfluxQLError("holt_winters seasonal period must be >= 0")
+        with_fit = p.transform == "holt_winters_with_fit"
+        if season > 0:
+            if with_fit:
+                raise InfluxQLError(
+                    "holt_winters_with_fit supports S=0 only; use "
+                    "holt_winters for the seasonal form"
+                )
+            return self._apply_holt_winters_seasonal(n_fc, iv, season)
+
+        def step(acc, x):
+            l_new = _floordiv(x + acc["l"] + acc["b"], 2)
+            b_new = _floordiv(l_new - acc["l"], 4) + (
+                acc["b"] - _floordiv(acc["b"], 4)
+            )
+            return F.struct(l_new.alias("l"), b_new.alias("b"))
+
+        seed = F.struct(
+            F.element_at("_xs", F.lit(1)).alias("l"),
+            F.lit(0).cast("long").alias("b"),
+        )
+
+        def fit_at(i):
+            return F.when(
+                i == 1, F.element_at("_xs", i).cast("double") / F.lit(1e6)
+            ).otherwise(
+                F.aggregate(
+                    F.slice("_xs", F.lit(2), i - F.lit(2)), seed, step,
+                    lambda s: (s["l"] + s["b"]) / F.lit(1e6),
+                )
+            )
+
+        def in_row(g):
+            g = g.withColumn(
+                "_fin",
+                F.aggregate(
+                    F.slice("_xs", F.lit(2), F.size("_xs") - F.lit(1)),
+                    seed, step,
+                ),
+            )
+            last_t = F.element_at("_pts", -1)["t"]
+            rows = F.transform(
+                F.sequence(F.lit(1), F.lit(n_fc)),
+                lambda h: F.struct(
+                    (last_t + h.cast("long") * F.lit(iv)).alias("t"),
+                    (
+                        (F.col("_fin.l") + h.cast("long") * F.col("_fin.b"))
+                        / F.lit(1e6)
+                    ).alias("v"),
+                ),
+            )
+            if with_fit:
+                rows = F.concat(self._per_bucket(1, fit_at), rows)
+            return g, rows
+
+        return _TaFold(
+            lambda: tafold.hw_stream_stepper(with_fit),
+            in_row,
+            emit_from=1 if with_fit else float("inf"),
+            finisher=tafold.hw_finisher(n_fc, iv),
+            micros=True,
+        )
 
     def _apply_holt_winters_seasonal(
-        self,
-        out: DataFrame,
-        st: SelectStmt,
-        group_tags: list[str],
-        p: Proj,
-        n_fc: int,
-        season: int,
-    ) -> DataFrame:
+        self, n_fc: int, iv: int, season: int
+    ) -> "_TaFold":
         """Additive seasonal Holt-Winters (dyadic α=1/2 β=1/4 γ=1/2,
         fixed-point int64 micros): the fold state is (level, trend,
         bucket counter, S-slot season array). Bucket t (slot =
@@ -2802,44 +2625,19 @@ class InfluxQLEngine:
 
         forecast_h = l_T + h·b_T + c[(T−1+h) mod S]. All integer
         ops — the recursive-CTE oracle carrying the season LIST
-        column replays the sequence exactly. Same scale shape as the
-        non-seasonal path; state adds S longs per series."""
-        name, iv = p.out_name, st.group_time_ns
-        tags = [F.col(t) for t in group_tags]
-        if self._use_stream_fold(st):
-            from syncflux_spark.functions.tafold import (
-                hw_seasonal_finisher,
-                hw_seasonal_stepper,
-            )
-
-            S_ = season
-            return self._stream_fold(
-                out, st, group_tags, name,
-                lambda: hw_seasonal_stepper(S_),
-                emit_from=float("inf"),
-                finisher=hw_seasonal_finisher(n_fc, iv, S_),
-            )
-        pts = F.array_sort(
-            F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
-        )
-        g = out.groupBy(*tags).agg(pts.alias("_pts"))
-        xs = F.transform(
-            "_pts",
-            lambda s: F.floor(s[name] * 1_000_000 + F.lit(0.5)).cast("long"),
-        )
-        g = g.select(*tags, F.col("_pts"), xs.alias("_xs"))
+        column replays the sequence exactly. State adds S longs per
+        series to the non-seasonal form's."""
         S = season
 
-        def fdiv(col, d):
-            return F.floor(col.cast("double") / F.lit(float(d))).cast("long")
-
-        def sstep(acc, x):
+        def step(acc, x):
             k = acc["k"] + F.lit(1)
             slot = (k - F.lit(1)) % F.lit(S)
             cs = F.element_at(acc["c"], slot + F.lit(1))
-            l_new = fdiv(x - cs + acc["l"] + acc["b"], 2)
-            b_new = fdiv(l_new - acc["l"], 4) + (acc["b"] - fdiv(acc["b"], 4))
-            c_upd = fdiv(x - l_new, 2) + (cs - fdiv(cs, 2))
+            l_new = _floordiv(x - cs + acc["l"] + acc["b"], 2)
+            b_new = _floordiv(l_new - acc["l"], 4) + (
+                acc["b"] - _floordiv(acc["b"], 4)
+            )
+            c_upd = _floordiv(x - l_new, 2) + (cs - _floordiv(cs, 2))
             c_new = F.transform(
                 acc["c"],
                 lambda v, i: F.when(i == slot, c_upd).otherwise(v),
@@ -2857,216 +2655,43 @@ class InfluxQLEngine:
             F.lit(1).alias("k"),
             F.array_repeat(F.lit(0).cast("long"), S).alias("c"),
         )
-        fin = F.aggregate(
-            F.slice("_xs", F.lit(2), F.size("_xs") - F.lit(1)), seed, sstep
-        )
-        last_t = F.element_at("_pts", -1)["t"]
-        nb = F.size("_xs")
-        g = g.select(
-            *tags,
-            last_t.alias("_last_t"),
-            nb.alias("_n"),
-            fin["l"].alias("_l"),
-            fin["b"].alias("_b"),
-            fin["c"].alias("_c"),
-        )
-        fc = F.transform(
-            F.sequence(F.lit(1), F.lit(n_fc)),
-            lambda h: F.struct(
-                (F.col("_last_t") + h.cast("long") * F.lit(iv)).alias("t"),
-                (
+
+        def in_row(g):
+            g = g.withColumn(
+                "_fin",
+                F.aggregate(
+                    F.slice("_xs", F.lit(2), F.size("_xs") - F.lit(1)),
+                    seed, step,
+                ),
+            )
+            last_t = F.element_at("_pts", -1)["t"]
+            rows = F.transform(
+                F.sequence(F.lit(1), F.lit(n_fc)),
+                lambda h: F.struct(
+                    (last_t + h.cast("long") * F.lit(iv)).alias("t"),
                     (
-                        F.col("_l")
-                        + h.cast("long") * F.col("_b")
-                        + F.element_at(
-                            "_c",
-                            ((F.col("_n") + h - F.lit(1)) % F.lit(S))
-                            + F.lit(1),
-                        )
-                    )
-                    / F.lit(1e6)
-                ).alias("v"),
-            ),
-        )
-        return self._explode_series(g, fc, st, group_tags, name)
-
-    def _apply_holt_winters(
-        self, out: DataFrame, st: SelectStmt, group_tags: list[str], has_bucket: bool
-    ) -> DataFrame:
-        """``holt_winters(func(v), N, S)`` over a ``GROUP BY time``
-        rollup: N forecast buckets past each series' end, spaced by
-        the group interval. Follows the engine's deterministic HW
-        variant (see queries.py::ts_holt_winters): additive level +
-        trend with dyadic α=1/2, β=1/4 run in fixed-point int64
-        micros — InfluxDB fits α/β per query by Nelder-Mead, which is
-        non-reproducible across builds, so this dialect documents
-        fixed constants instead. S > 0 adds the additive seasonal
-        component (γ=1/2): the state carries an S-slot season array
-        seeded at zero, bucket t deseasonalizes against slot
-        (t−1) mod S before the level update and re-estimates that
-        slot after it; forecasts add the slot value back
-        (:meth:`_apply_holt_winters_seasonal`).
-        ``holt_winters_with_fit`` additionally emits the one-step-
-        ahead fitted value for every input bucket before the
-        forecasts (non-seasonal form only).
-
-        Scale shape: the recurrence folds over the ROLLUP (one row
-        per bucket × series), grouped per series — the collect is
-        bounded by buckets-per-series, never fact rows; forecasts
-        explode from an in-row sequence. One extra exchange on the
-        tag key beyond the rollup's own."""
-        if not has_bucket:
-            raise InfluxQLError("holt_winters requires GROUP BY time(...)")
-        hw = [p for p in st.projs if p.transform in
-              ("holt_winters", "holt_winters_with_fit")]
-        if len(hw) != 1 or len(st.projs) != 1:
-            raise InfluxQLError(
-                "holt_winters must be the only projection in the select"
-            )
-        p = hw[0]
-        n_fc = int(p.transform_arg or 0)
-        season = int(p.transform_arg2 or 0)
-        if n_fc <= 0:
-            raise InfluxQLError("holt_winters forecast count must be >= 1")
-        if season < 0:
-            raise InfluxQLError("holt_winters seasonal period must be >= 0")
-        if season > 0:
-            if p.transform == "holt_winters_with_fit":
-                raise InfluxQLError(
-                    "holt_winters_with_fit supports S=0 only; use "
-                    "holt_winters for the seasonal form"
-                )
-            return self._apply_holt_winters_seasonal(
-                out, st, group_tags, p, n_fc, season
-            )
-        name, iv = p.out_name, st.group_time_ns
-        tags = [F.col(t) for t in group_tags]
-        if self._use_stream_fold(st):
-            # row-streaming form: per-bucket fits stream through the
-            # stepper, forecasts come from the per-series finisher —
-            # no collect_list array at 10⁶+ buckets
-            from syncflux_spark.functions.tafold import (
-                hw_finisher,
-                hw_stream_stepper,
-            )
-
-            with_fit = p.transform == "holt_winters_with_fit"
-            return self._stream_fold(
-                out, st, group_tags, name,
-                lambda: hw_stream_stepper(with_fit),
-                emit_from=1 if with_fit else float("inf"),
-                finisher=hw_finisher(n_fc, iv),
-            )
-        pts = F.array_sort(
-            F.collect_list(F.struct(F.col("time").alias("t"), F.col(name)))
-        )
-        g = out.groupBy(*tags).agg(pts.alias("_pts"))
-        # fixed-point micros of the rollup values, then the dyadic
-        # level/trend fold (identical recurrence to ts_holt_winters)
-        xs = F.transform(
-            "_pts",
-            lambda s: F.floor(s[name] * 1_000_000 + F.lit(0.5)).cast("long"),
-        )
-        g = g.select(*tags, F.col("_pts"), xs.alias("_xs"))
-        sts = F.transform(
-            "_xs",
-            lambda x: F.struct(
-                x.alias("x"), x.alias("l"), F.lit(0).cast("long").alias("b")
-            ),
-        )
-
-        def step(acc, e):
-            s_new = F.floor(
-                (e["x"] + acc["l"] + acc["b"]).cast("double") / F.lit(2.0)
-            ).cast("long")
-            b_new = (
-                F.floor((s_new - acc["l"]).cast("double") / F.lit(4.0)).cast("long")
-                + (
-                    acc["b"]
-                    - F.floor(acc["b"].cast("double") / F.lit(4.0)).cast("long")
-                )
-            )
-            return F.struct(e["x"].alias("x"), s_new.alias("l"), b_new.alias("b"))
-
-        fin = F.aggregate(
-            F.slice(sts, F.lit(2), F.size("_xs") - F.lit(1)),
-            F.element_at(sts, F.lit(1)),
-            step,
-        )
-        last_t = F.element_at("_pts", -1)["t"]
-        g = g.select(
-            *tags,
-            F.col("_pts"),
-            F.col("_xs"),
-            last_t.alias("_last_t"),
-            fin["l"].alias("_l"),
-            fin["b"].alias("_b"),
-        )
-        fc = F.transform(
-            F.sequence(F.lit(1), F.lit(n_fc)),
-            lambda h: F.struct(
-                (F.col("_last_t") + h.cast("long") * F.lit(iv)).alias("t"),
-                ((F.col("_l") + h.cast("long") * F.col("_b")) / F.lit(1e6)).alias("v"),
-            ),
-        )
-        if p.transform == "holt_winters_with_fit":
-            # fitted value for bucket i (1-based) = one-step-ahead
-            # prediction from the state after bucket i-1; bucket 1's
-            # fit is its own value (the seed state)
-            idx = F.sequence(F.lit(1), F.size("_pts"))
-            if self._use_linear_fold(st):
-                from syncflux_spark.functions.tafold import hw_fit_udf
-
-                g = g.withColumn("_fit", hw_fit_udf()(F.col("_xs")))
-                fit = F.transform(
-                    idx,
-                    lambda i: F.struct(
-                        F.element_at("_pts", i)["t"].alias("t"),
-                        F.element_at("_fit", i).alias("v"),
-                    ),
-                )
-            else:
-                fit = F.transform(
-                    idx,
-                    lambda i: F.struct(
-                        F.element_at("_pts", i)["t"].alias("t"),
-                        F.when(
-                            i == 1,
-                            F.element_at("_xs", i).cast("double") / F.lit(1e6),
-                        )
-                        .otherwise(
-                            (
-                                F.aggregate(
-                                    F.slice(sts, F.lit(2), i - F.lit(2)),
-                                    F.element_at(sts, F.lit(1)),
-                                    step,
-                                )["l"]
-                                + F.aggregate(
-                                    F.slice(sts, F.lit(2), i - F.lit(2)),
-                                    F.element_at(sts, F.lit(1)),
-                                    step,
-                                )["b"]
+                        (
+                            F.col("_fin.l")
+                            + h.cast("long") * F.col("_fin.b")
+                            + F.element_at(
+                                "_fin.c",
+                                ((F.size("_xs") + h - F.lit(1)) % F.lit(S))
+                                + F.lit(1),
                             )
-                            / F.lit(1e6)
                         )
-                        .alias("v"),
-                    ),
-                )
-            rows = F.concat(fit, fc)
-        else:
-            rows = fc
-        res = g.select(*tags, F.explode(rows).alias("_r")).select(
-            F.col("_r.t").alias("time"),
-            *[F.col(t) for t in group_tags],
-            F.col("_r.v").alias(name),
+                        / F.lit(1e6)
+                    ).alias("v"),
+                ),
+            )
+            return g, rows
+
+        return _TaFold(
+            lambda: tafold.hw_seasonal_stepper(S),
+            in_row,
+            emit_from=float("inf"),
+            finisher=tafold.hw_seasonal_finisher(n_fc, iv, S),
+            micros=True,
         )
-        order = [F.desc("time")] if st.order_desc else [F.asc("time")]
-        res = res.orderBy(*order)
-        if st.offset:
-            res = res.offset(st.offset)
-        if st.limit is not None:
-            res = res.limit(st.limit)
-        return res
 
     def _agg_exprs(self, p: Proj, idx: int, ns: Column | None = None) -> list[Column]:
         """Partial-aggregable pieces for projection ``idx``; the final

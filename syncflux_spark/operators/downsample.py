@@ -2,7 +2,7 @@
 
 These give the engine the query surface an InfluxDB operator actually
 uses day-to-day (``GROUP BY time(5m), *``-style rollups, per-series
-first/last, gap detection) — the analytical complement of the
+last, gap detection) — the analytical complement of the
 reference's replication plane, expressed over the same data model
 (tags are columns; "per series" == grouped by tag columns,
 cf. ``group by *`` at pkg/agent/sync.go:162).
@@ -13,8 +13,8 @@ Scale notes
   aggregation happens before the shuffle, so the shuffle carries one
   row per (series × bucket), not per point. At 100 TB this is the
   canonical rollup shape; skewed series are handled by AQE skew split.
-* ``first/last_per_series`` uses ``max_by``/``min_by`` aggregation —
-  one shuffle, no window sort. The window-function formulation would
+* ``last_per_series`` uses ``max_by`` aggregation — one shuffle, no
+  window sort. The window-function formulation would
   sort every partition; ``max_by`` keeps it a hash agg.
 * ``gap_detect`` genuinely needs per-series ordering → one shuffle +
   per-series sort via a window. Partitioning is by series key, which
@@ -72,33 +72,6 @@ def last_per_series(
     )
 
 
-def first_per_series(
-    df: DataFrame,
-    tags: Sequence[str],
-    value_col: str = "value",
-    time_col: str = "ts",
-) -> DataFrame:
-    """Influx ``first()``: earliest point per series; ties on the
-    timestamp break by smallest value."""
-    pair = F.struct(F.col(time_col), F.col(value_col))
-    return df.groupBy(*tags).agg(
-        F.min(time_col).alias("first_ts"),
-        F.min_by(F.col(value_col), pair).alias("first_value"),
-    )
-
-
-def series_stats(
-    df: DataFrame, tags: Sequence[str], time_col: str = "ts"
-) -> DataFrame:
-    """Per-series cardinality + observed time range (the data-plane
-    analog of ``GetFirstLastTime``, pkg/agent/client.go:24-38)."""
-    return df.groupBy(*tags).agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.min(time_col).alias("first_ts"),
-        F.max(time_col).alias("last_ts"),
-    )
-
-
 def gap_detect(
     df: DataFrame,
     tags: Sequence[str],
@@ -121,19 +94,6 @@ def gap_detect(
             gap.alias("gap_seconds"),
         )
         .where(F.col("gap_seconds") > threshold_seconds)
-    )
-
-
-def chunk_counts(
-    df: DataFrame, chunk_seconds: int, time_col: str = "ts"
-) -> DataFrame:
-    """Points per chunk window — the data-plane equivalent of the
-    reference's per-chunk progress accounting (ChunkReport,
-    pkg/agent/sync.go:11-53): how much work each chunk of a copy would
-    move."""
-    return (
-        df.groupBy(time_bucket(time_col, chunk_seconds).alias("chunk_start"))
-        .agg(F.count(F.lit(1)).alias("n_points"))
     )
 
 

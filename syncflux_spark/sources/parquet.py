@@ -14,7 +14,6 @@ that loses boundary points (SURVEY §4 "quirks").
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
 from datetime import datetime, timezone
 from functools import lru_cache
 
@@ -119,12 +118,6 @@ def load_table(
                     f"{col}_ns", F.unix_micros(F.col(col)) * F.lit(1000)
                 )
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
 def _to_ns_epoch(x) -> int:

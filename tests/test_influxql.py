@@ -825,6 +825,36 @@ class TestSlimit:
                 "select count(value) from events group by time(1d) slimit 2"
             )
 
+    @pytest.mark.parametrize(
+        "proj",
+        [
+            "exponential_moving_average(mean(value), 5)",
+            "relative_strength_index(mean(value), 3)",
+            "chande_momentum_oscillator(mean(value), 3)",
+            "triple_exponential_derivative(mean(value), 5)",
+            "kaufmans_efficiency_ratio(mean(value), 3)",
+            "holt_winters_with_fit(mean(value), 3, 0)",
+            "holt_winters(mean(value), 4, 3)",
+        ],
+    )
+    def test_ta_folds_keep_the_slimit_window(self, engine, proj):
+        """A TA fold keeps the same series as the plain aggregate
+        under the same SLIMIT/SOFFSET, in both of its forms."""
+        q = (
+            "select {} from events "
+            "where time >= '2024-01-05' and time < '2024-01-19' "
+            "group by time(1d), event_type slimit 2 soffset 1"
+        )
+        want = {r.event_type for r in engine.query(q.format("mean(value)")).collect()}
+        assert len(want) == 2
+        for threshold in (10**18, 0):
+            engine.fold_stream_threshold = threshold
+            try:
+                got = {r.event_type for r in engine.query(q.format(proj)).collect()}
+            finally:
+                del engine.fold_stream_threshold
+            assert got == want, threshold
+
 
 class TestRawTransforms:
     def test_elapsed_per_series(self, engine, events):
@@ -2045,11 +2075,13 @@ class TestFoldFamilyPlanDiscipline:
 
 
 class TestLinearFolds:
-    """Above fold_linear_threshold (or with unbounded time ranges) the
-    fold family switches to the linear Arrow kernels in
-    functions/tafold.py. The kernels replay the exact IEEE op sequence
-    of the in-row folds, so both paths must be BIT-identical — on the
-    real fixture and on a crafted series with null buckets."""
+    """Above fold_stream_threshold (or with unbounded time ranges) the
+    fold family switches from the O(B²) in-row folds to the linear
+    row stream of functions/tafold.py. Its steppers replay the exact
+    IEEE op sequence of the in-row folds, so both forms must be
+    BIT-identical — on the real fixture and on a crafted series with
+    null buckets. Rows compare sorted by (time, series): same-time
+    rows of different series have no defined relative order."""
 
     PROJS = [
         "exponential_moving_average(mean(value), 5)",
@@ -2063,19 +2095,21 @@ class TestLinearFolds:
 
     @staticmethod
     def _rows(engine, proj, threshold):
-        engine.fold_linear_threshold = threshold
-        df = engine.query(
-            f"SELECT {proj} FROM events "
-            "WHERE time >= '2024-01-05' AND time < '2024-01-19' "
-            "GROUP BY time(1d), event_type"
-        )
-        return [tuple(r) for r in df.collect()]
+        engine.fold_stream_threshold = threshold
+        try:
+            df = engine.query(
+                f"SELECT {proj} FROM events "
+                "WHERE time >= '2024-01-05' AND time < '2024-01-19' "
+                "GROUP BY time(1d), event_type"
+            )
+            return sorted((tuple(r) for r in df.collect()), key=lambda r: r[:-1])
+        finally:
+            del engine.fold_stream_threshold  # back to the class value
 
     @pytest.mark.parametrize("proj", PROJS)
     def test_linear_matches_codegen_bitexact(self, engine, proj):
-        codegen = self._rows(engine, proj, 5000)
+        codegen = self._rows(engine, proj, 10**18)
         linear = self._rows(engine, proj, 0)
-        engine.fold_linear_threshold = 5000
         assert codegen == linear  # exact float equality, not approx
 
     @pytest.mark.parametrize("proj", PROJS)
@@ -2096,27 +2130,49 @@ class TestLinearFolds:
         eng = InfluxQLEngine(
             spark, tables={"events": df}, tags={"events": ["event_type"]}, now=NOW
         )
-        codegen = self._rows(eng, proj, 5000)
+        codegen = self._rows(eng, proj, 10**18)
         linear = self._rows(eng, proj, 0)
         assert codegen == linear
         assert len(codegen) > 0
 
     def test_unbounded_range_takes_linear_path(self, engine):
         """No upper time bound → bucket count unknowable at plan time
-        → the scale-safe linear kernel, visible as an Arrow stage."""
-        engine.fold_linear_threshold = 5000
+        → the scale-safe row stream, visible as a MapInPandas stage."""
         df = engine.query(
             "SELECT exponential_moving_average(mean(value), 5) "
             "FROM events WHERE time > '2024-01-05' "
             "GROUP BY time(1d), event_type"
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" in plan or "BatchEvalPython" in plan
+        assert "MapInPandas" in plan
+
+    def test_thousand_buckets_hand_off_to_stream(self, spark):
+        """~1,000 one-minute buckets are far above the in-row fold's
+        break-even, so KAMA streams rows through mapInPandas instead
+        of collapsing each series into a collect_list array."""
+        base = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp() * 1e9)
+        df = spark.range(1000).select(
+            (F.lit(base) + F.col("id") * F.lit(60 * 10**9)).alias("ts_ns"),
+            (F.col("id") % 13).cast("double").alias("value"),
+            F.lit("click").alias("event_type"),
+        ).withColumn("ts", F.timestamp_micros((F.col("ts_ns") / 1000).cast("long")))
+        eng = InfluxQLEngine(
+            spark, tables={"events": df}, tags={"events": ["event_type"]}, now=NOW
+        )
+        out = eng.query(
+            "SELECT kaufmans_adaptive_moving_average(mean(value), 3) "
+            "FROM events WHERE time >= '2024-01-01T00:00:00Z' "
+            "AND time < '2024-01-01T16:40:00Z' GROUP BY time(1m), event_type"
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
+        assert "collect_list" not in plan
+        assert out.count() == 1000 - 3
 
     def test_100k_buckets_completes_linear(self, spark):
         """525k-bucket-scale regression: the O(B²) form can't finish
-        this in any budget (~10¹⁰ fold steps); the linear kernel must
-        do it in seconds."""
+        this in any budget (~10¹⁰ fold steps); the linear row stream
+        must do it in seconds."""
         import time as _time
 
         n = 100_000
@@ -2131,6 +2187,7 @@ class TestLinearFolds:
             spark, tables={"events": df}, tags={"events": ["event_type"]},
             now=datetime(2024, 4, 1, tzinfo=timezone.utc),
         )
+        eng.fold_stream_threshold = 0
         t0 = _time.monotonic()
         out = eng.query(
             "SELECT exponential_moving_average(mean(value), 9) FROM events "

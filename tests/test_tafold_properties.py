@@ -1,12 +1,12 @@
-"""Property tests for the linear TA fold kernels (functions/tafold.py).
+"""Property tests for the TA fold steppers (functions/tafold.py).
 
-Each kernel claims to equal the O(B²) per-bucket prefix re-fold the
-codegen form computes (same IEEE op sequence, same SQL null
+Each stepper claims to equal the O(B²) per-bucket prefix re-fold the
+in-row codegen form computes (same IEEE op sequence, same SQL null
 semantics). The replicas here RE-FOLD from scratch for every output
 index — an independent implementation of exactly what the Spark
 ``F.aggregate(F.slice(...))`` expressions do — so bitwise agreement
 over randomized series (including nulls, zeros, negatives, repeats)
-proves the running-state kernels' prefix property and null handling.
+proves the running-state steppers' prefix property and null handling.
 Spark-level equality on real data is separately pinned in
 tests/test_influxql.py::TestLinearFolds.
 """
@@ -19,12 +19,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from syncflux_spark.functions.tafold import (
-    cascade_values,
-    ema_values,
-    hw_fit_values,
-    kama_values,
-    rsi_values,
+    cascade_stepper,
+    ema_stepper,
+    hw_fit_stepper,
+    kama_stepper,
+    rsi_stepper,
 )
+
+
+def _run(step, xs: list) -> list:
+    """One stepper's output for every bucket of ``xs``."""
+    return [step(x) for x in xs]
+
 
 # values in a realistic magnitude band plus hazard cases; None = SQL null
 elem = st.one_of(
@@ -49,7 +55,7 @@ def _fold_ema(xs, j, alpha, beta):
 def test_ema_prefix_property(xs, n):
     alpha = 2.0 / (n + 1.0)
     beta = 1.0 - alpha
-    got = ema_values(xs, alpha, beta)
+    got = _run(ema_stepper(alpha, beta), xs)
     assert len(got) == len(xs)
     for j in range(1, len(xs) + 1):
         assert got[j - 1] == _fold_ema(xs, j, alpha, beta)
@@ -79,7 +85,7 @@ def _fold_rsi(xs, j, n):
 @settings(max_examples=200, deadline=None)
 @given(xs=series, n=st.integers(1, 6))
 def test_rsi_prefix_property(xs, n):
-    got = rsi_values(xs, n)
+    got = _run(rsi_stepper(n), xs)
     assert len(got) == len(xs)
     for j in range(1, len(xs) + 1):
         want = _fold_rsi(xs, j, n) if j >= n + 1 else None
@@ -110,7 +116,7 @@ def _fold_cascade(xs, j):
     ),
 )
 def test_cascade_prefix_property(xs, kind):
-    got = cascade_values(xs, 0.5, 0.5, kind)
+    got = _run(cascade_stepper(0.5, 0.5, kind), xs)
     assert len(got) == len(xs)
     for j in range(1, len(xs) + 1):
         if not xs:
@@ -165,7 +171,7 @@ def _fold_kama(xs, j, n, spread, slow):
 @given(xs=series, n=st.integers(1, 5))
 def test_kama_prefix_property(xs, n):
     spread, slow = 2.0 / 3.0 - 2.0 / 31.0, 2.0 / 31.0
-    got = kama_values(xs, n, spread, slow)
+    got = _run(kama_stepper(n, spread, slow), xs)
     assert len(got) == len(xs)
     for j in range(1, len(xs) + 1):
         want = _fold_kama(xs, j, n, spread, slow) if j >= n + 1 else None
@@ -180,7 +186,7 @@ int_elem = st.one_of(
 @settings(max_examples=200, deadline=None)
 @given(xs=st.lists(int_elem, min_size=0, max_size=40))
 def test_hw_fit_prefix_property(xs):
-    got = hw_fit_values(xs)
+    got = _run(hw_fit_stepper(), xs)
     assert len(got) == len(xs)
     for i in range(1, len(xs) + 1):
         if i == 1:

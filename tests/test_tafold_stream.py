@@ -1,10 +1,8 @@
 """Row-streaming TA folds: above ``fold_stream_threshold`` the fold
 family must stop materializing per-series arrays (one collect_list
-cell through one Python worker) and instead stream rollup rows with
-recurrence state carried ACROSS Arrow batches — bit-identical to the
-array kernels (same stepper closures), bounded memory at 10⁷ buckets.
-
-VERDICT r4 'Next round' #4.
+cell per series) and instead stream rollup rows with recurrence state
+carried ACROSS Arrow batches — bit-identical to the in-row codegen
+folds, bounded memory at 10⁷ buckets.
 """
 
 from __future__ import annotations
@@ -57,9 +55,8 @@ class TestStreamMatchesArray:
         batch size so state provably crosses batch boundaries, and
         compare bit-exact (as multisets: both paths sort by time, and
         same-time rows of different series have no defined relative
-        order) against the array-kernel path."""
-        engine.fold_stream_threshold = 10**18
-        engine.fold_linear_threshold = 0  # array path, linear kernel
+        order) against the in-row codegen fold."""
+        engine.fold_stream_threshold = 10**18  # in-row codegen fold
         arr = _counter(engine.query(STMT.format(proj=proj)))
         old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
         try:
@@ -109,9 +106,8 @@ class TestStreamMatchesArray:
     def test_holt_winters_stream_with_forecasts(self, spark, engine, proj):
         """HW streams with the finisher hook: per-bucket fits (fit
         form) plus n_fc forecast rows PAST each series' end — both
-        bit-equal to the array form, across tiny Arrow batches."""
+        bit-equal to the in-row form, across tiny Arrow batches."""
         engine.fold_stream_threshold = 10**18
-        engine.fold_linear_threshold = 0
         arr = _counter(engine.query(STMT.format(proj=proj)))
         old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
         try:
@@ -127,7 +123,7 @@ class TestStreamMatchesArray:
     def test_threshold_picks_stream_plan(self, engine):
         """Above the threshold the plan is mapInPandas over rows — no
         collect_list aggregate (the array the fallback exists to
-        avoid); below, the array kernel plan stays."""
+        avoid); below, the in-row plan stays."""
         engine.fold_stream_threshold = 5  # 14 daily buckets > 5
         plan = (
             engine.query(STMT.format(proj=PROJS[0]))
