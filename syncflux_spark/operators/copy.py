@@ -24,6 +24,17 @@ Spark-first design notes
 * The chunk loop exists for progress reporting + bounded units of
   retry/recovery, not memory (Spark spills). Chunks run newest-first
   (sync.go:144-146) so fresh data recovers first.
+* Runs of chunks: row-group pruning prunes nothing on a series-major
+  source (every row group spans the whole time range), so a chunk at
+  a time would decode the whole file once per chunk. ``sync`` groups
+  consecutive chunks into runs sized from the source's parquet
+  footers (a run's estimated rows stay within the largest row group,
+  what the reader decodes at once anyway), persists one scan of each
+  run's range per measurement, and cuts every chunk of the run from
+  it with the unchanged ``copy_range``: still one job, one report and
+  one ``win`` commit per chunk. A source without footer stats (in
+  memory, remote, INT96 time) copies one chunk per run, straight from
+  the source.
 * Idempotency (SURVEY §7.3 hard-part #1): the reference silently
   relies on InfluxDB upserting duplicate points on chunk re-runs.
   A naive append sink double-writes. Each measurement is one
@@ -48,7 +59,12 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 
 from syncflux_spark.functions.time import chunk_windows, parse_duration
-from syncflux_spark.sources.parquet import _to_ns_epoch, scan_time_range
+from syncflux_spark.sources.parquet import (
+    FooterStats,
+    _to_ns_epoch,
+    scan_time_range,
+    source_footer_stats,
+)
 from syncflux_spark.txtable import TxTable
 
 
@@ -177,6 +193,75 @@ def _win_key(start, end) -> str:
     return f"{_to_ns_epoch(start) // 10**6}_{_to_ns_epoch(end) // 10**6}"
 
 
+def _estimated_rows(stats: list[FooterStats], lo_ns: int, hi_ns: int) -> float:
+    """Rows of ``[lo_ns, hi_ns)``, each file's rows spread evenly over
+    its time span (min to max, inclusive)."""
+    n = 0.0
+    for f in stats:
+        overlap = min(hi_ns, f.hi_ns + 1) - max(lo_ns, f.lo_ns)
+        if overlap > 0:
+            n += f.rows * overlap / (f.hi_ns + 1 - f.lo_ns)
+    return n
+
+
+def plan_runs(
+    windows: list[tuple], stats: list[FooterStats] | None
+) -> list[tuple[int, int]]:
+    """Split ``windows`` (in copy order) into runs ``[i, j)`` of
+    consecutive chunks. A chunk joins the current run while the run's
+    estimated rows stay at or below the source's largest row group —
+    what the parquet reader decodes at once anyway. Without footer
+    stats every chunk is a run of its own."""
+    if not stats:
+        return [(i, i + 1) for i in range(len(windows))]
+    cap = max(f.max_group_rows for f in stats)
+    runs: list[tuple[int, int]] = []
+    first, rows = 0, 0.0
+    for i, (s, e) in enumerate(windows):
+        est = _estimated_rows(stats, _to_ns_epoch(s), _to_ns_epoch(e))
+        if i > first and rows + est > cap:
+            runs.append((first, i))
+            first, rows = i, 0.0
+        rows += est
+    if windows:
+        runs.append((first, len(windows)))
+    return runs
+
+
+class _Runs:
+    """One measurement's runs of chunks and the one run scan it holds
+    persisted. A run of one chunk reads the source itself."""
+
+    def __init__(self, df: DataFrame, windows: list[tuple], time_col: str):
+        self.df, self.windows, self.time_col = df, windows, time_col
+        self.run_of = {}
+        for run in plan_runs(windows, source_footer_stats(df, time_col)):
+            for i in range(*run):
+                self.run_of[i] = run
+        self.held: tuple[tuple[int, int], DataFrame] | None = None
+
+    def source(self, i: int) -> DataFrame:
+        """What chunk ``i`` is cut from."""
+        run = self.run_of[i]
+        if self.held is not None and self.held[0] != run:
+            self.release()
+        if run[1] - run[0] == 1:
+            return self.df
+        if self.held is None:
+            ws = self.windows[run[0] : run[1]]
+            scan = scan_time_range(
+                self.df, min(s for s, _ in ws), max(e for _, e in ws),
+                time_col=self.time_col,
+            )
+            self.held = (run, scan.persist())
+        return self.held[1]
+
+    def release(self) -> None:
+        if self.held is not None:
+            self.held[1].unpersist()
+            self.held = None
+
+
 def sync(
     spark: SparkSession,
     measurements: dict[str, DataFrame],
@@ -206,43 +291,54 @@ def sync(
     on a thread pool (concurrent Spark jobs — Spark's FAIR scheduling
     keeps the cluster busy when a measurement is small).
 
+    Consecutive chunks form runs per measurement (``plan_runs`` over
+    the source's footer stats); a run of several chunks is cut from
+    one persisted scan of its range, read from the source once. At
+    most one run per measurement is persisted at a time, and every
+    one is released before ``sync`` returns or raises — so a failed
+    chunk, and ``sync_dbrp``'s chunk/10 recovery after it, hold none.
+
     ``fail_injector(measurement, start, end)`` → raise to simulate a
     failed read/write (test hook for recovery semantics, §5.3 tests).
     """
     windows = chunk_windows(start, end, chunk, max_retention)
     report = SyncReport(src=src_label, dst=dst_root, start=start, end=end)
     total = len(windows)
+    runs = {name: _Runs(df, windows, time_col) for name, df in measurements.items()}
 
-    for i, (s, e) in enumerate(windows):
-        t0 = _time.monotonic()
-        cr = ChunkReport(num=i + 1, total=total, start=s, end=e)
+    try:
+        for i, (s, e) in enumerate(windows):
+            t0 = _time.monotonic()
+            cr = ChunkReport(num=i + 1, total=total, start=s, end=e)
 
-        def copy_one(item, s=s, e=e, cr=cr):
-            name, df = item
-            if fail_injector is not None:
-                fail_injector(name, s, e)
-            n = copy_range(df, f"{dst_root}/{name}", s, e, time_col=time_col)
-            return name, n
+            def copy_one(name, i=i, s=s, e=e):
+                if fail_injector is not None:
+                    fail_injector(name, s, e)
+                src = runs[name].source(i)
+                return copy_range(src, f"{dst_root}/{name}", s, e, time_col=time_col)
 
-        with ThreadPoolExecutor(max_workers=num_workers) as pool:
-            futures = {
-                pool.submit(
-                    retry,
-                    (lambda it=item: copy_one(it)),
-                    rw_max_retries,
-                    rw_retry_delay,
-                ): item[0]
-                for item in measurements.items()
-            }
-            for fut, name in futures.items():
-                try:
-                    mname, n = fut.result()
-                    cr.measurements[mname] = n
-                    cr.points += n
-                except Exception:  # noqa: BLE001
-                    cr.write_errors += 1
-        cr.elapsed = _time.monotonic() - t0
-        report.chunks.append(cr)
+            with ThreadPoolExecutor(max_workers=num_workers) as pool:
+                futures = {
+                    pool.submit(
+                        retry,
+                        (lambda name=name: copy_one(name)),
+                        rw_max_retries,
+                        rw_retry_delay,
+                    ): name
+                    for name in measurements
+                }
+                for fut, name in futures.items():
+                    try:
+                        n = fut.result()
+                        cr.measurements[name] = n
+                        cr.points += n
+                    except Exception:  # noqa: BLE001
+                        cr.write_errors += 1
+            cr.elapsed = _time.monotonic() - t0
+            report.chunks.append(cr)
+    finally:
+        for r in runs.values():
+            r.release()
     return report
 
 

@@ -14,12 +14,17 @@ that loses boundary points (SURVEY §4 "quirks").
 from __future__ import annotations
 
 import os
+import stat
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from functools import lru_cache
+from urllib.parse import unquote, urlsplit
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from syncflux_spark.functions.time import unixnano_to_ts
 
@@ -40,37 +45,138 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _file_identity(path: str) -> tuple:
+    """``(path, st_mtime_ns, st_size)``; a directory dataset is keyed by
+    that of every file below it. Every footer fact cached here is keyed
+    by it, so a source rewritten in place at the same path (say, from
+    ns to µs timestamps) is probed afresh, never read with its old
+    layout."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (path, st.st_mtime_ns, st.st_size)
+    files = []
+    for d, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(d, n)
+            fs = os.stat(f)
+            files.append((f, fs.st_mtime_ns, fs.st_size))
+    return (path, tuple(sorted(files)))
+
+
 @lru_cache(maxsize=256)
-def _ns_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark refuses them
-    natively (PARQUET_TYPE_ILLEGAL), so they're read as ns-epoch longs
-    via ``spark.sql.legacy.parquet.nanosAsLong``. Metadata-only probe
-    (footer read), cached per path."""
+def _timestamp_cols(ident: tuple) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """(columns stored as parquet TIMESTAMP(NANOS), columns stored as
+    µs/ms TIMESTAMP) of the source ``ident`` names. Spark refuses the
+    first natively (PARQUET_TYPE_ILLEGAL), so they're read as ns-epoch
+    longs via ``spark.sql.legacy.parquet.nanosAsLong``; it reads the
+    second as TimestampType. Footer-only probe."""
+    path = ident[0]
     try:
         schema = pq.read_schema(path)
     except OSError:
         # directory dataset — probe a single fragment's footer
         schema = pq.ParquetDataset(path).schema
-    return tuple(
-        f.name for f in schema if str(f.type).startswith("timestamp[ns")
+    types = [(f.name, str(f.type)) for f in schema]
+    return (
+        tuple(n for n, t in types if t.startswith("timestamp[ns")),
+        tuple(n for n, t in types if t.startswith(("timestamp[us", "timestamp[ms"))),
     )
 
 
-@lru_cache(maxsize=256)
-def _us_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet µs/ms TIMESTAMP — Spark reads these
-    natively as TimestampType; the canonical ``{col}_ns`` long is
-    *derived* (exact: µs → ×1000) rather than raw. Footer-only probe,
-    cached per path."""
-    try:
-        schema = pq.read_schema(path)
-    except OSError:
-        schema = pq.ParquetDataset(path).schema
-    return tuple(
-        f.name
-        for f in schema
-        if str(f.type).startswith(("timestamp[us", "timestamp[ms"))
-    )
+#: Spark's inferred schema per source identity. Inference is a Spark
+#: job (a parallel footer merge, even for one file); a later load of
+#: the same files passes the schema through ``.schema()`` instead.
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_MAX = 256
+
+
+def _read_parquet(spark: SparkSession, path: str, ident: tuple) -> DataFrame:
+    schema = _SCHEMAS.get(ident)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SCHEMAS) >= _SCHEMAS_MAX:
+        _SCHEMAS.clear()
+    _SCHEMAS[ident] = df.schema
+    return df
+
+
+@dataclass(frozen=True)
+class FooterStats:
+    """What one parquet file's footer says about its time column:
+    rows, the ns-epoch min/max of the time, and its largest row group
+    (rows)."""
+
+    rows: int
+    lo_ns: int
+    hi_ns: int
+    max_group_rows: int
+
+
+_NS_PER_UNIT = {"s": 10**9, "ms": 10**6, "us": 10**3, "ns": 1}
+
+
+@lru_cache(maxsize=1024)
+def _footer_stats(ident: tuple, time_col: str) -> FooterStats | None:
+    """Footer stats of the file ``ident`` names over ``time_col`` (a
+    parquet TIMESTAMP) or ``{time_col}_ns`` (an ns-epoch long); None
+    without INT64 min/max statistics on every non-empty row group."""
+    md = pq.read_metadata(ident[0])
+    arrow = md.schema.to_arrow_schema()
+    leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    for name in (time_col, f"{time_col}_ns"):
+        if name not in leaves or arrow.get_field_index(name) < 0:
+            continue
+        t = arrow.field(name).type
+        if pa.types.is_timestamp(t):
+            scale = _NS_PER_UNIT[t.unit]
+        elif name != time_col and pa.types.is_int64(t):
+            scale = 1
+        else:
+            continue
+        idx = leaves[name]
+        break
+    else:
+        return None
+    lo = hi = None
+    biggest = 0
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        col = rg.column(idx)
+        st = col.statistics
+        if col.physical_type != "INT64" or st is None or not st.has_min_max:
+            return None
+        lo = st.min_raw if lo is None else min(lo, st.min_raw)
+        hi = st.max_raw if hi is None else max(hi, st.max_raw)
+        biggest = max(biggest, rg.num_rows)
+    if lo is None:
+        return None
+    return FooterStats(md.num_rows, lo * scale, hi * scale, biggest)
+
+
+def source_footer_stats(df: DataFrame, time_col: str = "ts") -> list[FooterStats] | None:
+    """Footer stats of every file ``df`` scans (``df.inputFiles()``),
+    each read once per file identity; None when ``df`` scans no file
+    (an in-memory source) or any file is not a local parquet file with
+    time statistics."""
+    uris = df.inputFiles()
+    if not uris:
+        return None
+    out = []
+    for uri in uris:
+        parts = urlsplit(uri)
+        if parts.scheme not in ("", "file"):
+            return None
+        try:
+            st = _footer_stats(_file_identity(unquote(parts.path)), time_col)
+        except (OSError, pa.ArrowException):
+            return None
+        if st is None:
+            return None
+        out.append(st)
+    return out
 
 
 def load_table(
@@ -100,19 +206,25 @@ def load_table(
 
     :func:`scan_time_range` emits both predicate forms so the
     row-group-pruning one applies in either layout. ``keep_ns=False``
-    skips the companion longs for schema-minimal reads."""
+    skips the companion longs for schema-minimal reads.
+
+    Spark's schema inference is a job of its own; it runs once per
+    file identity (path, mtime, size), and later loads of the same
+    files pass the kept schema through ``.schema()``."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # TIMESTAMP (UTC-normalized), not TIMESTAMP_NTZ: epoch functions
     # work and comparisons match the DuckDB oracle (session tz is UTC)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    for col in _ns_timestamp_cols(path):
+    ident = _file_identity(path)
+    ns_cols, us_cols = _timestamp_cols(ident)
+    df = _read_parquet(spark, path, ident)
+    for col in ns_cols:
         if keep_ns:
             df = df.withColumn(f"{col}_ns", F.col(col))
         df = df.withColumn(col, unixnano_to_ts(col))
     if keep_ns:
-        for col in _us_timestamp_cols(path):
+        for col in us_cols:
             if col == "ts":
                 df = df.withColumn(
                     f"{col}_ns", F.unix_micros(F.col(col)) * F.lit(1000)

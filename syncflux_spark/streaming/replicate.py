@@ -63,6 +63,7 @@ class ReplicationStream:
         #: scopes the stream to one measurement's files within it
         self.path_glob_filter = path_glob_filter
         self.batches_written = 0
+        self._schema = None
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Idempotent sink: batch ``n`` replaces the ``batch=n``-tagged
@@ -79,17 +80,20 @@ class ReplicationStream:
 
     def _reader(self):
         # file streams need an explicit schema: take it from the
-        # source's current files (schema evolution would re-resolve on
-        # restart, which is the behavior the reference gets from
-        # re-running GetSchema after recovery, hacluster.go:331)
+        # source's files once per instance — inference is a Spark job
+        # of its own, and a recovery (run_available) should run only
+        # its micro-batches. Schema evolution re-resolves on restart
+        # (a new instance), the behavior the reference gets from
+        # re-running GetSchema after recovery (hacluster.go:331).
         # TIMESTAMP, not TIMESTAMP_NTZ; session tz is UTC
-        self.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option("pathGlobFilter", self.path_glob_filter)
-        schema = batch_reader.parquet(self.src_path).schema
+        if self._schema is None:
+            self.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+            batch_reader = self.spark.read
+            if self.path_glob_filter:
+                batch_reader = batch_reader.option("pathGlobFilter", self.path_glob_filter)
+            self._schema = batch_reader.parquet(self.src_path).schema
         reader = (
-            self.spark.readStream.schema(schema)
+            self.spark.readStream.schema(self._schema)
             .option("latestFirst", "false")
         )
         if self.path_glob_filter:

@@ -273,7 +273,11 @@ class TxTable:
             for c in stats_cols:
                 aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
             df = df.observe(obs, *aggs)
-        w = df.write.mode("overwrite")
+        # the commit log is the commit record: no reader looks for a
+        # group's _SUCCESS marker, so the committer writes none
+        w = df.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        )
         for k, v in (write_options or {}).items():
             w = w.option(k, v)
         w.parquet(os.path.join(self.root, rel))

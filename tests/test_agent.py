@@ -71,3 +71,55 @@ def test_replicate_data_full_clamps_to_rp(spark, warehouse, tmp_path):
     back = read_copied(spark, f"{tmp_path}/{db}/autogen", "cpu")
     # RP duration 720h covers everything written
     assert back.count() == 48
+
+
+class JobProbe:
+    """Spark jobs run between two marker jobs, found through the status
+    tracker by their job groups — jobs from any thread count."""
+
+    def __init__(self, spark):
+        self.sc, self.ids = spark.sparkContext, []
+
+    def probe(self) -> None:
+        group = f"job-probe-{len(self.ids)}"
+        self.sc.setJobGroup(group, "job-id probe")
+        try:
+            self.sc.parallelize([0], 1).count()
+        finally:
+            self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.ids.append(self.sc.statusTracker().getJobIdsForGroup(group))
+
+    def between(self) -> int:
+        return min(self.ids[-1]) - max(self.ids[-2]) - 1
+
+
+def test_warm_action_copy_runs_one_job_per_chunk_and_measurement(spark, tmp_path):
+    """No schema inference, no separate cache job: a warm copy of one
+    window runs exactly chunks × measurements Spark jobs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from syncflux_spark.agent import action_copy
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t0 = int(BASE.timestamp()) * 10**9
+    for name in ("cpu", "mem"):
+        ts = [t0 + k * 10**10 + s for s in range(4) for k in range(360)]
+        pq.write_table(
+            pa.table({"ts": pa.array(ts, pa.timestamp("ns")), "value": [float(t % 97) for t in ts]}),
+            src / f"{name}.parquet", row_group_size=500,
+        )
+
+    def copy(i):
+        s = BASE + timedelta(minutes=30 * i)
+        return action_copy(spark, str(src), str(tmp_path / "dst"), s, s + timedelta(minutes=30),
+                           chunk="10m", num_workers=2)
+
+    copy(0)  # warm
+    jobs = JobProbe(spark)
+    jobs.probe()
+    rep = copy(1)
+    jobs.probe()
+    assert rep.write_errors == 0 and rep.points == 2 * 4 * 180
+    assert jobs.between() == 3 * 2

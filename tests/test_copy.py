@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -191,3 +191,186 @@ def test_load_table_keep_ns_false(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events", keep_ns=False)
     assert "ts_ns" not in ev.columns
     assert dict(ev.dtypes)["ts"] == "timestamp"
+
+
+def test_load_table_after_rewrite_with_other_time_unit(spark, tmp_path):
+    """A source rewritten in place at the same path with another
+    timestamp unit (ns → µs) loads with its new layout: every footer
+    fact is keyed by the file's identity, not its path alone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from syncflux_spark.sources.parquet import load_table
+
+    path = tmp_path / "m.parquet"
+    t0 = 1_709_251_200 * 10**9
+    pq.write_table(pa.table({"ts": pa.array([t0, t0 + 10**9], pa.timestamp("ns"))}), path)
+    assert load_table(spark, str(tmp_path), "m").count() == 2
+    pq.write_table(
+        pa.table({"ts": pa.array([t0 // 1000 + i for i in range(3)], pa.timestamp("us"))}),
+        path,
+    )
+    got = load_table(spark, str(tmp_path), "m").orderBy("ts").collect()
+    assert [r.ts_ns for r in got] == [t0 + i * 1000 for i in range(3)]
+
+
+T0_NS = 1_709_251_200 * 10**9
+T0 = datetime.fromtimestamp(T0_NS // 10**9, tz=timezone.utc)
+SLOT_NS = 10 * 10**9
+
+
+def _write_source(path, layout: str, series: int = 8, slots: int = 360, row_group: int = 1000):
+    """``series`` series × ``slots`` 10 s slots from T0_NS, ns offsets,
+    stored series-major (each row group spans the whole time range)
+    or time-major (each row group spans a slice of it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = [(s, k) for s in range(series) for k in range(slots)]
+    if layout == "time":
+        keys.sort(key=lambda sk: (sk[1], sk[0]))
+    pq.write_table(
+        pa.table({
+            "ts": pa.array([T0_NS + k * SLOT_NS + s for s, k in keys], pa.timestamp("ns")),
+            "host": [f"h{s}" for s, _ in keys],
+            "value": [float(s * slots + k) for s, k in keys],
+        }),
+        path,
+        row_group_size=row_group,
+    )
+
+
+def _digest(df) -> tuple[int, int]:
+    from pyspark.sql import functions as F
+
+    h = F.xxhash64("ts_ns", "host", "value").cast("decimal(38,0)")
+    r = df.select(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")).collect()[0]
+    return int(r["n"]), int(r["h"] or 0)
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+class TestRuns:
+    @pytest.fixture(autouse=True)
+    def _empty_cache(self, spark):
+        # the session is shared: start from an empty cache manager so
+        # the checks below see only what sync itself leaves behind
+        spark.catalog.clearCache()
+
+    @pytest.mark.parametrize("layout", ["series", "time"])
+    def test_sync_equals_per_chunk_copies(self, spark, tmp_path, layout):
+        """Chunks cut from one persisted run scan land exactly what
+        per-chunk copies of the source land, chunk by chunk, on a
+        window that starts and ends off the 5 m grid (so chunk bounds
+        cross row-group bounds)."""
+        from syncflux_spark.functions.time import chunk_windows
+        from syncflux_spark.operators.copy import plan_runs
+        from syncflux_spark.sources.parquet import load_table, source_footer_stats
+
+        _write_source(tmp_path / "m.parquet", layout)
+        df = load_table(spark, str(tmp_path), "m")
+        start, end = T0 + timedelta(minutes=7), T0 + timedelta(minutes=52)
+        windows = chunk_windows(start, end, "5m")
+        runs = plan_runs(windows, source_footer_stats(df))
+        assert max(j - i for i, j in runs) > 1  # some chunks share a run
+
+        seen_cached = []
+        rep = sync(
+            spark, {"m": df}, str(tmp_path / "runs"), start, end, chunk="5m",
+            fail_injector=lambda *_: seen_cached.append(not _cache_empty(spark)),
+        )
+        assert rep.write_errors == 0 and any(seen_cached)
+        per_chunk = [
+            copy_range(df, str(tmp_path / "chunks" / "m"), s, e) for s, e in windows
+        ]
+        assert [c.measurements["m"] for c in rep.chunks] == per_chunk
+        got = _digest(read_copied(spark, str(tmp_path / "runs"), "m"))
+        assert got == _digest(read_copied(spark, str(tmp_path / "chunks"), "m"))
+        assert got[0] == sum(per_chunk) == 8 * 45 * 6
+        assert _cache_empty(spark)
+
+    def test_plan_caps_each_run_at_largest_row_group(self):
+        from syncflux_spark.functions.time import chunk_windows
+        from syncflux_spark.operators.copy import _estimated_rows, plan_runs
+        from syncflux_spark.sources.parquet import FooterStats, _to_ns_epoch
+
+        hour = 3600 * 10**9
+        # two files over the first 12 h; 1 h holds 1000 + 500 rows
+        stats = [
+            FooterStats(rows=12_000, lo_ns=T0_NS, hi_ns=T0_NS + 12 * hour - 1, max_group_rows=4000),
+            FooterStats(rows=6_000, lo_ns=T0_NS, hi_ns=T0_NS + 12 * hour - 1, max_group_rows=2500),
+        ]
+        windows = chunk_windows(T0 + timedelta(hours=1), T0 + timedelta(hours=11), "30m")
+        runs = plan_runs(windows, stats)
+        assert [i for r in runs for i in range(*r)] == list(range(len(windows)))
+
+        def est(i, j):
+            return _estimated_rows(
+                stats,
+                min(_to_ns_epoch(s) for s, _ in windows[i:j]),
+                max(_to_ns_epoch(e) for _, e in windows[i:j]),
+            )
+
+        for i, j in runs:
+            assert est(i, j) <= 4000
+            if j < len(windows):
+                assert est(i, j + 1) > 4000  # the next chunk would not fit
+        # 750 rows per 30 m chunk: five chunks fit under 4000, six do not
+        assert {j - i for i, j in runs} == {5}
+        assert plan_runs(windows, None) == [(i, i + 1) for i in range(len(windows))]
+
+    def test_in_memory_source_keeps_one_chunk_runs(self, spark, tmp_path):
+        from syncflux_spark.sources.parquet import source_footer_stats
+
+        df = spark.createDataFrame(
+            [(T0_NS + k * SLOT_NS, "h", float(k)) for k in range(120)],
+            "ts_ns long, host string, value double",
+        ).selectExpr("timestamp_micros(ts_ns div 1000) as ts", "*")
+        assert source_footer_stats(df) is None
+        seen_cached = []
+        rep = sync(
+            spark, {"m": df}, str(tmp_path), T0, T0 + timedelta(minutes=20), chunk="5m",
+            fail_injector=lambda *_: seen_cached.append(not _cache_empty(spark)),
+        )
+        assert rep.points == 120 and rep.write_errors == 0
+        assert not any(seen_cached)
+
+    def test_cache_released_after_failed_chunk_and_recovery(self, spark, tmp_path):
+        """A chunk failing inside a run, then sync_dbrp's chunk/10
+        recovery: no run scan stays persisted, and nothing is lost
+        or doubled."""
+        from syncflux_spark.operators.copy import sync_dbrp
+        from syncflux_spark.sources.parquet import load_table
+
+        _write_source(tmp_path / "m.parquet", "series")
+        df = load_table(spark, str(tmp_path), "m")
+        calls = []
+
+        def fail_second(name, s, e):
+            calls.append(s)
+            if len(calls) == 2:
+                raise RuntimeError("injected outage")
+
+        rep = sync_dbrp(
+            spark, {"m": df}, str(tmp_path / "dst"), T0, T0 + timedelta(minutes=30),
+            chunk="5m", rw_max_retries=1, fail_injector=fail_second,
+        )
+        assert _cache_empty(spark)
+        assert rep.write_errors == 0 and rep.points == 8 * 180
+        assert _digest(read_copied(spark, str(tmp_path / "dst"), "m"))[0] == 8 * 180
+
+        class Abort(BaseException):
+            """Escapes the chunk's error accounting, so sync raises."""
+
+        def abort_fourth(name, s, e):
+            calls.append(s)
+            if len(calls) == 4:
+                raise Abort
+
+        calls.clear()
+        with pytest.raises(Abort):
+            sync(spark, {"m": df}, str(tmp_path / "dst2"), T0, T0 + timedelta(minutes=30),
+                 chunk="5m", fail_injector=abort_fourth)
+        assert _cache_empty(spark)

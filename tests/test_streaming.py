@@ -169,3 +169,23 @@ class TestHAMonitor:
         done = m.get_status()
         assert done.cluster_state == ClusterState.OK
         assert done.num_recovers == 1 and done.last_recovery_duration >= 2.0
+
+
+def test_second_run_available_runs_only_its_micro_batches(spark, tmp_path):
+    """The source schema is inferred once per stream instance: a second
+    run_available starts no job from the calling thread (an inference
+    job would run there, in the caller's job group); its micro-batches
+    run in the stream's own group."""
+    src, dst, ckpt = (str(tmp_path / d) for d in ("src", "dst", "ckpt"))
+    _write_src(spark, src, range(5))
+    stream = ReplicationStream(spark, src, dst, ckpt)
+    stream.run_available()
+    _write_src(spark, src, range(5, 9))
+    sc = spark.sparkContext
+    sc.setJobGroup("second-run", "caller")
+    try:
+        assert stream.run_available() == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("second-run") == []
+    assert stream.read_replica().count() == 9
